@@ -58,9 +58,13 @@ object Tables {
     * (epoch nanoseconds) and keeps the PHYSICAL column under `ts_raw`.
     * Range predicates built by [[graft.ops.FlightOps]] target `ts_raw`
     * with literals of the matching type, so they reach the parquet scan
-    * as PushedFilters (row-group min/max pruning) in every fixture
-    * generation — `year(ts)` over the derived timestamp can never do
-    * that. Callers project `ts_raw`/`ts_nanos` away after filtering.
+    * as PushedFilters in every fixture generation — `year(ts)` over the
+    * derived timestamp can never do that. Row-group min/max pruning
+    * follows only where Spark's parquet filter conversion supports the
+    * physical type: the nanos (INT64) and instant forms, not the
+    * TIMESTAMP_NTZ form (TIMESTAMP(MICROS), isAdjustedToUTC=false) the
+    * sf fixtures ship, whose scans read every row group. Callers project
+    * `ts_raw`/`ts_nanos` away after filtering.
     */
   def eventsWithRawTs(s: SparkSession, d: String): DataFrame = {
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")

@@ -4,18 +4,20 @@ import org.apache.spark.sql.{Encoder, Encoders}
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.expressions.Aggregator
 
-/** Bloom bit-array aggregator over 60-bit key hashes — the build side of
+/** Bloom bit-array aggregator over 60-bit key hashes — the filter of
   * the keyed store's per-region row blooms (HBase's HFile `ROW` bloom
   * analog: `HPopulate/src/main/java/org/northeastern/Main.java:54-73`
-  * creates the table whose files would carry them). One partial-combined
-  * aggregate pass builds every region's filter: `reduce` sets k bits per
-  * key (classic Kirsch–Mitzenmacher double hashing off the two halves of
-  * the 60-bit hash), `merge` ORs bit arrays — associative + commutative,
-  * so Spark's map-side partial aggregation applies and the exchange
-  * carries one m-bit array per region, never the keys.
+  * creates the table whose files would carry them). `reduce` sets k bits
+  * per key (classic Kirsch–Mitzenmacher double hashing off the two
+  * halves of the 60-bit hash), `merge` ORs bit arrays — associative +
+  * commutative, so one partial-combined aggregate pass can build a
+  * filter per group. The store itself builds its blooms in the pass that
+  * materializes a region ([[graft.ops.KeyedStore]]) through the same
+  * [[BloomAgg.add]] / [[BloomAgg.toBytes]], so both forms give the same
+  * bytes.
   *
   * The driver-side membership probe ([[BloomAgg.maybeContains]]) shares
-  * [[BloomAgg.bitsOf]] with the executor-side build, so the two can never
+  * [[BloomAgg.bitsOf]] with the build, so the two can never
   * drift. False positives only (a miss is definitive — the property the
   * GET fast path relies on); no deletions (rebuilt per touched region on
   * every merge, alongside the sidecar stats refresh).
@@ -27,9 +29,7 @@ final class BloomAgg(mBits: Int, k: Int)
   def zero: Array[Long] = Array.ofDim[Long](mBits / 64)
 
   def reduce(b: Array[Long], h: Long): Array[Long] = {
-    BloomAgg.bitsOf(h, k, mBits).foreach { bit =>
-      b(bit >> 6) |= 1L << (bit & 63)
-    }
+    BloomAgg.add(b, h, k)
     b
   }
 
@@ -39,11 +39,7 @@ final class BloomAgg(mBits: Int, k: Int)
     a
   }
 
-  def finish(b: Array[Long]): Array[Byte] = {
-    val bb = java.nio.ByteBuffer.allocate(b.length * 8)
-    b.foreach(bb.putLong)
-    bb.array()
-  }
+  def finish(b: Array[Long]): Array[Byte] = BloomAgg.toBytes(b)
 
   def bufferEncoder: Encoder[Array[Long]] = ExpressionEncoder[Array[Long]]()
   def outputEncoder: Encoder[Array[Byte]] = Encoders.BINARY
@@ -60,6 +56,21 @@ object BloomAgg {
     (0 until k).map { i =>
       (((h1 + i * h2) % mBits + mBits) % mBits).toInt
     }
+  }
+
+  /** Set the k bits of hash `h` in a filter held as 64-bit words — the
+    * build step shared by [[BloomAgg.reduce]] and the keyed store's
+    * per-region stats fold. */
+  def add(words: Array[Long], h: Long, k: Int): Unit =
+    bitsOf(h, k, words.length * 64).foreach { bit =>
+      words(bit >> 6) |= 1L << (bit & 63)
+    }
+
+  /** The persisted form of a filter: its words, big-endian. */
+  def toBytes(words: Array[Long]): Array[Byte] = {
+    val bb = java.nio.ByteBuffer.allocate(words.length * 8)
+    words.foreach(bb.putLong)
+    bb.array()
   }
 
   /** Driver-side membership probe against a [[BloomAgg.finish]] byte

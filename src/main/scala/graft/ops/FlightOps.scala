@@ -51,9 +51,14 @@ object FlightOps {
   /** Pushable twin of `year = y`: `year()` over the derived timestamp
     * cannot reach the parquet scan, but a range on the PHYSICAL column
     * (`ts_raw`, whatever representation this fixture generation shipped)
-    * does — row-group min/max statistics then skip every other year's
-    * data, which at 100 TB is the difference between scanning one year
-    * and scanning all of them. Bounds derive from the SESSION timezone
+    * does — it shows in the scan's PushedFilters in every generation.
+    * What actually PRUNES depends on the form: Spark's parquet filter
+    * conversion handles INT64 (the nanos-as-long form) and instant
+    * TIMESTAMP(MICROS), where row-group min/max statistics skip other
+    * years; it has no case for TIMESTAMP(MICROS, isAdjustedToUTC=false),
+    * the form of the sf fixtures, so there the scan still reads every
+    * row group and the range only filters rows after the read. Bounds
+    * derive from the SESSION timezone
     * (the same zone `year(ts)` evaluates in) and are emitted as literals
     * of the matching physical type (epoch-nano long / naive local
     * datetime / instant) so the predicate stays a PushedFilter.
@@ -75,9 +80,22 @@ object FlightOps {
     }
   }
 
+  /** Residues mod 77 of the cancelled- or diverted-analog `k`s: k is
+    * divisible by 7 or by 11 iff `pmod(k, 77)` is one of these. */
+  private val CancelledOrDivertedMod77: Seq[Int] =
+    (0 until 77).filter(r => r % 7 == 0 || r % 11 == 0)
+
+  /** Year filter plus successful-flight filter (not cancelled AND not
+    * diverted). `k` is written ONCE in the predicate: Catalyst inlines
+    * the `get_json_object` alias into every reference, and the filter
+    * does no common-subexpression elimination, so the plain
+    * `k % 7 != 0 AND k % 11 != 0` parsed the JSON twice per row. One
+    * `pmod(k, 77)` set-membership test has the same answer, including
+    * null `k` (the row is dropped).
+    */
   private def successful(spark: SparkSession, df: DataFrame): DataFrame =
     df.filter(tsRawInYear(spark, df, TargetYear) && col("year") === TargetYear &&
-      col("k") % 7 =!= 0 && col("k") % 11 =!= 0)
+      !pmod(col("k"), lit(77)).isin(CancelledOrDivertedMod77: _*))
 
   /** A4 rounding: floor(avg)+1 (exact equivalent of the reference's
     * `Math.round(sum/count + 0.5f)` for finite averages — SURVEY.md §2.4).

@@ -2,7 +2,9 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{IntegerType, LongType, StringType}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.types.{DataType, IntegerType, LongType, StringType}
+import org.apache.spark.unsafe.types.UTF8String
 import java.nio.file.{Files, Path}
 import java.util.concurrent.atomic.AtomicLong
 import scala.jdk.CollectionConverters._
@@ -38,14 +40,15 @@ import scala.jdk.CollectionConverters._
   *    via dynamic partition overwrite — O(changed regions) ≈ O(changed
   *    files) write amplification, never O(table). The merged relation is
   *    localCheckpoint-materialized so the table can be read and
-  *    rewritten in one pass (no staging round trip);
+  *    rewritten in one pass (no staging round trip), and the region
+  *    stats and blooms fold in the job that materializes it;
   *  - MERGEINTO generalizes upsert to a caller-supplied commutative
   *    merge (latest-wins, additive counts) — the micro-batch sink
   *    primitive the streaming stores drive;
   *  - per-region ROW BLOOMS live DATA-SIDE, one file per region under
   *    `_graft_blooms/kr=<id>` — exactly where HBase keeps them (in the
   *    region's HFiles, never in meta). They are WRITTEN by the executor
-  *    task holding the region's fused aggregate row and READ lazily,
+  *    task that materializes the region and READ lazily,
   *    only for the regions a GET's range candidacy selects, so driver
   *    bloom residency is O(probed regions) while the table can grow to
   *    10⁶ regions. A GET for an absent key touches zero partitions (the
@@ -211,16 +214,7 @@ object KeyedStore {
 
   private def dropWithLocation(spark: SparkSession, name: String): Unit = {
     spark.sql(s"DROP TABLE IF EXISTS $name")
-    val loc = new java.io.File(
-      new java.net.URI(spark.conf.get("spark.sql.warehouse.dir")).getPath,
-      name.toLowerCase)
-    if (loc.exists()) {
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles().foreach(rm)
-        f.delete()
-      }
-      rm(loc)
-    }
+    deleteTree(location(spark, name))
     dirCache.remove(sidecar(spark, name).toString)
     writeStageLocks.remove(name.toLowerCase)
   }
@@ -794,57 +788,164 @@ object KeyedStore {
                         kr: Int): Option[Array[Byte]] =
     loadBloomAt(location(spark, name), kr)
 
-  /** ONE partial-combined aggregate pass over a (kr, key, ...) relation:
-    * per-region (rows, min, max) comes back to the driver — one ~50-byte
-    * row per region, the control plane — while each region's BLOOM BYTES
-    * are written data-side by the executor task that holds the
-    * aggregated row (`_graft_blooms/kr=<id>`, atomic publish). The
-    * driver never materializes a bloom: residency is O(1) filters at
-    * create and O(probed regions) at read, however many regions the
-    * table grows (HBase keeps blooms in HFiles, not in meta, for the
-    * same reason). Executors write through the table's filesystem — the
-    * same shared-FS assumption the parquet write itself makes.
+  private def bloomStagePrefix(name: String): String =
+    name.toLowerCase + ".bloom-stage-"
+
+  private def deleteTree(p: Path): Unit =
+    if (Files.exists(p)) {
+      if (Files.isDirectory(p))
+        scala.util.Using.resource(Files.list(p))(
+          _.iterator().asScala.toList.foreach(deleteTree))
+      Files.deleteIfExists(p)
+    }
+
+  /** Rewrite regions in one read: materialize `planned` — the rows to
+    * land, `kr` attached, laid out so that every region sits WHOLE in
+    * one partition, sorted by (kr, key) — as a local checkpoint, and
+    * fold each region's stats in the SAME job: the job that caches a
+    * partition also runs [[regionStats]] over it. No second read of the
+    * checkpoint and no aggregate exchange; only the ~50-byte
+    * (kr, rows, min, max) rows reach the driver, while bloom bytes stay
+    * data-side (HBase keeps blooms in HFiles, not in meta, for the same
+    * reason) — driver residency is O(1) filters however many regions
+    * the table grows. Executors write through the table's filesystem,
+    * the same shared-FS assumption the parquet write itself makes.
+    *
+    * Then `land` writes the checkpoint, and only after it the blooms are
+    * published: a bloom counts as fresh only when it is no older than
+    * its region's data directory ([[loadBloomAt]]), so one published
+    * before the data write would read as stale and fail open forever.
+    * Blooms are staged in a directory BESIDE the table location (create
+    * requires an absent location; [[repair]] sweeps a crashed writer's).
+    * A region found in two partitions breaks the layout contract (its
+    * bloom would be torn between two tasks); the call then fails before
+    * anything is written. Returns each landed region's exact stats.
     */
-  private def regionStats(spark: SparkSession, name: String, rel: DataFrame,
-                          key: String, typ: String,
-                          mBits: Int): Map[Int, Region] = {
-    val bd = bloomDir(spark, name)
-    // Legacy layout: the pre-7 store kept ALL blooms in one FILE at this
-    // exact path. Supersede it (its content is rebuilt per-region below).
-    if (Files.exists(bd) && !Files.isDirectory(bd)) Files.delete(bd)
-    Files.createDirectories(bd)
-    val bdStr = bd.toString
-    val bloom = udaf(new graft.functions.BloomAgg(mBits, BloomK),
-      org.apache.spark.sql.Encoders.scalaLong)
-    val agg = rel.select(col("kr"), col(key),
-               TextFns.hash60(col(key).cast("string")).as("__blm_h"))
-      .groupBy(col("kr"))
-      .agg(count(lit(1)).as("n"), min(col(key)).as("lo"),
-           max(col(key)).as("hi"), bloom(col("__blm_h")).as("b"))
-    implicit val enc: org.apache.spark.sql.Encoder[(Int, Long, String, String)] =
-      org.apache.spark.sql.Encoders.product[(Int, Long, String, String)]
-    agg.map { r =>
-        val kr = r.getInt(0)
-        atomicWriteBytes(java.nio.file.Paths.get(bdStr, s"kr=$kr"),
-          r.getAs[Array[Byte]]("b"))
-        (kr, r.getLong(1), encKey(typ, r.get(2)), encKey(typ, r.get(3)))
+  private def rewriteRegions(spark: SparkSession, name: String,
+                             planned: DataFrame, key: String, mBits: Int)
+                            (land: DataFrame => Unit): Map[Int, Region] = {
+    val krOrd = planned.schema.fieldIndex("kr")
+    val keyOrd = planned.schema.fieldIndex(key)
+    val keyType = planned.schema(key).dataType
+    val k = BloomK
+    val (out, rdd) =
+      org.apache.spark.sql.GraftCheckpointBridge.localCheckpointWithRdd(planned)
+    val loc = location(spark, name)
+    val stage = Files.createDirectories(loc.resolveSibling(
+      bloomStagePrefix(name) + java.util.UUID.randomUUID()))
+    val stageStr = stage.toString
+    try {
+      val folded = spark.sparkContext.runJob(rdd,
+        (it: Iterator[InternalRow]) =>
+          regionStats(it, krOrd, keyOrd, keyType, mBits, k, stageStr)).flatten
+      val stats = folded.iterator.map(r => r.kr -> r).toMap
+      if (stats.size != folded.length)
+        throw new IllegalStateException(
+          s"KeyedStore: a region of $name spans several partitions; " +
+            "its stats and bloom cannot be folded in one pass")
+      land(out)
+      val bd = loc.resolve("_graft_blooms")
+      // Legacy layout: the pre-7 store kept ALL blooms in one FILE at
+      // this exact path. Supersede it (a region not rewritten yet has no
+      // bloom file → fail open).
+      if (Files.exists(bd) && !Files.isDirectory(bd)) Files.delete(bd)
+      Files.createDirectories(bd)
+      stats.keys.foreach { kr =>
+        // Stamp no older than the region's data directory, then move
+        // over the region's bloom file (two file ops per region).
+        val staged = stage.resolve(s"kr=$kr")
+        val dataDir = loc.resolve(s"kr=$kr")
+        val now = java.nio.file.attribute.FileTime.from(java.time.Instant.now())
+        val dataTime =
+          if (Files.exists(dataDir)) Files.getLastModifiedTime(dataDir) else now
+        Files.setLastModifiedTime(staged,
+          if (dataTime.compareTo(now) > 0) dataTime else now)
+        Files.move(staged, bd.resolve(s"kr=$kr"),
+          java.nio.file.StandardCopyOption.ATOMIC_MOVE,
+          java.nio.file.StandardCopyOption.REPLACE_EXISTING)
       }
-      .collect()
-      .map { case (kr, n, lo, hi) =>
-        kr -> Region(kr, n, decKey(typ, lo), decKey(typ, hi))
-      }.toMap
+      stats
+    } finally deleteTree(stage)
   }
 
-  /** Driver-side key hash, identical to the executor-side
-    * `TextFns.hash60(cast(key as string))` (md5 → first 15 hex chars →
-    * base-16 long), so the probe and the build can never drift.
+  /** Executor-side stats fold over ONE partition of whole regions,
+    * contiguous per `kr` (the (kr, key) sort guarantees it): per region
+    * the row count, min and max key (nulls count as rows but bound
+    * nothing, as `count`/`min`/`max` treat them) and the bloom over
+    * [[hash60]] of every key, written into `stage` as `kr=<id>`
+    * (atomic publish). Returns one [[Region]] per region seen.
     */
+  private def regionStats(rows: Iterator[InternalRow], krOrd: Int,
+                          keyOrd: Int, keyType: DataType, mBits: Int,
+                          k: Int, stage: String): Array[Region] = {
+    val md = java.security.MessageDigest.getInstance("MD5")
+    val isString = keyType == StringType
+    val out = scala.collection.mutable.ArrayBuffer.empty[Region]
+    var words: Array[Long] = null
+    var kr = 0
+    var n = 0L
+    var seen = false
+    var loL, hiL = 0L
+    var loS, hiS: UTF8String = null
+    def flush(): Unit = if (words != null) {
+      atomicWriteBytes(java.nio.file.Paths.get(stage, s"kr=$kr"),
+        graft.functions.BloomAgg.toBytes(words))
+      val (lo, hi) =
+        if (!seen) (null, null)
+        else if (isString) (loS.toString, hiS.toString)
+        else (Long.box(loL), Long.box(hiL))
+      out += Region(kr, n, lo, hi)
+    }
+    while (rows.hasNext) {
+      val r = rows.next()
+      val rkr = r.getInt(krOrd)
+      if (words == null || rkr != kr) {
+        flush()
+        words = new Array[Long](mBits / 64)
+        kr = rkr; n = 0L; seen = false
+      }
+      n += 1
+      if (!r.isNullAt(keyOrd)) {
+        val bytes =
+          if (isString) {
+            val v = r.getUTF8String(keyOrd)
+            if (!seen || v.compareTo(loS) < 0) loS = v.clone()
+            if (!seen || v.compareTo(hiS) > 0) hiS = v.clone()
+            v.getBytes
+          } else {
+            val v = if (keyType == IntegerType) r.getInt(keyOrd).toLong
+                    else r.getLong(keyOrd)
+            if (!seen || v < loL) loL = v
+            if (!seen || v > hiL) hiL = v
+            java.lang.Long.toString(v).getBytes("UTF-8")
+          }
+        seen = true
+        graft.functions.BloomAgg.add(words, hash60(md, bytes), k)
+      }
+    }
+    flush()
+    out.toArray
+  }
+
+  /** The store's 60-bit key hash over the UTF-8 bytes of the key's
+    * string form: md5 → first 15 hex digits as a base-16 long, i.e.
+    * `TextFns.hash60(cast(key as string))` — the persisted bloom hash.
+    * Build ([[regionStats]]) and probe ([[driverHash60]]) both call it,
+    * so they can never drift.
+    */
+  private[graft] def hash60(md: java.security.MessageDigest,
+                            utf8: Array[Byte]): Long = {
+    md.reset()
+    java.nio.ByteBuffer.wrap(md.digest(utf8)).getLong >>> 4
+  }
+
+  /** Driver-side key hash: [[hash60]] of the key's string form. */
   private[graft] def driverHash60(typ: String, v: Any): Long = {
     val s = typ match {
       case "long" => v.asInstanceOf[Number].longValue().toString
       case _ => v.toString
     }
-    java.lang.Long.parseLong(TextFns.md5Hex(s).substring(0, 15), 16)
+    hash60(java.security.MessageDigest.getInstance("MD5"), s.getBytes("UTF-8"))
   }
 
   private def encKey(typ: String, v: Any): String = typ match {
@@ -1197,23 +1298,43 @@ object KeyedStore {
     // With a transform ([[rebalance]] on stores carrying DERIVED
     // per-region columns), pin the kr assignment first: the transform
     // shuffles (per-kr window), and spark_partition_id must not be
-    // re-evaluated on the far side of that exchange.
+    // re-evaluated on the far side of that exchange. The transform may
+    // lay regions out however it likes; the exchange on kr puts each
+    // back WHOLE in one partition for the stats fold.
     val withKr = regionTransform
-      .map(t => t(withKr0.localCheckpoint())).getOrElse(withKr0)
-    withKr
-      .sortWithinPartitions(col("kr"), col(key))
-      .write.mode("overwrite").format("parquet").partitionBy("kr")
-      .saveAsTable(name)
+      .map(t => t(withKr0.localCheckpoint()).repartition(nRegions, col("kr")))
+      .getOrElse(withKr0)
     // Region directory + row blooms (~10 bits/key at the region target)
-    // from the written data: ONE fused aggregate pass over (kr, key);
-    // bloom bytes land data-side from the executors, never on the driver.
+    // fold in the pass that materializes the regions (one region per
+    // range partition); bloom bytes land data-side from the executors,
+    // never on the driver, and publish after the data.
     val mBits = graft.functions.BloomAgg.sizeFor(targetRowsPerRegion)
-    Files.createDirectories(bloomDir(spark, name))
-    atomicWrite(bloomDir(spark, name).resolve("_meta"), s"$mBits,$BloomK")
-    val stats = regionStats(spark, name, spark.table(name), key, typ, mBits)
+    val stats = rewriteRegions(spark, name,
+        withKr.sortWithinPartitions(col("kr"), col(key)), key, mBits) { out =>
+      out.write.mode("overwrite").format("parquet").partitionBy("kr")
+        .saveAsTable(name)
+      Files.createDirectories(bloomDir(spark, name))
+      atomicWrite(bloomDir(spark, name).resolve("_meta"), s"$mBits,$BloomK")
+    }
     writeRegions(spark, name,
       RegionMap(typ, stats.values.toIndexedSeq.sortBy(_.kr)),
       targetRowsPerRegion, key)
+  }
+
+  /** Regions a key DataFrame touches: each key's coverage region (the
+    * codegen'd binary search, [[RegionMap.krCol]]), deduplicated per
+    * partition in ONE job — only O(partitions × touched regions) ids
+    * reach the driver, with no aggregate exchange — then closed over
+    * boundary-straddling neighbors ([[RegionMap.expandTouched]]).
+    */
+  private def touchedBy(rm: RegionMap, keys: DataFrame,
+                        key: String): Seq[Int] = {
+    val int = org.apache.spark.sql.Encoders.scalaInt
+    val coverage = keys.select(rm.krCol(col(key))).as(int)
+      .mapPartitions(_.toSet.iterator)(int)
+      .collect().toSet
+    val krToIdx = rm.regions.zipWithIndex.map { case (r, i) => r.kr -> i }.toMap
+    rm.expandTouched(coverage.map(krToIdx)).map(rm.regions(_).kr)
   }
 
   /** Batch point-GET: driver-side region resolution (binary search over
@@ -1260,11 +1381,7 @@ object KeyedStore {
       s"getBatch keys must carry the key column '$key'")
     val rm = readRegions(spark, name)
     val wanted = keys.select(col(key)).distinct()
-    // Coverage kr per key; straddling keys expand like upsert's closure.
-    val coverage = wanted.select(rm.krCol(col(key)).as("kr")).distinct()
-      .collect().map(_.getInt(0)).toSet
-    val krToIdx = rm.regions.zipWithIndex.map { case (r, i) => r.kr -> i }.toMap
-    val krs = rm.expandTouched(coverage.map(krToIdx)).map(rm.regions(_).kr)
+    val krs = touchedBy(rm, keys, key)
     spark.table(name)
       .filter(col("kr").isin(krs: _*))
       .join(wanted, Seq(key), "left_semi")
@@ -1318,12 +1435,12 @@ object KeyedStore {
     * semantics) into the table, rewriting only the regions that contain
     * changed keys; returns the post-merge table. Base rows keep their
     * resident region (no accidental row movement); changed rows land in
-    * their coverage region. The merged relation is materialized with
-    * localCheckpoint so the touched partitions are read and overwritten
-    * in ONE pass — no staging copy (at multi-executor scale, substitute
-    * a reliable checkpoint dir for the same break-the-cycle effect).
-    * Writers serialize per REGION ([[withRegionLocks]]); disjoint
-    * writers run concurrently.
+    * their coverage region. Jobs per call: the touched set (one job over
+    * the change set), the merge's exchange on `kr`, one pass that
+    * materializes the merged regions and folds their stats and blooms,
+    * and the write ([[writeTouched]]) — the touched regions are read
+    * once and each is written once, as one file. Writers serialize per
+    * REGION ([[withRegionLocks]]); disjoint writers run concurrently.
     *
     * The RETURNED relation (here and in [[mergeInto]]) is a raw
     * full-table read taken after this writer's locks are released:
@@ -1349,15 +1466,9 @@ object KeyedStore {
       : DataFrame = {
     require(!changes.columns.contains("kr"),
       "KeyedStore payloads must not contain a column named 'kr'")
-    // Coverage region per change row — codegen'd binary search; only the
-    // O(touched regions) distinct ids reach the driver. Runs UNLOCKED
-    // (withRegionLocks revalidates against the boundary signature).
-    def touchedOf(rm: RegionMap): Seq[Int] = {
-      val coverage = changes.select(rm.krCol(col(key)).as("kr")).distinct()
-        .collect().map(_.getInt(0)).toSet
-      val krToIdx = rm.regions.zipWithIndex.map { case (r, i) => r.kr -> i }.toMap
-      rm.expandTouched(coverage.map(krToIdx)).map(rm.regions(_).kr)
-    }
+    // The touched set runs UNLOCKED (withRegionLocks revalidates it
+    // against the boundary signature).
+    def touchedOf(rm: RegionMap): Seq[Int] = touchedBy(rm, changes, key)
     val rm0 = readRegions(spark, name)
     withRegionLocks(spark, name, rm0, touchedOf(rm0), touchedOf) {
       (rm, target, touchedKr) =>
@@ -1390,12 +1501,7 @@ object KeyedStore {
                 merge: (DataFrame, DataFrame) => DataFrame): DataFrame = {
     require(!batch.columns.contains("kr"),
       "KeyedStore payloads must not contain a column named 'kr'")
-    def touchedOf(rm: RegionMap): Seq[Int] = {
-      val coverage = batch.select(rm.krCol(col(key)).as("kr")).distinct()
-        .collect().map(_.getInt(0)).toSet
-      val krToIdx = rm.regions.zipWithIndex.map { case (r, i) => r.kr -> i }.toMap
-      rm.expandTouched(coverage.map(krToIdx)).map(rm.regions(_).kr)
-    }
+    def touchedOf(rm: RegionMap): Seq[Int] = touchedBy(rm, batch, key)
     val rm0 = readRegions(spark, name)
     withRegionLocks(spark, name, rm0, touchedOf(rm0), touchedOf) {
       (rm, target, touchedKr) =>
@@ -1482,33 +1588,40 @@ object KeyedStore {
     }
   }
 
-  /** Shared write path of [[upsert]]/[[mergeInto]]: land `merged` (the
-    * post-merge rows of the touched regions, `kr` attached) via dynamic
-    * partition overwrite, drop partitions the merge emptied (dynamic
-    * overwrite only rewrites partitions PRESENT in the output — an
-    * all-keys-deleted region would otherwise keep its stale files), and
-    * refresh the region sidecar's (rows, min, max) for the touched
-    * entries so later GET/scan pruning sees keys that moved past the old
-    * recorded bounds. The merged relation is localCheckpoint-materialized
-    * so the table is read and rewritten in ONE pass (no staging copy; at
-    * multi-executor scale, substitute a reliable checkpoint dir).
+  /** Shared commit path of [[upsert]]/[[mergeInto]] (and so of every
+    * streaming sink that lands through them). `merged` holds the
+    * post-merge rows of the touched regions, `kr` attached. Passes:
+    *
+    *  1. one exact exchange on `kr` puts each touched region WHOLE in
+    *     one task, sorted by (kr, key);
+    *  2. ONE job materializes that as a local checkpoint and, in the
+    *     same pass, folds each region's (rows, min, max) and bloom
+    *     ([[rewriteRegions]]) — the touched regions are read once;
+    *  3. the checkpoint lands via dynamic partition overwrite, one file
+    *     per region — each region is written once. The checkpoint breaks
+    *     the read/overwrite cycle without a staging copy (at
+    *     multi-executor scale, substitute a reliable checkpoint dir);
+    *  4. driver-side file ops only: publish the staged blooms, drop
+    *     partitions the merge emptied (dynamic overwrite only rewrites
+    *     partitions PRESENT in the output — an all-keys-deleted region
+    *     would otherwise keep its stale files), and refresh the touched
+    *     sidecar entries so later GET/scan pruning sees keys that moved
+    *     past the old recorded bounds.
     */
   private def writeTouched(spark: SparkSession, name: String, key: String,
                            rm: RegionMap, touchedKr: Seq[Int],
                            merged: DataFrame, target: Long): Unit = {
     val cols = spark.table(name).columns.toIndexedSeq
-    val out = merged
-      .repartitionByRange(math.max(1, touchedKr.size), col("kr"), col(key))
+    // Exact exchange on kr: each touched region lands WHOLE in one task
+    // (one file per region, and the stats fold below sees all of it).
+    // A range exchange would sample — re-running the base scan and the
+    // merge — and split regions across tasks.
+    val planned = merged
+      .repartition(math.max(1, touchedKr.size), col("kr"))
       .sortWithinPartitions(col("kr"), col(key))
       .select(cols.map(col): _*) // insertInto is positional
-      .localCheckpoint()
-    dynamicOverwriteInto(spark, name, out)
-    // Post-merge stats per touched region in ONE fused aggregate — off
-    // the already-materialized checkpoint blocks, O(touched) not
-    // O(table) — with each rebuilt bloom written data-side by the task
-    // that holds it.
-    val mBits = readBloomBits(spark, name, target)
-    val stats = regionStats(spark, name, out, key, rm.typ, mBits)
+    val stats = rewriteRegions(spark, name, planned, key,
+      readBloomBits(spark, name, target))(dynamicOverwriteInto(spark, name, _))
     val touched = touchedKr.toSet
     touchedKr.filterNot(stats.contains).foreach { krv =>
       spark.sql(s"ALTER TABLE $name DROP IF EXISTS PARTITION (kr=$krv)")
@@ -1576,14 +1689,14 @@ object KeyedStore {
       val k = math.max(2L, (r.rows + target - 1) / target).toInt
       val firstKr = nextKr
       nextKr += k
-      val out = spark.table(name).filter(col("kr") === r.kr).drop("kr")
+      // One sub-region per range partition: the fused stats fold applies.
+      val planned = spark.table(name).filter(col("kr") === r.kr).drop("kr")
         .repartitionByRange(k, col(key))
         .withColumn("kr", spark_partition_id() + lit(firstKr))
         .sortWithinPartitions(col("kr"), col(key))
         .select(cols.map(col): _*)
-        .localCheckpoint()
-      dynamicOverwriteInto(spark, name, out)
-      val stats = regionStats(spark, name, out, key, rm0.typ, mBits)
+      val stats = rewriteRegions(spark, name, planned, key, mBits)(
+        dynamicOverwriteInto(spark, name, _))
       regions = regions.filterNot(_.kr == r.kr) ++ stats.values
       // Directory first (covers the new partitions), THEN drop the old:
       // the crash-safe order — get/scan never point at dropped data.
@@ -1659,14 +1772,12 @@ object KeyedStore {
       val remapped = spark.table(name)
         .filter(col("kr").isin(mapping.keys.toSeq: _*))
         .withColumn("kr", element_at(mapCol, col("kr")))
-      val out = regionTransform.map(_(remapped)).getOrElse(remapped)
-        .repartitionByRange(math.max(1, mapping.values.toSet.size),
-                            col("kr"), col(key))
+      val planned = regionTransform.map(_(remapped)).getOrElse(remapped)
+        .repartition(math.max(1, mapping.values.toSet.size), col("kr"))
         .sortWithinPartitions(col("kr"), col(key))
         .select(cols.map(col): _*)
-        .localCheckpoint()
-      dynamicOverwriteInto(spark, name, out)
-      stats = regionStats(spark, name, out, key, rm.typ, mBits)
+      stats = rewriteRegions(spark, name, planned, key, mBits)(
+        dynamicOverwriteInto(spark, name, _))
     }
     val gone = mergeBins.flatten.map(_.kr).toSet
     val survivors = rm.regions.filterNot(r => gone.contains(r.kr)) ++
@@ -1713,6 +1824,15 @@ object KeyedStore {
             if (fn.startsWith("kr=") && !listed(fn.stripPrefix("kr=").toInt))
               Files.deleteIfExists(f)
           }
+        }
+      // Bloom staging left by a writer that crashed before publishing
+      // (live writers are drained: this runs under the structural lock).
+      val parent = location(spark, name).getParent
+      if (Files.exists(parent))
+        scala.util.Using.resource(Files.list(parent)) { s =>
+          s.iterator().asScala.toList
+            .filter(_.getFileName.toString.startsWith(bloomStagePrefix(name)))
+            .foreach(deleteTree)
         }
       // Directory-chunk GC: superseded chunk files whose immediate
       // delete a crashed writer missed (crash between the list publish

@@ -899,7 +899,13 @@ class KeyedStoreSpec extends AnyFunSuite {
       .write.mode("append").format("parquet").insertInto(name)
     assert(spark.sql(s"SHOW PARTITIONS $name").collect()
       .exists(_.getString(0) == "kr=999"))
+    // ...and a commit that crashed before publishing its staged blooms.
+    val stage = KeyedStore.location(spark, name)
+      .resolveSibling(name + ".bloom-stage-crashed")
+    java.nio.file.Files.createDirectories(stage)
+    java.nio.file.Files.write(stage.resolve("kr=0"), Array[Byte](1, 2, 3))
     assert(KeyedStore.repair(spark, name) == 1)
+    assert(!java.nio.file.Files.exists(stage))
     assert(!spark.sql(s"SHOW PARTITIONS $name").collect()
       .exists(_.getString(0) == "kr=999"))
     assert(spark.table(name).count() == 64)
@@ -1234,4 +1240,116 @@ class KeyedStoreSpec extends AnyFunSuite {
     assert(spark.table(name).count() == 50)
     assert(!java.nio.file.Files.exists(loc.resolve("stale-file")))
   }
+
+  /** Region directories (`kr=<id>`) whose parquet files changed. */
+  private def changedRegions(before: Map[String, String],
+                             after: Map[String, String]): Set[String] =
+    (before.keySet ++ after.keySet)
+      .filter(p => before.get(p) != after.get(p)).map(_.split("/")(0))
+
+  /** The commit contract after a write that touched `dirs`: each touched
+    * region directory holds exactly ONE key-sorted parquet file, every
+    * sidecar entry's (rows, min, max) equals a fresh aggregate over the
+    * table, and each touched region's bloom bytes equal a fresh
+    * `BloomAgg` build over the table's keys. */
+  private def assertCommitExact(name: String, dirs: Set[String]): Unit = {
+    import scala.jdk.CollectionConverters._
+    val root = KeyedStore.location(spark, name)
+    dirs.filter(d => java.nio.file.Files.exists(root.resolve(d))).foreach { d =>
+      val files = scala.util.Using.resource(java.nio.file.Files.list(root.resolve(d)))(
+        _.iterator().asScala.filter(_.toString.endsWith(".parquet")).toList)
+      assert(files.size == 1, s"$d holds ${files.size} parquet files")
+      val keys = spark.read.parquet(files.head.toString)
+        .collect().map(_.getAs[Long]("k")).toSeq
+      assert(keys == keys.sorted, s"$d is not key-sorted")
+    }
+    val fresh = spark.table(name).groupBy(col("kr"))
+      .agg(count(lit(1)).as("n"), min(col("k")).as("lo"), max(col("k")).as("hi"))
+      .collect().map(r => r.getInt(0) -> ((r.getLong(1), r.getLong(2), r.getLong(3))))
+      .toMap
+    val rm = KeyedStore.readRegions(spark, name)
+    val recorded = rm.regions.filter(_.rows > 0).map(r =>
+      r.kr -> ((r.rows, r.min.asInstanceOf[Long], r.max.asInstanceOf[Long]))).toMap
+    assert(recorded == fresh)
+    val bd = root.resolve("_graft_blooms")
+    val mBits = new String(java.nio.file.Files.readAllBytes(bd.resolve("_meta")), "UTF-8")
+      .split(",")(0).toInt
+    val bloom = udaf(new graft.functions.BloomAgg(mBits, KeyedStore.BloomK),
+      org.apache.spark.sql.Encoders.scalaLong)
+    val freshBlooms = spark.table(name)
+      .groupBy(col("kr"))
+      .agg(bloom(ops.TextFns.hash60(col("k").cast("string"))).as("b"))
+      .collect().map(r => r.getInt(0) -> r.getAs[Array[Byte]]("b")).toMap
+    dirs.map(_.stripPrefix("kr=").toInt).filter(freshBlooms.contains).foreach { kr =>
+      val onDisk = java.nio.file.Files.readAllBytes(bd.resolve(s"kr=$kr"))
+      assert(java.util.Arrays.equals(onDisk, freshBlooms(kr)),
+        s"bloom of region $kr differs from a fresh build")
+    }
+  }
+
+  test("commit: one key-sorted file per touched region; fused stats and " +
+       "blooms equal a fresh recomputation") {
+    import spark.implicits._
+    import org.apache.spark.sql.DataFrame
+    val name = "graft_keyed_spec_fused"
+    val rows = (0L until 400L).map(i => (i * 2, 10L, s"a$i")).toDF("k", "ts", "v")
+    KeyedStore.create(spark, name, rows, "k", targetRowsPerRegion = 32)
+    assertCommitExact(name, digests(name).keySet.map(_.split("/")(0)))
+    // Upsert across several regions: updates, deletes, inserts between
+    // resident keys and past both ends of the key range.
+    val before = digests(name)
+    val changes = Seq(
+      (10L, "U", 20L, "u10"), (12L, "D", 0L, "x"), (301L, "I", 20L, "i301"),
+      (402L, "U", 20L, "u402"), (555L, "I", 20L, "i555"), (640L, "D", 0L, "x"),
+      (-7L, "I", 20L, "low"), (5000L, "I", 20L, "high"))
+      .toDF("k", "op", "ts", "v")
+    KeyedStore.upsert(spark, name, "k", changes)
+    val upserted = changedRegions(before, digests(name))
+    assert(upserted.size >= 4, s"want several touched regions, got $upserted")
+    assertCommitExact(name, upserted)
+    // mergeInto across several regions under a caller-supplied merge.
+    def latest(a: DataFrame, b: DataFrame): DataFrame =
+      a.unionByName(b).groupBy(col("k"))
+        .agg(max(struct(col("ts"), col("v"))).as("s"))
+        .select(col("k"), col("s.ts").as("ts"), col("s.v").as("v"))
+    val before2 = digests(name)
+    KeyedStore.mergeInto(spark, name, "k",
+      Seq((100L, 30L, "m100"), (333L, 30L, "m333"), (700L, 30L, "m700"),
+          (790L, 1L, "stale")).toDF("k", "ts", "v"), latest)
+    val merged = changedRegions(before2, digests(name))
+    assert(merged.size >= 3, s"want several touched regions, got $merged")
+    assertCommitExact(name, merged)
+    assert(KeyedStore.get(spark, name, "k", Seq(333L, 790L, 5000L))
+      .collect().map(r => r.getLong(0) -> r.getString(2)).toMap ==
+      Map(333L -> "m333", 790L -> "a395", 5000L -> "high"))
+  }
+
+  /** Jobs `body` runs, counted under a test-owned job group. */
+  private def jobsOf(body: => Unit): Int = {
+    val group = "keyed-spec-jobs-" + java.util.UUID.randomUUID()
+    spark.sparkContext.setJobGroup(group, "job budget", interruptOnCancel = false)
+    try body finally spark.sparkContext.clearJobGroup()
+    spark.sparkContext.statusTracker.getJobIdsForGroup(group).length
+  }
+
+  test("commit job budget: an all-region and a 1-region upsert") {
+    import spark.implicits._
+    val name = "graft_keyed_spec_jobs"
+    KeyedStore.create(spark, name, mkRows(200), "k", targetRowsPerRegion = 16)
+    val rm = KeyedStore.readRegions(spark, name)
+    assert(rm.regions.size >= 10)
+    // One updated key per region: the commit touches every region.
+    val all = rm.regions.map(r => (r.min.asInstanceOf[Long], "U", "w")).toDF("k", "op", "v")
+    val one = Seq((5L, "U", "w5")).toDF("k", "op", "v")
+    // Pinned: coverage (2: exchange + collect), the exchange's map stage,
+    // the fold that materializes the regions, and the write. A sampled
+    // range exchange or a separate stats pass adds jobs and fails here.
+    assert(jobsOf(KeyedStore.upsert(spark, name, "k", all)) == AllRegionUpsertJobs)
+    assert(jobsOf(KeyedStore.upsert(spark, name, "k", one)) == OneRegionUpsertJobs)
+    assert(KeyedStore.get(spark, name, "k", Seq(5L, rm.regions.last.min))
+      .collect().map(_.getString(1)).toSet == Set("w5", "w"))
+  }
+
+  private val AllRegionUpsertJobs = 5
+  private val OneRegionUpsertJobs = 5
 }

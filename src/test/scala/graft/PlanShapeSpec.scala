@@ -37,13 +37,31 @@ class PlanShapeSpec extends AnyFunSuite {
   }
 
   test("flagship year filter pushes a raw ts range into the parquet scan") {
-    // year(derived ts) is not pushable; the raw epoch-nano range twin must
-    // appear as PushedFilters so row-group min/max stats prune other years.
+    // year(derived ts) is not pushable; the raw ts range twin must appear
+    // as PushedFilters. Row groups of other years are skipped only where
+    // Spark converts the filter for the physical type (INT64 nanos,
+    // instant micros) — not for the TIMESTAMP_NTZ micros form the sf
+    // fixtures ship, which still reads every row group.
     Seq(ops.FlightOps.qFlightReport(spark, Sf),
         ops.FlightOps.qFilterYear(spark, Sf)).foreach { df =>
       val p = physical(df)
       assert(p.contains("GreaterThanOrEqual(ts,") && p.contains("LessThan(ts,"),
         p.take(3000))
+    }
+  }
+
+  test("the successful-flight filter parses the props JSON once per row") {
+    // Each reference to the `k` alias is inlined into the filter, and a
+    // filter does no common-subexpression elimination: one reference
+    // means one get_json_object evaluated per row.
+    Seq(ops.FlightOps.qFlightReport(spark, Sf),
+        ops.FlightOps.qSecondary(spark, Sf)).foreach { df =>
+      val n = df.queryExecution.optimizedPlan.collect { case p =>
+        p.expressions.map(_.collect {
+          case e: org.apache.spark.sql.catalyst.expressions.GetJsonObject => e
+        }.size).sum
+      }.sum
+      assert(n == 1, df.queryExecution.optimizedPlan.toString.take(3000))
     }
   }
 
