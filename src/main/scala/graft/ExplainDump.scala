@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** Dev tool: dump `explain(formatted)` for representative queries into
@@ -9,16 +8,7 @@ import java.nio.file.{Files, Paths}
   */
 object ExplainDump {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.plans.GraftExtensions)
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(8)
     val dir = "/root/testdata/sf0.001"
     val picks = Seq(
       "q_flight_report" -> "Flagship reproduction: filter → two-level agg → pivot → format",

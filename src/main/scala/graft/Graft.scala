@@ -6,8 +6,9 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
   * directly, decoupled from the driver's fixture contract. All functions
   * take DataFrames with documented column expectations and return
   * deterministic, sorted results. Install [[plans.GraftExtensions]] on the
-  * session (`SparkSession.builder.withExtensions(new GraftExtensions)`) to
-  * enable the native cosine_dot fusion and the graft_topk operator.
+  * session ([[GraftSession.local]] does, or `withExtensions(new
+  * GraftExtensions)` on your own builder) to enable the native
+  * cosine_dot fusion and the graft_topk operator.
   *
   * Corpus DataFrames: `doc_id: LONG`, `lang: STRING` (block key),
   * `text: STRING`. Embedding DataFrames: `vec_id: LONG`,

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
 import java.util.concurrent.ConcurrentLinkedQueue
 import scala.jdk.CollectionConverters._
 
@@ -12,7 +11,8 @@ import scala.jdk.CollectionConverters._
   * contention pathology (VERDICT r17 next-round #2).
   *
   * Env: PROBE_ONLY=q_a,q_b (required), SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS
-  * (default 32), PROBE_SHUFFLE (default = cpus), PROBE_REPS (default 2).
+  * (default 32; shuffle partitions follow it, as in Bench), PROBE_REPS
+  * (default 2).
   */
 object Probe32 {
   private case class JobRec(id: Int, wallMs: Long, stages: Int, tasks: Int,
@@ -50,20 +50,10 @@ object Probe32 {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val shuffle = sys.env.getOrElse("PROBE_SHUFFLE", cpus)
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     val reps = sys.env.getOrElse("PROBE_REPS", "2").toInt
     val names = sys.env("PROBE_ONLY").split(",").toSeq
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.plans.GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shuffle)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(cpus)
     spark.range(1000000).selectExpr("sum(id)").collect()
     val rec = new Rec
     spark.sparkContext.addSparkListener(rec)
@@ -79,7 +69,7 @@ object Probe32 {
         val tasks = js.map(_.tasks).sum
         val taskS = js.map(_.taskMs).sum / 1e3
         val gcS = js.map(_.gcMs).sum / 1e3
-        println(f"PROBE $name%s rep=$rep shuffle=$shuffle cpus=$cpus wall=$wall%.2f jobs=${js.size} jobWall=$jobWall%.2f gapS=${wall - jobWall}%.2f tasks=$tasks taskTimeS=$taskS%.2f gcS=$gcS%.2f")
+        println(f"PROBE $name%s rep=$rep cpus=$cpus wall=$wall%.2f jobs=${js.size} jobWall=$jobWall%.2f gapS=${wall - jobWall}%.2f tasks=$tasks taskTimeS=$taskS%.2f gcS=$gcS%.2f")
         if (sys.env.contains("PROBE_JOBS"))
           js.foreach(j => println(f"  job ${j.id}%4d wall=${j.wallMs / 1e3}%7.3f stages=${j.stages}%3d tasks=${j.tasks}%5d taskS=${j.taskMs / 1e3}%7.2f gc=${j.gcMs / 1e3}%6.2f ${j.desc.take(80)}"))
         GraftCache.releaseAllStorage(spark)

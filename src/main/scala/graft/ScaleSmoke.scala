@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Dev tool: weak-scaling smoke for the heavy operator families.
@@ -23,16 +23,7 @@ object ScaleSmoke {
       onlyOps.forall(_.exists(name.contains))
     val base = "/root/testdata/sf0.1"
     val scaled = s"${System.getProperty("java.io.tmpdir")}/graft_scale_${factor}x"
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.plans.GraftExtensions)
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(32)
     spark.range(1000000).selectExpr("sum(id)").collect()
 
     val docs = Tables.documents(spark, base)

@@ -1026,7 +1026,7 @@ object DedupOps {
       return docs.select(col("doc_id"),
         size(TextFns.toks).cast("long").as("n_tokens"),
         lit(0L).as("max_dup_tokens"))
-    val SuffixIndex(_, nTok, sa, _, _, _) = idx.get
+    val SuffixIndex(_, nTok, sa, _, _) = idx.get
     val pairs = sa.select(col("doc_id").as("d1"), col("p").as("p1"), col("sp"))
       .join(sa.select(col("doc_id").as("d2"), col("p").as("p2"),
         (col("sp") - 1).as("sp")), Seq("sp"))
@@ -1055,38 +1055,7 @@ object DedupOps {
                                               nTok: DataFrame,
                                               sa: DataFrame,
                                               tables: IndexedSeq[DataFrame],
-                                              rounds: Int,
-                                              radix: Int = 2)
-
-  /** Exact small-base integer power (the descent/doubling span math —
-    * `1L << k` generalized to any radix). */
-  private def ipow(base: Long, exp: Int): Long =
-    (0 until exp).foldLeft(1L)((a, _) => a * base)
-
-  /** Doubling-round radix (round-17 verdict item #4's measured probe):
-    * radix R refines prefix length by ×R per round via R−1 rank
-    * lookups, so rounds drop from ceil(log2 maxTok) to ceil(logR) at
-    * R−1× the per-round lookup joins, and the LCP descent runs R−1
-    * probe-extensions per level (digit decomposition in base R).
-    * Default 2 = the shipped behavior (identical plan shape).
-    * PROBE RESULT (round-18, sf0.1 local[32], paired Probe32 runs,
-    * warm reps): radix=4 IS faster at fixture scale — build 24.5→22.0 s
-    * (sa-rounds 16.3→13.4, jobs 234→181), dedup 19.8→16.9 s — because
-    * the fixture regime is round-BARRIER-bound and radix 4 halves the
-    * barriers. The default stays 2 because the trade reverses in the
-    * production regime: radix 4 ships ~1.5× the lookup-join bytes per
-    * refinement level (3 joins over a less-frozen active set vs 1),
-    * and at 100 TB the rounds are shuffle-byte-bound, not
-    * barrier-bound (guide §1.1 first-principles floor). Referee/spec
-    * status at radix 4: SuffixDedupSpec/SuffixIndexSpec/
-    * SuffixDeleteSpec all output-equal (the one red test pins the
-    * radix-2 "rounds = 7 must fail loudly" contract, not a value).
-    * Fixture-bound deployments can flip the flag; the stored index is
-    * radix-independent (same SA permutation, same LCPs), so mixed
-    * readers/writers are safe.
-    */
-  private def sfxRadix: Int =
-    math.max(2, sys.props.get("graft.sfx.radix").map(_.toInt).getOrElse(2))
+                                              rounds: Int)
 
   private def buildSuffixIndex(docs: DataFrame, rounds: Int,
                                deskewAbove: Long): Option[SuffixIndex] = {
@@ -1098,17 +1067,16 @@ object DedupOps {
     val maxRow = nTok.agg(max(col("n_tokens"))).head()
     if (maxRow.isNullAt(0)) return None
     val maxTok = maxRow.getInt(0)
-    val radix = sfxRadix
     val nRounds =
       if (rounds > 0) {
-        require(maxTok <= ipow(radix, rounds),
-          s"suffixDedupStats: longest doc has $maxTok tokens > $radix^$rounds — raise rounds")
+        require(maxTok <= (1L << rounds),
+          s"suffixDedupStats: longest doc has $maxTok tokens > 2^$rounds — raise rounds")
         rounds
       } else {
-        // AUTO: ceil(log_radix(maxTok)), min 1 — one refinement round
-        // per factor of `radix` of the longest document, never more.
+        // AUTO: ceil(log2(maxTok)), min 1 — one doubling round per
+        // doubling of the longest document, never more.
         var k = 1
-        while (ipow(radix, k) < maxTok) k += 1
+        while ((1L << k) < maxTok) k += 1
         k
       }
     // Round 0 — BUCKET-START token ranks, the Manber–Myers stable rank
@@ -1149,9 +1117,9 @@ object DedupOps {
     val frozen = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     def fullTable(act: DataFrame): DataFrame =
       (frozen :+ act).reduce(_ unionByName _)
-    val tables = scala.collection.mutable.ArrayBuffer(rk0) // tables(k): radix^k tokens
+    val tables = scala.collection.mutable.ArrayBuffer(rk0) // tables(k): 2^k tokens
     for (k <- 0 until nRounds) {
-      val span = ipow(radix, k)
+      val span = 1L << k
       val sizes = active.groupBy(col("r")).agg(count(lit(1)).as("gn"))
         .filter(col("gn") >= 2).select(col("r"))
       // LAZY checkpoint (round-17): the leaf's plan is truncated at
@@ -1163,22 +1131,14 @@ object DedupOps {
       frozen += active.join(sizes, Seq("r"), "left_anti")
         .localCheckpoint(eager = false)
       val act = active.join(sizes, Seq("r"))
-      // radix−1 lookups: rank of the suffix at p + m·span for
-      // m = 1..radix−1 (binary: the single classic doubling lookup).
-      // A missing lookup (suffix ends before the offset) sorts FIRST
-      // (−1): a shorter suffix precedes every extension of itself.
-      val refineKeys = (1 until radix).map(m => s"r${m + 1}")
-      var keyed = act
-      for (m <- 1 until radix) {
-        val kc = s"r${m + 1}"
-        val lookup = fullTable(act)
-          .select(col("doc_id"), (col("p") - m * span).as("p"),
-            col("r").as(kc))
-        keyed = keyed.join(lookup, Seq("doc_id", "p"), "left")
-          .withColumn(kc, coalesce(col(kc), lit(-1L)))
-      }
-      keyed = keyed.select((Seq("doc_id", "p", "r") ++ refineKeys).map(col): _*)
-      val t0dbg = System.nanoTime()
+      // The doubling lookup: rank `r2` of the suffix at p + span. A
+      // missing lookup (suffix ends before the offset) sorts FIRST (−1):
+      // a shorter suffix precedes every extension of itself.
+      val lookup = fullTable(act)
+        .select(col("doc_id"), (col("p") - span).as("p"), col("r").as("r2"))
+      val keyed = act.join(lookup, Seq("doc_id", "p"), "left")
+        .withColumn("r2", coalesce(col("r2"), lit(-1L)))
+        .select(col("doc_id"), col("p"), col("r"), col("r2"))
       // Round boundary: checkpoint WITHOUT inheriting estimated stats.
       // Each round references its input leaf ~6 times multiplicatively
       // (act self-pair via lookup, then the deskew join-back), so an
@@ -1190,19 +1150,11 @@ object DedupOps {
       active = org.apache.spark.sql.GraftCheckpointBridge
         .localCheckpointResetStats(
           (if (deskew)
-            deskewedGroupRank(keyed, refineKeys)
+            deskewedGroupRank(keyed, Seq("r2"))
           else
             keyed.withColumn("nr", col("r") + rank().over(
-              Window.partitionBy(col("r"))
-                .orderBy(refineKeys.map(col): _*)) - 1))
+              Window.partitionBy(col("r")).orderBy(col("r2"))) - 1))
           .select(col("doc_id"), col("p"), col("nr").as("r")))
-      if (sys.env.contains("GRAFT_SUFFIX_DEBUG"))
-        println(f"SUFFIXDBG round=$k deskew=$deskew " +
-          f"ckpt=${(System.nanoTime() - t0dbg) / 1e9}%.1f s " +
-          s"statsDigits=${active.queryExecution.optimizedPlan.stats.sizeInBytes.toString.length} " +
-          s"active=${active.count()} " +
-          s"groupsBefore=${sizes.count()} " +
-          s"groupsAfter=${active.select(col("r")).distinct().count()}")
       tables += fullTable(active)
     }
     // SA positions: bucket-start rank + ordinal within the (fully-equal)
@@ -1219,7 +1171,7 @@ object DedupOps {
             Window.partitionBy(col("r")).orderBy(col("doc_id"), col("p"))) - 1))
       .select(col("doc_id"), col("p"), col("nr").as("sp"))
       .localCheckpoint()
-    Some(SuffixIndex(toks, nTok, sa, tables.toIndexedSeq, nRounds, radix))
+    Some(SuffixIndex(toks, nTok, sa, tables.toIndexedSeq, nRounds))
   }
 
   /** Bucket-start rank WITHIN groups with NO per-group sort — the
@@ -1284,32 +1236,22 @@ object DedupOps {
     val tables = idx.tables
     var pairs = pairs0
     for (ki <- (tables.size - 1) to 0 by -1) {
-      val span = if (ki == tables.size - 1) ipow(idx.radix, idx.rounds)
-                 else ipow(idx.radix, ki)
-      // Base-radix digit decomposition: the LCP's digit at this level is
-      // 0..radix−1, so probe-extend up to radix−1 times (each extension
-      // re-probes at the NEW l). The converged top table needs only ONE
-      // extension — equal top ranks mean equal to the suffix ends and
-      // the remaining-length clamp finishes the job. radix = 2 reduces
-      // to the classic single extension per level.
-      val exts = if (ki == tables.size - 1) 1 else idx.radix - 1
-      for (e <- 1 to exts) {
-        val sfx = s"_${ki}_$e"
-        pairs = pairs
-          .withColumn("pa" + sfx, col("p1") + col("l"))
-          .join(tables(ki).select(col("doc_id").as("d1"),
-            col("p").as("pa" + sfx), col("r").as("ra" + sfx)),
-            Seq("d1", "pa" + sfx), "left")
-          .withColumn("pb" + sfx, col("p2") + col("l"))
-          .join(tables(ki).select(col("doc_id").as("d2"),
-            col("p").as("pb" + sfx), col("r").as("rb" + sfx)),
-            Seq("d2", "pb" + sfx), "left")
-          .withColumn("l", when(col("ra" + sfx).isNotNull &&
-            col("rb" + sfx).isNotNull &&
-            col("ra" + sfx) === col("rb" + sfx),
-            col("l") + span).otherwise(col("l")))
-          .select(col("d1"), col("p1"), col("d2"), col("p2"), col("l"))
-      }
+      val span = 1L << (if (ki == tables.size - 1) idx.rounds else ki)
+      val sfx = s"_$ki"
+      pairs = pairs
+        .withColumn("pa" + sfx, col("p1") + col("l"))
+        .join(tables(ki).select(col("doc_id").as("d1"),
+          col("p").as("pa" + sfx), col("r").as("ra" + sfx)),
+          Seq("d1", "pa" + sfx), "left")
+        .withColumn("pb" + sfx, col("p2") + col("l"))
+        .join(tables(ki).select(col("doc_id").as("d2"),
+          col("p").as("pb" + sfx), col("r").as("rb" + sfx)),
+          Seq("d2", "pb" + sfx), "left")
+        .withColumn("l", when(col("ra" + sfx).isNotNull &&
+          col("rb" + sfx).isNotNull &&
+          col("ra" + sfx) === col("rb" + sfx),
+          col("l") + span).otherwise(col("l")))
+        .select(col("d1"), col("p1"), col("d2"), col("p2"), col("l"))
     }
     pairs
   }
@@ -1570,28 +1512,18 @@ object DedupOps {
   def suffixIndexBuild(docs: DataFrame, name: String,
                        targetRows: Long = 65536): DataFrame = {
     val spark = docs.sparkSession
-    val dbg = sys.env.contains("GRAFT_SUFFIX_DEBUG")
-    var tDbg = System.nanoTime()
-    def lap(phase: String): Unit = if (dbg) {
-      println(f"SUFFIXDBG build phase=$phase " +
-        f"${(System.nanoTime() - tDbg) / 1e9}%.1f s")
-      tDbg = System.nanoTime()
-    }
     val fp = docsFingerprint(docs)
-    lap("fingerprint")
     // Materialize ONCE: KeyedStore.create runs rows.count() and the
     // parquet write as two separate actions — un-checkpointed, the full
     // SA build + LCP descent chain would execute twice per build
     // (round-14 ADVICE; suffixDedupApply checkpoints the same relation
     // for the same reason).
     val idxOpt = buildSuffixIndex(docs, 0, 1L << 22)
-    lap("sa-rounds")
     val rel = idxOpt
       .map(idx => suffixLcpRelation(idx).localCheckpoint())
       .getOrElse(spark.range(0).select(col("id").as("sp"),
         col("id").as("doc_id"), col("id").as("p"), col("id").as("lcp"),
         col("id").as("prev_sp"), col("id").as("prev_doc")))
-    lap("lcp-descent")
     // `ord` persists the in-region search ordinal (round-15 verdict
     // item #5): at build it is the dense global SA rank, which is
     // contiguous-ascending WITHIN any region however create splits the
@@ -1642,33 +1574,19 @@ object DedupOps {
     if (KeyedStore.exists(spark, toksName)) KeyedStore.drop(spark, toksName)
     if (KeyedStore.exists(spark, docspName)) KeyedStore.drop(spark, docspName)
     if (KeyedStore.exists(spark, name)) KeyedStore.drop(spark, name)
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(3)
-    try {
-      val creates: Seq[() => Unit] = Seq(
-        () => KeyedStore.create(spark, toksName,
-          docs.select(col("doc_id"), TextFns.toks.as("arr")).unionByName(
-            spark.range(1).select(lit(-1L).as("doc_id"),
-              array().cast("array<string>").as("arr"))),
-          "doc_id", targetRows),
-        () => KeyedStore.create(spark, docspName,
-          stored.groupBy(col("doc_id"))
-            .agg(collect_list(col("sp")).as("sps"))
-            .unionByName(spark.range(1).select(lit(-1L).as("doc_id"),
-              array().cast("array<bigint>").as("sps"))),
-          "doc_id", targetRows),
-        () => KeyedStore.create(spark, name, rows, "sp", targetRows))
-      creates.map(t => pool.submit(new java.util.concurrent.Callable[Unit] {
-        def call(): Unit = t()
-      })).foldLeft(Option.empty[Throwable]) { (first, f) =>
-        // Await EVERY create before propagating (round-17 ADVICE #1):
-        // unwinding on the first failure would race the caller's
-        // cleanup against the still-running sibling creates. First
-        // failure wins as the cause.
-        try { f.get(); first }
-        catch { case t: Throwable => first.orElse(Some(t)) }
-      }.foreach(throw _)
-    } finally pool.shutdown()
-    lap("creates")
+    AwaitAll(
+      () => KeyedStore.create(spark, toksName,
+        docs.select(col("doc_id"), TextFns.toks.as("arr")).unionByName(
+          spark.range(1).select(lit(-1L).as("doc_id"),
+            array().cast("array<string>").as("arr"))),
+        "doc_id", targetRows),
+      () => KeyedStore.create(spark, docspName,
+        stored.groupBy(col("doc_id"))
+          .agg(collect_list(col("sp")).as("sps"))
+          .unionByName(spark.range(1).select(lit(-1L).as("doc_id"),
+            array().cast("array<bigint>").as("sps"))),
+        "doc_id", targetRows),
+      () => KeyedStore.create(spark, name, rows, "sp", targetRows))
     // Accounting from the READ-BACK (the stored artifact is the thing
     // being certified, not the build pipeline): row/doc counts, total
     // adjacent LCP mass, an order-sensitive modular checksum of the

@@ -600,6 +600,11 @@ object KeyedStore {
     * spec's starvation bound reads this per worker thread. */
   private[graft] val lastAdmitAttempts = new ThreadLocal[Integer]
 
+  /** Test hook: the seniority ticket the LAST [[withRegionLocks]] call
+    * on this thread drew — the arrival order the admission queue
+    * actually sees, which the fairness spec orders completions by. */
+  private[graft] val lastAdmitTicket = new ThreadLocal[java.lang.Long]
+
   private def withRegionLocks[T](spark: SparkSession, name: String,
                                  rm0: RegionMap, touched0: Seq[Int],
                                  recompute: RegionMap => Seq[Int])
@@ -608,6 +613,7 @@ object KeyedStore {
     // Seniority is assigned on ENTRY (not on first block): two writers
     // racing the same region admit in arrival order once either queues.
     val myTicket = waiterTicketSeq.incrementAndGet()
+    lastAdmitTicket.set(myTicket)
     var lastBlocked: Option[Path] = None
     var attempts = 0
     try {

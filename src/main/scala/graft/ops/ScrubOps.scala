@@ -150,62 +150,36 @@ object ScrubOps {
     // absent posting keys / post-delete fingerprint), exactly as a
     // crash between sequential legs always could. Store-level safety:
     // each leg takes its own store's locks; no two legs share a store.
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
-    try {
-      val legs: Seq[(String, () => Unit)] = Seq(
-        // Keyed leg. The returned full-table read is discarded (the
-        // store's read-isolation contract); reads go through scan/get.
-        "keyed" -> (() => {
-          KeyedStore.mergeInto(spark, keyedName, keyedKey, doomedIds,
-            (base, b) => base.join(b, Seq(keyedKey), "left_anti"))
-          ()
-        }),
-        // Versioned leg: delete rows carry the head payload (commit's
-        // change schema); absent ids join to nothing, so a replay
-        // commits an empty change set — a content no-op version.
-        "vstore" -> (() => {
-          val head = VersionedStore.asOf(spark, vstoreDir,
-            VersionedStore.currentVersion(vstoreDir))
-          VersionedStore.commit(spark, vstoreDir,
-            head.join(doomedIds, Seq(vstoreKey)).withColumn("op", lit("D")),
-            vstoreKey)
-        }),
-        // ANN leg.
-        "ann" -> (() => AnnIndexOps.deleteBatch(spark, annName, doomedEmbs)),
-        // Suffix-index leg (round-15 verdict item #4): the doomed docs'
-        // (sp, doc_id, p) rows leave the durable suffix index and its
-        // sub-stores, seam links/LCPs patched
-        // ([[DedupOps.suffixIndexDelete]]). `suffix` pairs the store
-        // name with the corpus the index currently holds — ONE
-        // parameter, so a name without its corpus is unrepresentable
-        // (round-16 ADVICE: the old two-Option shape NPE'd mid-cascade
-        // on Some(name)/None). Replay-idempotent like every other leg
-        // (the post-delete fingerprint makes a re-delete a content
-        // no-op).
-        "suffix" -> (() => suffix.foreach { case (sfxName, sfxDocs) =>
-          DedupOps.suffixIndexDelete(sfxDocs, doomedIds, sfxName)
-        }))
-      val dbg = sys.env.contains("GRAFT_SCRUB_DEBUG")
-      legs.map { case (nm, body) =>
-        pool.submit(new java.util.concurrent.Callable[Unit] {
-          def call(): Unit = {
-            val t0 = System.nanoTime()
-            body()
-            if (dbg) println(f"SCRUBDBG leg=$nm " +
-              f"${(System.nanoTime() - t0) / 1e9}%.1f s")
-          }
-        })
-      }.foldLeft(Option.empty[Throwable]) { (first, f) =>
-        // Await EVERY leg before propagating (round-17 ADVICE #1): a
-        // sequential .get() chain unwinds on the first failure while
-        // later legs are still mutating the stores the caller's cleanup
-        // (drops, vdir delete) is about to touch. Keep the FIRST
-        // failure as the cause; later ones are usually its shadows.
-        try { f.get(); first }
-        catch { case t: Throwable => first.orElse(Some(t)) }
-      }.foreach(throw _)
-    } finally pool.shutdown()
-    ()
+    AwaitAll(
+      // Keyed leg. The returned full-table read is discarded (the
+      // store's read-isolation contract); reads go through scan/get.
+      () => KeyedStore.mergeInto(spark, keyedName, keyedKey, doomedIds,
+        (base, b) => base.join(b, Seq(keyedKey), "left_anti")),
+      // Versioned leg: delete rows carry the head payload (commit's
+      // change schema); absent ids join to nothing, so a replay
+      // commits an empty change set — a content no-op version.
+      () => {
+        val head = VersionedStore.asOf(spark, vstoreDir,
+          VersionedStore.currentVersion(vstoreDir))
+        VersionedStore.commit(spark, vstoreDir,
+          head.join(doomedIds, Seq(vstoreKey)).withColumn("op", lit("D")),
+          vstoreKey)
+      },
+      // ANN leg.
+      () => AnnIndexOps.deleteBatch(spark, annName, doomedEmbs),
+      // Suffix-index leg (round-15 verdict item #4): the doomed docs'
+      // (sp, doc_id, p) rows leave the durable suffix index and its
+      // sub-stores, seam links/LCPs patched
+      // ([[DedupOps.suffixIndexDelete]]). `suffix` pairs the store
+      // name with the corpus the index currently holds — ONE
+      // parameter, so a name without its corpus is unrepresentable
+      // (round-16 ADVICE: the old two-Option shape NPE'd mid-cascade
+      // on Some(name)/None). Replay-idempotent like every other leg
+      // (the post-delete fingerprint makes a re-delete a content
+      // no-op).
+      () => suffix.foreach { case (sfxName, sfxDocs) =>
+        DedupOps.suffixIndexDelete(sfxDocs, doomedIds, sfxName)
+      })
   }
 
   /** The three forget legs as RENDERED physical plans over freshly
@@ -298,13 +272,6 @@ object ScrubOps {
     * ([[KeyedStore.cloneStore]] / dir copy): the cascade then runs
     * real deletes against real stores at snapshot-restore cost. */
   def qForgetCascade(spark: SparkSession, dir: String): DataFrame = {
-    val dbg = sys.env.contains("GRAFT_SCRUB_DEBUG")
-    var tDbg = System.nanoTime()
-    def lap(phase: String): Unit = if (dbg) {
-      println(f"SCRUBDBG phase=$phase " +
-        f"${(System.nanoTime() - tDbg) / 1e9}%.1f s")
-      tDbg = System.nanoTime()
-    }
     val sfx = dir.replaceAll("[^a-zA-Z0-9]", "_")
     val keyedName = "graft_forget_docs_" + sfx
     val annName = "graft_forget_ann_" + sfx
@@ -315,7 +282,6 @@ object ScrubOps {
     try {
       val fpDocs = KeyedStore.contentFingerprint(docsRows)
       val fpEmbs = KeyedStore.contentFingerprint(embs)
-      lap("fingerprints")
       // 1024 rows/region: the cascade's doomed set (every 10th id)
       // covers EVERY region whatever their size, so finer regions only
       // multiply per-region commit machinery — at real scale the id set
@@ -327,13 +293,11 @@ object ScrubOps {
           docsRows, "doc_id", 1024))
       KeyedStore.cloneStore(spark, "graft_forget_keyedcache_" + sfx,
         keyedName)
-      lap("keyed-cache-clone")
       KeyedStore.ensureCached(spark, "graft_forget_anncache_" + sfx,
         fpEmbs)(
         AnnIndexOps.buildIndex(spark, "graft_forget_anncache_" + sfx,
           embs, targetRowsPerRegion = 2048))
       KeyedStore.cloneStore(spark, "graft_forget_anncache_" + sfx, annName)
-      lap("ann-cache-clone")
       // Versioned leg: path-based store — cache dir + recursive copy.
       val vcache = java.nio.file.Paths.get(
         System.getProperty("java.io.tmpdir"), "graft_forget_vcache_" + sfx)
@@ -345,7 +309,6 @@ object ScrubOps {
         KeyedStore.atomicWriteBytes(vfp, fpDocs.toString.getBytes("UTF-8"))
       }
       copyDir(vcache, java.nio.file.Paths.get(vdir))
-      lap("vstore-cache-copy")
       // Suffix leg over a 1/21 sub-corpus; the doomed ids hit it at
       // doc_id ≡ 63 (mod 210) — a real, oracle-countable bite at every
       // fixture SF (3 docs at sf0.01, 24 at sf0.1). A delete row's
@@ -360,7 +323,6 @@ object ScrubOps {
       if (!DedupOps.suffixStoreFresh(sfxDocs, sfxCache))
         DedupOps.suffixIndexBuild(sfxDocs, sfxCache).collect()
       DedupOps.suffixIndexClone(spark, sfxCache, sfxName)
-      lap("suffix-cache-clone")
       val doomedIds = docsRows.filter(col("doc_id") % 10 === 3)
         .select(col("doc_id"))
       val doomedEmbs = embs.filter(col("vec_id") % 10 === 3)
@@ -384,10 +346,8 @@ object ScrubOps {
         cnt("keyed", "before", keyed()),
         cnt("ann", "postings_before", postings()),
         cnt("suffix", "before", sfxRows()))
-      lap("phase-before")
       forgetCascade(spark, keyedName, "doc_id", vdir, "doc_id", annName,
         doomedIds, doomedEmbs, Some((sfxName, sfxDocs)))
-      lap("cascade-legs")
       val after = phase(
         cnt("keyed", "after", keyed()),
         cnt("ann", "postings_after", postings()),

@@ -110,8 +110,7 @@ object TopKStrategy extends SparkStrategy {
   * `graft_topk` marker, the `graft_as_of` table function, the
   * [[FuseDotProduct]]/[[RewriteTopKMarker]]/[[KeyedRegionPrune]]
   * optimizer rules, and the [[TopKStrategy]] planner strategy. Installed
-  * by Verify/Bench/tests via
-  * `SparkSession.builder.withExtensions(new GraftExtensions)` — the
+  * on every session [[graft.GraftSession.local]] builds — the
   * Spark-native analog of the reference's "custom machinery" surface
   * (SURVEY.md §7.2 M4).
   */

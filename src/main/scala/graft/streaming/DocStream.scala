@@ -107,25 +107,17 @@ object DocStream {
 
   def qStreamQualityGate(spark: SparkSession, dir: String): DataFrame = {
     val name = "graft_stream_qgate_store"
-    val dbg = sys.env.contains("GRAFT_STREAM_DEBUG")
-    var tDbg = System.nanoTime()
-    def lap(phase: String): Unit = if (dbg) {
-      println(f"QGATEDBG phase=$phase ${(System.nanoTime() - tDbg) / 1e9}%.1f s")
-      tDbg = System.nanoTime()
-    }
     val tmp = java.nio.file.Files.createTempDirectory("graft_stream_qgate")
     val srcDir = tmp.resolve("src").toString
     val docs = graft.Tables.documents(spark, dir)
       .select(col("doc_id"), col("lang"), col("text"))
     docs.repartition(2).write.mode("overwrite").parquet(srcDir)
-    lap("src-write")
     val prev = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", "4")
     graft.ops.KeyedStore.drop(spark, name) // defensive: stale prior run
     try {
       // Freeze (train or load) before any batch arrives.
       graft.ops.TextOps.qualityModelFor(spark, dir, 1024, 8)
-      lap("train")
       val stream = spark.readStream.schema(docs.schema)
         .option("maxFilesPerTrigger", "1").parquet(srcDir)
       val q = stream.writeStream
@@ -138,14 +130,12 @@ object DocStream {
                 col("quality_pass"))
             if (!graft.ops.KeyedStore.exists(spark, name)) {
               graft.ops.KeyedStore.create(spark, name, scored, "doc_id", 512)
-              lap(s"batch$bid-create")
             } else {
               // returned full-table read deliberately discarded (the
               // store's read-isolation contract); reads go through scan
               graft.ops.KeyedStore.upsert(spark, name, "doc_id",
                 scored.select(col("doc_id"), lit("U").as("op"), col("lang"),
                   col("score"), col("quality_pass")))
-              lap(s"batch$bid-upsert")
               ()
             }
           }
@@ -159,7 +149,6 @@ object DocStream {
           "q_stream_quality_gate: stream did not drain within 120 s — " +
             "refusing to report a partially gated corpus")
       }
-      lap("drain")
       // Materialize before the temp store drops (fixture-scale; at real
       // scale the gated store IS the durable output).
       val res = graft.ops.KeyedStore.scan(spark, name, "doc_id", 0L, Long.MaxValue)
@@ -170,7 +159,6 @@ object DocStream {
             .as("passed_score"))
         .orderBy(col("lang"))
         .localCheckpoint()
-      lap("scan-agg")
       res
     } finally {
       spark.conf.set("spark.sql.shuffle.partitions", prev)

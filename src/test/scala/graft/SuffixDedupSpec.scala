@@ -57,31 +57,6 @@ class SuffixDedupSpec extends AnyFunSuite {
     assert(fixWin.values.exists(_._2 > 0), "slice should contain dups")
   }
 
-  test("radix-4 refinement (graft.sfx.radix flag) is output-identical " +
-       "to the default binary doubling on both rank paths") {
-    import spark.implicits._
-    val docs = Seq(
-      (1L, "a b c d e f g h"),
-      (2L, "x y c d e f z"),
-      (3L, "q r s"),
-      (4L, "a b c d e f g h"),
-      (5L, "hot hot hot hot a b hot hot hot")  // skewed token
-    ).toDF("doc_id", "text")
-    val bin = rows(ops.DedupOps.suffixDedupStats(docs))
-    val binDsk = rows(ops.DedupOps.suffixDedupStats(docs, deskewAbove = 0L))
-    val prop = "graft.sfx.radix"
-    val saved = sys.props.get(prop)
-    sys.props(prop) = "4"
-    try {
-      assert(rows(ops.DedupOps.suffixDedupStats(docs)) == bin)
-      assert(rows(ops.DedupOps.suffixDedupStats(docs, deskewAbove = 0L))
-        == binDsk)
-    } finally saved match {
-      case Some(v) => sys.props(prop) = v
-      case None => sys.props.remove(prop)
-    }
-  }
-
   test("rounds auto-derive covers >128-token documents; explicit " +
        "rounds still fails loudly; empty corpus yields empty output") {
     import spark.implicits._

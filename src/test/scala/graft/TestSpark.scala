@@ -6,18 +6,7 @@ import org.apache.spark.sql.SparkSession
 object TestSpark {
   val Sf = "/root/testdata/sf0.001"
 
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .withExtensions(new graft.plans.GraftExtensions)
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft_warehouse").toString)
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession = GraftSession.local(4,
+    "spark.sql.warehouse.dir" ->
+      java.nio.file.Files.createTempDirectory("graft_warehouse").toString)
 }
