@@ -11,6 +11,9 @@ from pathlib import Path
 import duckdb
 import pyarrow.parquet as pq
 
+# The checkout this script belongs to: sbt builds and runs ITS sources.
+REPO = Path(__file__).resolve().parents[1]
+
 SF_DIR = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
 OUT = Path(sys.argv[2] if len(sys.argv) > 2 else "/tmp/graft_verify")
 TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()
@@ -18,7 +21,13 @@ TABLES = "region nation customer supplier part orders lineitem events documents 
 if "--skip-spark" not in sys.argv:
     r = subprocess.run(
         ["sbt", "-batch", f'runMain graft.Verify {SF_DIR} {OUT}'],
-        cwd="/root/repo", capture_output=True, text=True, timeout=1800)
+        cwd=REPO, capture_output=True, text=True, timeout=1800)
+    # Verify rejects unknown SPARK_GRAFT_ONLY names with exit 2, which sbt
+    # reports as its own exit 1: find its line and exit 2 here too.
+    rejected = [l for l in (r.stdout + r.stderr).splitlines()
+                if "[verify] unknown SPARK_GRAFT_ONLY keys:" in l]
+    if r.returncode != 0 and rejected:
+        print(rejected[0][rejected[0].index("[verify]"):]); sys.exit(2)
     print(r.stdout[-3000:])
     if r.returncode != 0:
         print(r.stderr[-3000:]); sys.exit(1)

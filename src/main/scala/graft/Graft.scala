@@ -25,30 +25,38 @@ object Graft {
     * per-task time inflates ~8× from lock/scheduler contention among
     * concurrent near-empty tasks, and the same query at local[8] (or at
     * shuffle=4) runs 3–5× faster end to end. Byte-based coalescing
-    * (`parallelismFirst=false` + a 64 MB advisory target — the published
-    * Spark tuning guidance of 100 MB–1 GB partitions, see the AQE docs)
-    * is the SCALE-CORRECT setting, not a local hack: at 100 TB every
-    * post-shuffle partition already exceeds the advisory size so the
-    * planner behaves identically, while at fixture scale the near-empty
-    * fan-out collapses to the few tasks the bytes justify. Applied at the
-    * one chokepoint every operator passes through ([[Tables.table]]) so
-    * the engine's execution profile is uniform across queries and entry
-    * points (Bench, Verify, tests, library callers) without touching any
-    * harness session setup. `spark.sql.shuffle.partitions` itself is NOT
-    * modified — the harness's core-count scaling contract stays intact
+    * (`parallelismFirst=false` + a 4 MB advisory target, sized at the
+    * setting below) is the SCALE-CORRECT setting, not a local hack: at
+    * 100 TB every post-shuffle partition already exceeds the advisory size
+    * so the planner behaves identically, while at fixture scale the
+    * near-empty fan-out collapses to the few tasks the bytes justify.
+    * Applied at the one chokepoint every operator passes through
+    * ([[Tables.table]]) so the engine's execution profile is uniform
+    * across queries and entry points (Bench, Verify, tests, library
+    * callers) without touching any harness session setup.
+    * `spark.sql.shuffle.partitions` itself is NOT modified — the
+    * harness's core-count scaling contract stays intact
     * (map-side width and the pre-AQE partition count still follow it).
     * Override the advisory target via GRAFT_ADVISORY_PARTITION_BYTES
     * (production clusters commonly raise it to 256m, guide §9).
+    *
+    * The profile provides DEFAULTS and never overwrites a setting the
+    * caller made: each of its three confs is set only where the session
+    * conf does not hold it yet (from the builder, the SparkConf, or a
+    * `spark.conf.set` before the first [[Tables.table]] call). It runs
+    * once per session, so an override made afterwards (PlanShapeSpec's
+    * skew-split test sizes the advisory target to its fixture) is kept
+    * too. The `spark.graft.execution.tuned` marker records that it ran.
     */
   def tuneExecution(spark: SparkSession): Unit = {
-    // Once per session: a caller that deliberately overrides one of
-    // these afterwards (PlanShapeSpec's skew-split test sizes the
-    // advisory target to its fixture) must keep its override — the
-    // profile provides DEFAULTS, it never fights explicit settings.
     if (spark.conf.getOption("spark.graft.execution.tuned").nonEmpty) return
     spark.conf.set("spark.graft.execution.tuned", "true")
-    spark.conf.set(
-      "spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
+    // Not `spark.conf.getOption`: it answers with the registered default
+    // for an unset key; `contains` is true only for an explicit setting.
+    val conf = spark.sessionState.conf
+    def default(key: String, value: String): Unit =
+      if (!conf.contains(key)) spark.conf.set(key, value)
+    default("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
     // 4m default: the measured contention knee on this box (probe sweep
     // 64m/16m/4m/1m on q_kcore_full / q_lpa_communities / q_ktruss — 64m
     // serializes CPU-heavy small-byte stages, 1m re-inflates per-task
@@ -58,8 +66,7 @@ object Graft {
     // granularity, which wants big chunks at real scale. At 100 TB the
     // default is inert either way: partitions only get COALESCED toward
     // the advisory size when they are smaller than it.
-    spark.conf.set(
-      "spark.sql.adaptive.advisoryPartitionSizeInBytes",
+    default("spark.sql.adaptive.advisoryPartitionSizeInBytes",
       sys.env.getOrElse("GRAFT_ADVISORY_PARTITION_BYTES", "4m"))
     // Without this, AQE skips plans that materialize a cache (SPARK-38101
     // keeps it off so a cache's REPORTED output partitioning never
@@ -70,8 +77,7 @@ object Graft {
     // 363). The operators here never rely on a cache's output
     // partitioning surviving the cache (joins re-key or broadcast), so
     // byte-sized cache partitions are purely fewer, fuller tasks.
-    spark.conf.set(
-      "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
+    default("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
   }
 
   // dedup

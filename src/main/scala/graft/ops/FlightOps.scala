@@ -2,11 +2,17 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.IntegerType
+import graft.functions.JsonFunctions.flatJsonIntegral
 
 /** Reproduction layer: the reference's full operator surface re-expressed as
   * declarative Spark plans over the `events` fixture (flight-analog mapping in
   * FIXTURES.md §3: carrier→event_type, month→month(ts), delay→value,
-  * cancelled/diverted→predicates on the `props` JSON field `k`).
+  * cancelled/diverted→predicates on the `props` JSON field `k`). `k` is
+  * read by [[graft.functions.JsonFunctions.flatJsonIntegral]]: a byte scan
+  * for flat objects, with `get_json_object(props, "$.k")` as the fallback
+  * for every string the scan leaves undecided, so the value is always the
+  * one `get_json_object(..).cast("int")` gives.
   *
   * Reference semantics reproduced (citations into /root/reference/):
   *  - Year-equality filter: `HCompute/src/main/java/org/northeastern/Main.java:109-111`
@@ -36,8 +42,9 @@ object FlightOps {
   val TargetYear = 2024 // fixture analog of TARGET_YEAR=2008 (HCompute/...Main.java:75)
 
   /** Flight-analog projection of `events` (FIXTURES.md §3). `k` is extracted
-    * from the JSON `props`; cancelled-analog = k%7==0, diverted-analog =
-    * k%11==0 — deterministic stand-ins for the "1.00"-flag columns.
+    * from the JSON `props` (byte scan, `get_json_object` fallback);
+    * cancelled-analog = k%7==0, diverted-analog = k%11==0 — deterministic
+    * stand-ins for the "1.00"-flag columns.
     */
   private def flights(spark: SparkSession, dir: String): DataFrame =
     graft.Tables.eventsWithRawTs(spark, dir).select(
@@ -45,7 +52,7 @@ object FlightOps {
       year(col("ts")).as("year"),
       month(col("ts")).as("month"),
       col("value").as("delay"),
-      get_json_object(col("props"), "$.k").cast("int").as("k"),
+      flatJsonIntegral(col("props"), "k", IntegerType).as("k"),
       col("ts_raw"))
 
   /** Pushable twin of `year = y`: `year()` over the derived timestamp
@@ -87,11 +94,12 @@ object FlightOps {
 
   /** Year filter plus successful-flight filter (not cancelled AND not
     * diverted). `k` is written ONCE in the predicate: Catalyst inlines
-    * the `get_json_object` alias into every reference, and the filter
-    * does no common-subexpression elimination, so the plain
-    * `k % 7 != 0 AND k % 11 != 0` parsed the JSON twice per row. One
-    * `pmod(k, 77)` set-membership test has the same answer, including
-    * null `k` (the row is dropped).
+    * the `k` alias (the byte scan, with `get_json_object` behind it) into
+    * every reference, and the filter does no common-subexpression
+    * elimination, so the plain `k % 7 != 0 AND k % 11 != 0` would scan
+    * the JSON twice per row, and parse it twice wherever the scan falls
+    * back. One `pmod(k, 77)` set-membership test has the same answer,
+    * including null `k` (the row is dropped).
     */
   private def successful(spark: SparkSession, df: DataFrame): DataFrame =
     df.filter(tsRawInYear(spark, df, TargetYear) && col("year") === TargetYear &&

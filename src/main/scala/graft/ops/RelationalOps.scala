@@ -3,6 +3,8 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.IntegerType
+import graft.functions.JsonFunctions.flatJsonIntegral
 
 /** Extension layer — relational operators the reference lacks entirely
   * (SURVEY.md §2.6: no joins, windows, sorts, set ops, distinct, rollup,
@@ -317,7 +319,7 @@ object RelationalOps {
     */
   def qJsonExtract(spark: SparkSession, dir: String): DataFrame =
     events(spark, dir)
-      .select(get_json_object(col("props"), "$.k").cast("int").as("k"), col("value"))
+      .select(flatJsonIntegral(col("props"), "k", IntegerType).as("k"), col("value"))
       .groupBy((col("k") % 10).as("k_bucket"))
       .agg(count(lit(1)).as("n"),
            round(sum(col("value")), 2).as("sum_value"),

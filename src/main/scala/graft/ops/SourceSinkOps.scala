@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import graft.functions.JsonFunctions.flatJsonIntegral
 
 /** Source/sink surface closing the reference's remaining I/O operators
   * (SURVEY.md §2.1): CSV scan+parse with explicit schema and quote/escape
@@ -44,7 +45,7 @@ object SourceSinkOps {
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n"),
            round(sum(col("value")), 2).as("sum_value"),
-           sum(get_json_object(col("props"), "$.k").cast("long")).as("sum_k"))
+           sum(flatJsonIntegral(col("props"), "k", LongType)).as("sum_k"))
       .orderBy(col("event_type"))
   }
 
@@ -70,7 +71,7 @@ object SourceSinkOps {
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n"),
            round(sum(col("value")), 2).as("sum_value"),
-           sum(get_json_object(col("props"), "$.k").cast("long")).as("sum_k"))
+           sum(flatJsonIntegral(col("props"), "k", LongType)).as("sum_k"))
       .orderBy(col("event_type"))
   }
 
@@ -160,7 +161,7 @@ object SourceSinkOps {
       .agg(count(lit(1)).as("n"),
            sum(col("event_id")).as("id_sum"),
            sum(expr("cast(round(value * 100) as bigint)")).as("value_centi"),
-           sum(get_json_object(col("props"), "$.k").cast("long")).as("sum_k"))
+           sum(flatJsonIntegral(col("props"), "k", LongType)).as("sum_k"))
       .orderBy(col("event_type"))
   }
 
@@ -220,7 +221,7 @@ object SourceSinkOps {
     val base = events(spark, dir).select(
       year(col("ts")).as("y"), month(col("ts")).as("m"),
       col("event_type").as("carrier"), col("value").as("delay"),
-      get_json_object(col("props"), "$.k").cast("int").as("k"))
+      flatJsonIntegral(col("props"), "k", IntegerType).as("k"))
     def flag(pred: org.apache.spark.sql.Column) =
       when(col("k").isNull, lit(null)).when(pred, lit("1.00")).otherwise(lit("0.00"))
     val wideCols = (0 until WideCsvCols).map {

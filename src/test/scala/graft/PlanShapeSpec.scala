@@ -53,15 +53,41 @@ class PlanShapeSpec extends AnyFunSuite {
   test("the successful-flight filter parses the props JSON once per row") {
     // Each reference to the `k` alias is inlined into the filter, and a
     // filter does no common-subexpression elimination: one reference
-    // means one get_json_object evaluated per row.
+    // means one byte scan per row, and one get_json_object, evaluated
+    // only where the scan leaves the string undecided (the coalesce
+    // fallback). The filter stays inside whole-stage codegen.
+    import org.apache.spark.sql.catalyst.expressions.{Coalesce, Expression, GetJsonObject}
+    import org.apache.spark.sql.execution.{FilterExec, InputAdapter, SparkPlan, WholeStageCodegenExec}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    def count(es: Seq[Expression])(pf: PartialFunction[Expression, Any]): Int =
+      es.map(_.collect(pf).size).sum
+    def hasScan(e: Expression) = e.exists(_.isInstanceOf[graft.functions.FlatJsonIntegral])
+    // (filter, inside a codegen stage) for every FilterExec of the plan
+    def filters(p: SparkPlan, inStage: Boolean): Seq[(FilterExec, Boolean)] = p match {
+      case a: AdaptiveSparkPlanExec => filters(a.executedPlan, false)
+      case q: QueryStageExec => filters(q.plan, false)
+      case w: WholeStageCodegenExec => filters(w.child, true)
+      case i: InputAdapter => filters(i.child, false)
+      case f: FilterExec => (f, inStage) +: filters(f.child, inStage)
+      case o => o.children.flatMap(filters(_, inStage))
+    }
     Seq(ops.FlightOps.qFlightReport(spark, Sf),
         ops.FlightOps.qSecondary(spark, Sf)).foreach { df =>
-      val n = df.queryExecution.optimizedPlan.collect { case p =>
-        p.expressions.map(_.collect {
-          case e: org.apache.spark.sql.catalyst.expressions.GetJsonObject => e
-        }.size).sum
-      }.sum
-      assert(n == 1, df.queryExecution.optimizedPlan.toString.take(3000))
+      val plan = df.queryExecution.optimizedPlan
+      val exprs = plan.collect { case p => p.expressions }.flatten
+      val shown = plan.toString.take(3000)
+      assert(count(exprs) { case e: graft.functions.FlatJsonIntegral => e } == 1, shown)
+      assert(count(exprs) { case e: GetJsonObject => e } == 1, shown)
+      val fallbacks = count(exprs) {
+        case c: Coalesce if c.children.head.isInstanceOf[graft.functions.FlatJsonIntegral] =>
+          c.children.tail.map(_.collect { case e: GetJsonObject => e }.size).sum
+      }
+      assert(fallbacks == 1, shown)
+      df.collect() // materialize so AQE finalizes the plan
+      val scanned = filters(df.queryExecution.executedPlan, false)
+        .filter { case (f, _) => hasScan(f.condition) }
+      assert(scanned.size == 1 && scanned.forall(_._2),
+        df.queryExecution.executedPlan.toString.take(3000))
     }
   }
 
