@@ -13,7 +13,7 @@ import scala.jdk.CollectionConverters._
   * coherent surface (the reference creates the table, puts rows, and
   * gets by row key:
   * `HPopulate/src/main/java/org/northeastern/Main.java:54-73,97-100`).
-  * create/get/scan/upsert share a single MANAGED parquet table
+  * create/get/scan/upsert share a single parquet table
   * partitioned by KEY-RANGE REGIONS `kr` — the literal analog of HBase's
   * region model (`Main.java:54-73` pre-splits its table into key ranges
   * for exactly this reason), where the reference's own UUID row keys
@@ -36,19 +36,19 @@ import scala.jdk.CollectionConverters._
   *  - UPSERT (merge / CDC apply) is copy-on-write over ONLY the regions
   *    containing changed keys: region assignment for the change set is a
   *    codegen'd binary search ([[graft.functions.LongBoundaryBucket]]),
-  *    base rows keep their resident region, and the merged result lands
-  *    via dynamic partition overwrite — O(changed regions) ≈ O(changed
-  *    files) write amplification, never O(table). The merged relation is
-  *    localCheckpoint-materialized so the table can be read and
-  *    rewritten in one pass (no staging round trip), and the region
-  *    stats and blooms fold in the job that materializes it;
+  *    base rows keep their resident region, and each touched region's
+  *    merged rows land as ONE new file — O(changed regions) ≈ O(changed
+  *    files) write amplification, never O(table). One job reads the
+  *    touched regions, writes each region's file into staging beside
+  *    the table and folds its stats and bloom; the driver then swaps the
+  *    region directories in;
   *  - MERGEINTO generalizes upsert to a caller-supplied commutative
   *    merge (latest-wins, additive counts) — the micro-batch sink
   *    primitive the streaming stores drive;
   *  - per-region ROW BLOOMS live DATA-SIDE, one file per region under
   *    `_graft_blooms/kr=<id>` — exactly where HBase keeps them (in the
   *    region's HFiles, never in meta). They are WRITTEN by the executor
-  *    task that materializes the region and READ lazily,
+  *    task that writes the region's file and READ lazily,
   *    only for the regions a GET's range candidacy selects, so driver
   *    bloom residency is O(probed regions) while the table can grow to
   *    10⁶ regions. A GET for an absent key touches zero partitions (the
@@ -71,31 +71,40 @@ import scala.jdk.CollectionConverters._
   *    a directory written by another JVM is picked up on its next
   *    change. Bloom bytes cache the same way, per region file;
   *  - CREATE is idempotent across JVMs: a stale warehouse LOCATION left
-  *    by a previous session is cleared before the CTAS.
+  *    by a previous session is cleared before the write.
   *
-  * Crash ordering: the data write (dynamic partition overwrite) is the
-  * commit point. Maintenance passes that re-home rows to FRESH kr ids
-  * (split / region merge) publish the updated region directory BEFORE
-  * dropping the superseded partitions, so a crash can orphan an unlisted
-  * partition (invisible to get/scan, reclaimed by [[repair]]) but can
-  * never leave the directory pointing at dropped data. The residual
-  * window — a crash between the data overwrite and the sidecar refresh
-  * leaves stale (rows, min, max) bounds — only widens scans' prune
-  * lists' misses for keys that moved past the recorded bounds, and heals
-  * on the next write; bloom files that predate their region's data are
-  * detected by mtime and ignored (fail open), so a torn write can cause
-  * extra IO, never a wrong answer.
+  * Crash ordering: the commit point is PER REGION — the swap of its
+  * `kr=<id>` directory, which moves the live directory into a hidden
+  * aside directory and the staged one in (two atomic renames). A crash
+  * between the two renames leaves the region aside, missing from reads
+  * until [[repair]] moves it back (the window of a dynamic overwrite's
+  * delete-then-rename); a crash after some swaps leaves each region
+  * either wholly old or wholly new. Maintenance passes that re-home rows
+  * to FRESH kr ids (split / region merge) publish the updated region
+  * directory BEFORE dropping the superseded partitions, so a crash can
+  * orphan an unlisted partition (invisible to get/scan, reclaimed by
+  * [[repair]]) but can never leave the directory pointing at dropped
+  * data. The residual window — a crash between a swap and the sidecar
+  * refresh leaves stale (rows, min, max) bounds — only widens scans'
+  * prune lists' misses for keys that moved past the recorded bounds, and
+  * heals on the next write; bloom files that predate their region's data
+  * are detected by mtime and ignored (fail open), so a torn commit can
+  * cause extra IO, never a wrong answer. CREATE registers the catalog
+  * table only after its regions, `_meta` and directory are written, so
+  * a create that fails or crashes leaves no table ([[exists]] is false).
   *
   * Read isolation: GET/scan/raw-SQL reads WITH a key predicate route
   * through the region directory and are consistent at every instant of
   * a split/merge (the directory flips atomically from old to new
-  * regions). A raw full-table read with NO key predicate is NOT
-  * isolated against concurrent maintenance: between the new partitions
-  * landing and the superseded partition's drop it can observe the
-  * moving region twice (choosing the opposite order would instead make
-  * rows vanish mid-flight — strictly worse). Quiesce writers around
-  * full-table exports, or read through [[scan]] — the same contract as
-  * reading HBase through raw HFiles instead of the client API.
+  * regions). A read that listed a region's files before its swap and
+  * opens them after fails (FAILED_READ_FILE) rather than reading a mix.
+  * A raw full-table read with NO key predicate is NOT isolated against
+  * concurrent maintenance: between the new partitions landing and the
+  * superseded partition's drop it can observe the moving region twice
+  * (choosing the opposite order would instead make rows vanish
+  * mid-flight — strictly worse). Quiesce writers around full-table
+  * exports, or read through [[scan]] — the same contract as reading
+  * HBase through raw HFiles instead of the client API.
   *
   * Region boundaries are fixed at create (inserts beyond the edges land
   * in the boundary regions); [[rebalance]] is the major-compaction /
@@ -216,7 +225,6 @@ object KeyedStore {
     spark.sql(s"DROP TABLE IF EXISTS $name")
     deleteTree(location(spark, name))
     dirCache.remove(sidecar(spark, name).toString)
-    writeStageLocks.remove(name.toLowerCase)
   }
 
   /** Filesystem location of the table's data (test hook for the
@@ -794,7 +802,13 @@ object KeyedStore {
                         kr: Int): Option[Array[Byte]] =
     loadBloomAt(location(spark, name), kr)
 
-  private def bloomStagePrefix(name: String): String =
+  /** Per-writer staging directories live BESIDE the table location
+    * (create requires an absent location). Stores written before region
+    * files were staged used the `.bloom-stage-` prefix for blooms alone;
+    * [[repair]] sweeps both. */
+  private def stagePrefix(name: String): String = name.toLowerCase + ".stage-"
+
+  private def legacyStagePrefix(name: String): String =
     name.toLowerCase + ".bloom-stage-"
 
   private def deleteTree(p: Path): Unit =
@@ -805,88 +819,168 @@ object KeyedStore {
       Files.deleteIfExists(p)
     }
 
-  /** Rewrite regions in one read: materialize `planned` — the rows to
-    * land, `kr` attached, laid out so that every region sits WHOLE in
-    * one partition, sorted by (kr, key) — as a local checkpoint, and
-    * fold each region's stats in the SAME job: the job that caches a
-    * partition also runs [[regionStats]] over it. No second read of the
-    * checkpoint and no aggregate exchange; only the ~50-byte
-    * (kr, rows, min, max) rows reach the driver, while bloom bytes stay
-    * data-side (HBase keeps blooms in HFiles, not in meta, for the same
-    * reason) — driver residency is O(1) filters however many regions
-    * the table grows. Executors write through the table's filesystem,
-    * the same shared-FS assumption the parquet write itself makes.
+  /** Rewrite regions in one read: `planned` holds the rows to land,
+    * `kr` attached, laid out so that every region sits WHOLE in one
+    * partition, sorted by (kr, key), in the table's column order. ONE
+    * job runs [[regionFiles]] over it: each task writes each of its
+    * regions as one key-sorted parquet file (Spark's own writer,
+    * [[org.apache.spark.sql.GraftParquetWriter]]) into a per-writer
+    * staging directory BESIDE the table location, and in the same pass
+    * folds the region's (rows, min, max) and bloom. Only the ~50-byte
+    * (kr, rows, min, max) rows and a staging path reach the driver;
+    * bloom bytes stay data-side (HBase keeps blooms in HFiles, not in
+    * meta, for the same reason), so driver residency is O(1) filters
+    * however many regions the table grows. Executors write through the
+    * table's filesystem, the shared-FS assumption any file write makes.
+    * Staging outside the table breaks the read/overwrite cycle: the job
+    * reads the old region files while writing the new ones elsewhere.
     *
-    * Then `land` writes the checkpoint, and only after it the blooms are
-    * published: a bloom counts as fresh only when it is no older than
-    * its region's data directory ([[loadBloomAt]]), so one published
-    * before the data write would read as stale and fail open forever.
-    * Blooms are staged in a directory BESIDE the table location (create
-    * requires an absent location; [[repair]] sweeps a crashed writer's).
-    * A region found in two partitions breaks the layout contract (its
-    * bloom would be torn between two tasks); the call then fails before
-    * anything is written. Returns each landed region's exact stats.
+    * Then [[publishRegions]] swaps the staged regions in. Only the
+    * directories the successful task results report are published; a
+    * failed job (or a region found in two partitions — its file and
+    * bloom would be torn between two tasks) publishes nothing, and the
+    * staging is deleted either way ([[repair]] sweeps a crashed
+    * writer's). `register = false` leaves the catalog alone (create
+    * registers its table after the write). Returns each landed region's
+    * exact stats.
     */
   private def rewriteRegions(spark: SparkSession, name: String,
-                             planned: DataFrame, key: String, mBits: Int)
-                            (land: DataFrame => Unit): Map[Int, Region] = {
-    val krOrd = planned.schema.fieldIndex("kr")
-    val keyOrd = planned.schema.fieldIndex(key)
-    val keyType = planned.schema(key).dataType
+                             planned: DataFrame, key: String, mBits: Int,
+                             register: Boolean = true): Map[Int, Region] = {
+    val schema = planned.schema
+    val krOrd = schema.fieldIndex("kr")
+    val keyOrd = schema.fieldIndex(key)
+    val keyType = schema(key).dataType
+    val data = schema.fields.indices.filter(_ != krOrd)
+    val dataCols = data.map(i => org.apache.spark.sql.catalyst.expressions
+      .BoundReference(i, schema(i).dataType, schema(i).nullable))
     val k = BloomK
-    val (out, rdd) =
-      org.apache.spark.sql.GraftCheckpointBridge.localCheckpointWithRdd(planned)
-    val loc = location(spark, name)
-    val stage = Files.createDirectories(loc.resolveSibling(
-      bloomStagePrefix(name) + java.util.UUID.randomUUID()))
+    val stage = Files.createDirectories(location(spark, name).resolveSibling(
+      stagePrefix(name) + java.util.UUID.randomUUID()))
     val stageStr = stage.toString
+    val writer = org.apache.spark.sql.GraftParquetWriter(spark,
+      org.apache.spark.sql.types.StructType(data.map(schema(_))))
     try {
-      val folded = spark.sparkContext.runJob(rdd,
-        (it: Iterator[InternalRow]) =>
-          regionStats(it, krOrd, keyOrd, keyType, mBits, k, stageStr)).flatten
-      val stats = folded.iterator.map(r => r.kr -> r).toMap
+      val folded = try spark.sparkContext.runJob(planned.queryExecution.toRdd,
+        (it: Iterator[InternalRow]) => regionFiles(it, krOrd, keyOrd, keyType,
+          mBits, k, writer, dataCols, stageStr)).flatten
+        finally writer.release()
+      val stats = folded.iterator.map { case (r, _) => r.kr -> r }.toMap
       if (stats.size != folded.length)
         throw new IllegalStateException(
           s"KeyedStore: a region of $name spans several partitions; " +
-            "its stats and bloom cannot be folded in one pass")
-      land(out)
-      val bd = loc.resolve("_graft_blooms")
-      // Legacy layout: the pre-7 store kept ALL blooms in one FILE at
-      // this exact path. Supersede it (a region not rewritten yet has no
-      // bloom file → fail open).
-      if (Files.exists(bd) && !Files.isDirectory(bd)) Files.delete(bd)
-      Files.createDirectories(bd)
-      stats.keys.foreach { kr =>
-        // Stamp no older than the region's data directory, then move
-        // over the region's bloom file (two file ops per region).
-        val staged = stage.resolve(s"kr=$kr")
-        val dataDir = loc.resolve(s"kr=$kr")
-        val now = java.nio.file.attribute.FileTime.from(java.time.Instant.now())
-        val dataTime =
-          if (Files.exists(dataDir)) Files.getLastModifiedTime(dataDir) else now
-        Files.setLastModifiedTime(staged,
-          if (dataTime.compareTo(now) > 0) dataTime else now)
-        Files.move(staged, bd.resolve(s"kr=$kr"),
-          java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-          java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-      }
+            "its file, stats and bloom cannot be written in one pass")
+      publishRegions(spark, name, folded.toIndexedSeq.map { case (r, dir) =>
+        r.kr -> java.nio.file.Paths.get(dir) }, register)
       stats
     } finally deleteTree(stage)
   }
 
-  /** Executor-side stats fold over ONE partition of whole regions,
-    * contiguous per `kr` (the (kr, key) sort guarantees it): per region
-    * the row count, min and max key (nulls count as rows but bound
-    * nothing, as `count`/`min`/`max` treat them) and the bloom over
-    * [[hash60]] of every key, written into `stage` as `kr=<id>`
-    * (atomic publish). Returns one [[Region]] per region seen.
+  /** Test hook: called at each publish step so a spec can fail a commit
+    * mid-publish. "aside" (after a region's old directory moved aside)
+    * stands for a crash before the swap-in, "swap-in" for the swap-in
+    * rename itself throwing, "swapped" for a failure after it. */
+  @volatile private[graft] var publishFault: String => Unit = _ => ()
+
+  /** Driver-side publish of staged regions (`kr` → the attempt
+    * directory holding `kr=<id>` and `bloom-kr=<id>`):
+    *
+    *  1. per region, the commit point: the live `kr=<id>` directory (if
+    *     any) moves into a hidden `_graft_aside-<uuid>` directory inside
+    *     the location (`_`-prefixed, without `=`, so no file listing
+    *     descends into it), the staged directory moves in, and the old
+    *     one is deleted — two atomic renames, so the window in which the
+    *     region is missing is no wider than a dynamic overwrite's
+    *     delete-then-rename. A swap-in that throws moves the old
+    *     directory back; [[repair]] restores a region a crash left aside;
+    *  2. unless `register` is false, every published kr is registered if
+    *     the catalog lacks it; the
+    *     `ALTER TABLE ... ADD IF NOT EXISTS PARTITION` command also
+    *     refreshes the table, so later reads list the new files, and
+    *     `refreshByPath` refreshes cached relations over the location
+    *     (what a table write's own commit does);
+    *  3. the blooms publish, stamped no older than their region's data
+    *     directory — the freshness rule of [[loadBloomAt]] — so a crash
+    *     between 1 and 3 leaves the old bloom older than the new data:
+    *     stale, read as absent (fail open), never wrong.
     */
-  private def regionStats(rows: Iterator[InternalRow], krOrd: Int,
-                          keyOrd: Int, keyType: DataType, mBits: Int,
-                          k: Int, stage: String): Array[Region] = {
+  private def publishRegions(spark: SparkSession, name: String,
+                             staged: Seq[(Int, Path)],
+                             register: Boolean): Unit = {
+    val loc = Files.createDirectories(location(spark, name))
+    val aside = loc.resolve("_graft_aside-" + java.util.UUID.randomUUID())
+    staged.foreach { case (kr, dir) =>
+      val live = loc.resolve(s"kr=$kr")
+      val old = aside.resolve(s"kr=$kr")
+      if (Files.exists(live)) {
+        Files.createDirectories(aside)
+        Files.move(live, old, java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+        publishFault("aside")
+      }
+      try {
+        publishFault("swap-in")
+        Files.move(dir.resolve(s"kr=$kr"), live,
+          java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+      } catch {
+        case e: Throwable =>
+          // Earlier regions' old copies are already deleted, so the aside
+          // directory holds at most this one.
+          if (Files.exists(old))
+            Files.move(old, live, java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+          deleteTree(aside)
+          throw e
+      }
+      deleteTree(old)
+      publishFault("swapped")
+    }
+    deleteTree(aside)
+    if (register && staged.nonEmpty)
+      spark.sql(s"ALTER TABLE $name ADD IF NOT EXISTS " +
+        staged.map { case (kr, _) => s"PARTITION (kr=$kr)" }.mkString(" "))
+    spark.catalog.refreshByPath(loc.toUri.toString)
+    val bd = loc.resolve("_graft_blooms")
+    // Legacy layout: the pre-7 store kept ALL blooms in one FILE at this
+    // exact path. Supersede it (a region not rewritten yet has no bloom
+    // file → fail open).
+    if (Files.exists(bd) && !Files.isDirectory(bd)) Files.delete(bd)
+    Files.createDirectories(bd)
+    staged.foreach { case (kr, dir) =>
+      // Stamp no older than the region's data directory, then move over
+      // the region's bloom file (two file ops per region).
+      val bloom = dir.resolve(s"bloom-kr=$kr")
+      val now = java.nio.file.attribute.FileTime.from(java.time.Instant.now())
+      val dataTime = Files.getLastModifiedTime(loc.resolve(s"kr=$kr"))
+      Files.setLastModifiedTime(bloom,
+        if (dataTime.compareTo(now) > 0) dataTime else now)
+      Files.move(bloom, bd.resolve(s"kr=$kr"),
+        java.nio.file.StandardCopyOption.ATOMIC_MOVE,
+        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    }
+  }
+
+  /** Executor-side write and stats fold over ONE partition of whole
+    * regions, contiguous per `kr` (the (kr, key) sort guarantees it).
+    * Per region: one parquet file of the `dataCols` projection (the row
+    * without `kr`) in `<stage>/a<task attempt>/kr=<id>`, the row count,
+    * min and max key (nulls count as rows but bound nothing, as
+    * `count`/`min`/`max` treat them) and the bloom over [[hash60]] of
+    * every key, written beside it as `bloom-kr=<id>`. The attempt
+    * directory keeps a retried task's files apart from a failed
+    * attempt's. Returns one ([[Region]], attempt directory) per region.
+    */
+  private def regionFiles(rows: Iterator[InternalRow], krOrd: Int,
+                          keyOrd: Int, keyType: DataType, mBits: Int, k: Int,
+                          writer: org.apache.spark.sql.GraftParquetWriter,
+                          dataCols: Seq[org.apache.spark.sql.catalyst.expressions.Expression],
+                          stage: String): Array[(Region, String)] = {
+    val tc = org.apache.spark.TaskContext.get()
+    val dir = java.nio.file.Paths.get(stage, "a" + tc.taskAttemptId())
+    val proj = org.apache.spark.sql.catalyst.expressions.UnsafeProjection
+      .create(dataCols)
     val md = java.security.MessageDigest.getInstance("MD5")
     val isString = keyType == StringType
-    val out = scala.collection.mutable.ArrayBuffer.empty[Region]
+    val out = scala.collection.mutable.ArrayBuffer.empty[(Region, String)]
+    var file: org.apache.spark.sql.execution.datasources.OutputWriter = null
     var words: Array[Long] = null
     var kr = 0
     var n = 0L
@@ -894,14 +988,19 @@ object KeyedStore {
     var loL, hiL = 0L
     var loS, hiS: UTF8String = null
     def flush(): Unit = if (words != null) {
-      atomicWriteBytes(java.nio.file.Paths.get(stage, s"kr=$kr"),
+      val f = file
+      file = null
+      f.close()
+      Files.write(dir.resolve(s"bloom-kr=$kr"),
         graft.functions.BloomAgg.toBytes(words))
       val (lo, hi) =
         if (!seen) (null, null)
         else if (isString) (loS.toString, hiS.toString)
         else (Long.box(loL), Long.box(hiL))
-      out += Region(kr, n, lo, hi)
+      out += ((Region(kr, n, lo, hi), dir.toString))
     }
+    // A failed task closes the region file it had open.
+    tc.addTaskCompletionListener[Unit](_ => if (file != null) file.close())
     while (rows.hasNext) {
       val r = rows.next()
       val rkr = r.getInt(krOrd)
@@ -909,7 +1008,10 @@ object KeyedStore {
         flush()
         words = new Array[Long](mBits / 64)
         kr = rkr; n = 0L; seen = false
+        file = writer.open(
+          Files.createDirectories(dir.resolve(s"kr=$kr")).toString)
       }
+      file.write(proj(r))
       n += 1
       if (!r.isNullAt(keyOrd)) {
         val bytes =
@@ -936,7 +1038,7 @@ object KeyedStore {
   /** The store's 60-bit key hash over the UTF-8 bytes of the key's
     * string form: md5 → first 15 hex digits as a base-16 long, i.e.
     * `TextFns.hash60(cast(key as string))` — the persisted bloom hash.
-    * Build ([[regionStats]]) and probe ([[driverHash60]]) both call it,
+    * Build ([[regionFiles]]) and probe ([[driverHash60]]) both call it,
     * so they can never drift.
     */
   private[graft] def hash60(md: java.security.MessageDigest,
@@ -1270,6 +1372,11 @@ object KeyedStore {
   private[graft] def readRegions(spark: SparkSession, name: String): RegionMap =
     readRegionsWithTarget(spark, name)._1
 
+  /** `name TYPE, ...` column list of a table DDL. */
+  private def columnsDdl(fields: Seq[org.apache.spark.sql.types.StructField]): String =
+    fields.map(f => s"`${f.name.replace("`", "``")}` ${f.dataType.sql}")
+      .mkString(", ")
+
   private def keyTyp(df: DataFrame, key: String): String =
     df.schema(key).dataType match {
       case LongType | IntegerType => "long"
@@ -1278,9 +1385,9 @@ object KeyedStore {
         s"KeyedStore supports BIGINT/INT/STRING keys, got ${dt.simpleString}")
     }
 
-  /** CTAS the keyed table: ~n/target key-range regions, key-sorted files
+  /** Build the keyed table: ~n/target key-range regions, key-sorted files
     * within each `kr` directory, the region-boundary sidecar, and one
-    * data-side bloom file per region.
+    * data-side bloom file per region, registered as a table over them.
     */
   def create(spark: SparkSession, name: String, rows: DataFrame, key: String,
              targetRowsPerRegion: Long = DefaultTargetRowsPerRegion): Unit =
@@ -1310,21 +1417,33 @@ object KeyedStore {
     val withKr = regionTransform
       .map(t => t(withKr0.localCheckpoint()).repartition(nRegions, col("kr")))
       .getOrElse(withKr0)
-    // Region directory + row blooms (~10 bits/key at the region target)
-    // fold in the pass that materializes the regions (one region per
-    // range partition); bloom bytes land data-side from the executors,
-    // never on the driver, and publish after the data.
+    // The region files and row blooms (~10 bits/key at the region
+    // target) come from the pass that writes the regions (one region per
+    // range partition) into the table's location; `_meta` and the region
+    // directory follow. The table is registered LAST, over that location
+    // with every region's partition, so a create that fails or crashes
+    // before it leaves no catalog table ([[exists]] stays false and the
+    // next create starts over), and one that throws drops what it made.
     val mBits = graft.functions.BloomAgg.sizeFor(targetRowsPerRegion)
-    val stats = rewriteRegions(spark, name,
-        withKr.sortWithinPartitions(col("kr"), col(key)), key, mBits) { out =>
-      out.write.mode("overwrite").format("parquet").partitionBy("kr")
-        .saveAsTable(name)
+    try {
+      val stats = rewriteRegions(spark, name,
+        withKr.sortWithinPartitions(col("kr"), col(key)), key, mBits,
+        register = false)
       Files.createDirectories(bloomDir(spark, name))
       atomicWrite(bloomDir(spark, name).resolve("_meta"), s"$mBits,$BloomK")
+      writeRegions(spark, name,
+        RegionMap(typ, stats.values.toIndexedSeq.sortBy(_.kr)),
+        targetRowsPerRegion, key)
+      spark.sql(s"CREATE TABLE $name (${columnsDdl(rows.schema)}, kr INT) " +
+        s"USING parquet PARTITIONED BY (kr) LOCATION '${location(spark, name).toUri}'")
+      if (stats.nonEmpty)
+        spark.sql(s"ALTER TABLE $name ADD IF NOT EXISTS " +
+          stats.keys.toSeq.sorted.map(kr => s"PARTITION (kr=$kr)").mkString(" "))
+    } catch {
+      case e: Throwable =>
+        dropWithLocation(spark, name)
+        throw e
     }
-    writeRegions(spark, name,
-      RegionMap(typ, stats.values.toIndexedSeq.sortBy(_.kr)),
-      targetRowsPerRegion, key)
   }
 
   /** Regions a key DataFrame touches: each key's coverage region (the
@@ -1442,9 +1561,9 @@ object KeyedStore {
     * changed keys; returns the post-merge table. Base rows keep their
     * resident region (no accidental row movement); changed rows land in
     * their coverage region. Jobs per call: the touched set (one job over
-    * the change set), the merge's exchange on `kr`, one pass that
-    * materializes the merged regions and folds their stats and blooms,
-    * and the write ([[writeTouched]]) — the touched regions are read
+    * the change set, plus its exchange), the merge's exchange on `kr`,
+    * and one pass that writes each merged region's file and folds its
+    * stats and bloom ([[writeTouched]]) — the touched regions are read
     * once and each is written once, as one file. Writers serialize per
     * REGION ([[withRegionLocks]]); disjoint writers run concurrently.
     *
@@ -1527,92 +1646,24 @@ object KeyedStore {
     spark.table(name).drop("kr")
   }
 
-  /** Land `out` via DYNAMIC partition overwrite (only partitions present
-    * in the output are rewritten) — the one write primitive every
-    * mutation path shares. The session conf is managed by a re-entrant
-    * JVM-wide guard: with region-disjoint writers running CONCURRENTLY,
-    * a naive set/restore pair races (writer A's restore lands while B's
-    * insert is still planning — B would then OVERWRITE STATICALLY and
-    * truncate the table); the guard restores the user's value only when
-    * the last concurrent writer exits.
-    */
-  private object OverwriteModeGuard {
-    private val Key = "spark.sql.sources.partitionOverwriteMode"
-    // Depth/saved-value PER SparkSession (identity — sessions don't
-    // define equality): the conf being guarded is session-scoped, so a
-    // JVM-global depth would leave a second session's conf untouched
-    // (static overwrite → silent table truncation) whenever it entered
-    // while another session's writer was in flight.
-    private val state =
-      new java.util.IdentityHashMap[SparkSession, (Int, Option[String])]
-    def enter(spark: SparkSession): Unit = synchronized {
-      Option(state.get(spark)) match {
-        case None =>
-          val saved = spark.conf.getOption(Key)
-          spark.conf.set(Key, "dynamic")
-          state.put(spark, (1, saved))
-        case Some((depth, saved)) =>
-          state.put(spark, (depth + 1, saved))
-      }
-    }
-    def exit(spark: SparkSession): Unit = synchronized {
-      val (depth, saved) = state.get(spark)
-      if (depth > 1) state.put(spark, (depth - 1, saved))
-      else {
-        saved match {
-          case Some(v) => spark.conf.set(Key, v)
-          case None => spark.conf.unset(Key)
-        }
-        state.remove(spark)
-      }
-    }
-  }
-
-  /** One COMMITTER STAGE at a time per table (JVM-wide): Spark's file
-    * committer stages every job under the shared `<table>/_temporary/0`,
-    * so two temporally-overlapping insertInto jobs against one table can
-    * delete each other's staging (one job's commit/cleanup removes the
-    * directory while the peer is between setup and commit) — the region
-    * locks guarantee LOGICAL disjointness but not write-path isolation.
-    * The expensive part of a merge (read + merge + localCheckpoint
-    * materialization) stays concurrent; only the staged write + commit
-    * serializes. Cross-JVM writers against one warehouse additionally
-    * need a committer with per-job staging — the same deployment rule
-    * any concurrent Spark writers to one path carry.
-    */
-  private val writeStageLocks =
-    new java.util.concurrent.ConcurrentHashMap[String, Object]
-
-  private def dynamicOverwriteInto(spark: SparkSession, name: String,
-                                   out: DataFrame): Unit = {
-    val stage = writeStageLocks
-      .computeIfAbsent(name.toLowerCase, _ => new Object)
-    stage.synchronized {
-      OverwriteModeGuard.enter(spark)
-      try out.write.mode("overwrite").insertInto(name)
-      finally OverwriteModeGuard.exit(spark)
-    }
-  }
-
   /** Shared commit path of [[upsert]]/[[mergeInto]] (and so of every
     * streaming sink that lands through them). `merged` holds the
     * post-merge rows of the touched regions, `kr` attached. Passes:
     *
     *  1. one exact exchange on `kr` puts each touched region WHOLE in
     *     one task, sorted by (kr, key);
-    *  2. ONE job materializes that as a local checkpoint and, in the
-    *     same pass, folds each region's (rows, min, max) and bloom
-    *     ([[rewriteRegions]]) — the touched regions are read once;
-    *  3. the checkpoint lands via dynamic partition overwrite, one file
-    *     per region — each region is written once. The checkpoint breaks
-    *     the read/overwrite cycle without a staging copy (at
-    *     multi-executor scale, substitute a reliable checkpoint dir);
-    *  4. driver-side file ops only: publish the staged blooms, drop
-    *     partitions the merge emptied (dynamic overwrite only rewrites
-    *     partitions PRESENT in the output — an all-keys-deleted region
-    *     would otherwise keep its stale files), and refresh the touched
-    *     sidecar entries so later GET/scan pruning sees keys that moved
-    *     past the old recorded bounds.
+    *  2. ONE job writes each region's one file into staging and, in
+    *     the same pass, folds its (rows, min, max) and bloom
+    *     ([[rewriteRegions]]) — the touched regions are read once and
+    *     each is written once;
+    *  3. driver-side file ops only ([[publishRegions]]): swap each
+    *     region directory in, register new partitions, publish the
+    *     blooms;
+    *  4. drop partitions the merge emptied (only regions PRESENT in the
+    *     output are swapped — an all-keys-deleted region would otherwise
+    *     keep its stale files), and refresh the touched sidecar entries
+    *     so later GET/scan pruning sees keys that moved past the old
+    *     recorded bounds.
     */
   private def writeTouched(spark: SparkSession, name: String, key: String,
                            rm: RegionMap, touchedKr: Seq[Int],
@@ -1625,9 +1676,9 @@ object KeyedStore {
     val planned = merged
       .repartition(math.max(1, touchedKr.size), col("kr"))
       .sortWithinPartitions(col("kr"), col(key))
-      .select(cols.map(col): _*) // insertInto is positional
+      .select(cols.map(col): _*) // the files keep the table's column order
     val stats = rewriteRegions(spark, name, planned, key,
-      readBloomBits(spark, name, target))(dynamicOverwriteInto(spark, name, _))
+      readBloomBits(spark, name, target))
     val touched = touchedKr.toSet
     touchedKr.filterNot(stats.contains).foreach { krv =>
       spark.sql(s"ALTER TABLE $name DROP IF EXISTS PARTITION (kr=$krv)")
@@ -1664,8 +1715,8 @@ object KeyedStore {
     * rewritten into ~rows/target key-range sub-regions under FRESH kr
     * ids (the region directory is min-key-sorted, so id order need not
     * match key order); every other region's files are untouched. Cost is
-    * O(oversized regions), read-then-write broken by the same
-    * localCheckpoint materialization as the merge path. The updated
+    * O(oversized regions), through the same staged region write as the
+    * merge path. The updated
     * directory is published BEFORE the superseded partition is dropped:
     * a crash can orphan an unlisted partition ([[repair]] reclaims it)
     * but never leaves the directory pointing at dropped data.
@@ -1701,8 +1752,7 @@ object KeyedStore {
         .withColumn("kr", spark_partition_id() + lit(firstKr))
         .sortWithinPartitions(col("kr"), col(key))
         .select(cols.map(col): _*)
-      val stats = rewriteRegions(spark, name, planned, key, mBits)(
-        dynamicOverwriteInto(spark, name, _))
+      val stats = rewriteRegions(spark, name, planned, key, mBits)
       regions = regions.filterNot(_.kr == r.kr) ++ stats.values
       // Directory first (covers the new partitions), THEN drop the old:
       // the crash-safe order — get/scan never point at dropped data.
@@ -1782,8 +1832,7 @@ object KeyedStore {
         .repartition(math.max(1, mapping.values.toSet.size), col("kr"))
         .sortWithinPartitions(col("kr"), col(key))
         .select(cols.map(col): _*)
-      stats = rewriteRegions(spark, name, planned, key, mBits)(
-        dynamicOverwriteInto(spark, name, _))
+      stats = rewriteRegions(spark, name, planned, key, mBits)
     }
     val gone = mergeBins.flatten.map(_.kr).toSet
     val survivors = rm.regions.filterNot(r => gone.contains(r.kr)) ++
@@ -1805,15 +1854,37 @@ object KeyedStore {
     rm.regions.size - regions.size
   }
 
-  /** Crash-recovery sweep: drop any table partition whose kr is NOT in
-    * the region directory (an orphan from a crash between a split/merge
-    * publish and its partition drop — invisible to get/scan, but a raw
-    * full-table read would double-count it) and delete bloom files with
-    * no directory entry. Returns the number of orphan partitions
-    * reclaimed. Safe to run any time; holds the writer lock.
+  /** Crash-recovery sweep, safe to run any time (it holds the writer
+    * lock, so live writers are drained):
+    *  - a region a commit left ASIDE (crash between moving the live
+    *    directory aside and moving the new one in) is moved back; one
+    *    whose new directory did land is deleted;
+    *  - any partition whose kr is NOT in the region directory — in the
+    *    catalog (a crash between a split/merge publish and its partition
+    *    drop: invisible to get/scan, but a raw full-table read would
+    *    double-count it) or only on disk (a crash before a fresh region
+    *    was registered) — is dropped, and a listed region directory the
+    *    catalog lacks is registered;
+    *  - bloom files with no directory entry, writer staging and
+    *    superseded directory chunks are deleted.
+    * Run it after a commit failed mid-publish, too. Returns the number
+    * of orphan partitions reclaimed.
     */
   def repair(spark: SparkSession, name: String): Int =
     withStructuralLock(spark, name) {
+      val loc = location(spark, name)
+      def children(p: Path): List[Path] =
+        if (!Files.isDirectory(p)) Nil
+        else scala.util.Using.resource(Files.list(p))(_.iterator().asScala.toList)
+      children(loc).filter(_.getFileName.toString.startsWith("_graft_aside-"))
+        .foreach { aside =>
+          children(aside).foreach { old =>
+            val live = loc.resolve(old.getFileName.toString)
+            if (Files.exists(live)) deleteTree(old)
+            else Files.move(old, live, java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+          }
+          deleteTree(aside)
+        }
       val rm = readRegions(spark, name)
       val listed = rm.regions.map(_.kr).toSet
       val parts = spark.sql(s"SHOW PARTITIONS $name").collect()
@@ -1822,24 +1893,25 @@ object KeyedStore {
       orphans.foreach { krv =>
         spark.sql(s"ALTER TABLE $name DROP IF EXISTS PARTITION (kr=$krv)")
       }
-      val bd = bloomDir(spark, name)
-      if (Files.exists(bd))
-        scala.util.Using.resource(Files.list(bd)) { s =>
-          s.iterator().asScala.foreach { f =>
-            val fn = f.getFileName.toString
-            if (fn.startsWith("kr=") && !listed(fn.stripPrefix("kr=").toInt))
-              Files.deleteIfExists(f)
-          }
-        }
-      // Bloom staging left by a writer that crashed before publishing
-      // (live writers are drained: this runs under the structural lock).
-      val parent = location(spark, name).getParent
-      if (Files.exists(parent))
-        scala.util.Using.resource(Files.list(parent)) { s =>
-          s.iterator().asScala.toList
-            .filter(_.getFileName.toString.startsWith(bloomStagePrefix(name)))
-            .foreach(deleteTree)
-        }
+      // On disk: an unlisted region directory is dropped, and a listed
+      // one the catalog lacks (a crash between its swap and its
+      // registration) is registered — its swap committed it.
+      val (onDisk, unlisted) = children(loc).map(_.getFileName.toString)
+        .filter(_.startsWith("kr=")).map(_.stripPrefix("kr=").toInt)
+        .partition(listed)
+      unlisted.foreach(kr => deleteTree(loc.resolve(s"kr=$kr")))
+      if (onDisk.nonEmpty)
+        spark.sql(s"ALTER TABLE $name ADD IF NOT EXISTS " +
+          onDisk.map(kr => s"PARTITION (kr=$kr)").mkString(" "))
+      children(bloomDir(spark, name)).foreach { f =>
+        val fn = f.getFileName.toString
+        if (fn.startsWith("kr=") && !listed(fn.stripPrefix("kr=").toInt))
+          Files.deleteIfExists(f)
+      }
+      children(loc.getParent).filter { p =>
+        val fn = p.getFileName.toString
+        fn.startsWith(stagePrefix(name)) || fn.startsWith(legacyStagePrefix(name))
+      }.foreach(deleteTree)
       // Directory-chunk GC: superseded chunk files whose immediate
       // delete a crashed writer missed (crash between the list publish
       // and its GC loop).
@@ -1860,7 +1932,10 @@ object KeyedStore {
           }
         }
       }
-      orphans.length
+      // Restored or dropped directories change what a listing finds.
+      spark.catalog.refreshTable(name)
+      spark.catalog.refreshByPath(loc.toUri.toString)
+      (orphans ++ unlisted).distinct.length
     }
 
   /** Drop the table and its data directory (cleanup hook for temp
@@ -1910,9 +1985,7 @@ object KeyedStore {
       // over the copied location; partition metadata recovered from the
       // kr= directories (the catalog needs it for the per-region
       // PartitionFilters every read path relies on).
-      val dataCols = spark.table(src).schema.fields
-        .filterNot(_.name == "kr")
-        .map(f => s"`${f.name}` ${f.dataType.sql}").mkString(", ")
+      val dataCols = columnsDdl(spark.table(src).schema.filterNot(_.name == "kr"))
       spark.sql(s"CREATE TABLE $dst ($dataCols, kr INT) USING parquet " +
         s"PARTITIONED BY (kr) LOCATION '${to.toUri}'")
       spark.sql(s"ALTER TABLE $dst RECOVER PARTITIONS")

@@ -782,18 +782,33 @@ object SourceSinkOps {
     * (~650 KB at sf0.01) split ~10 ways, the same decision a real
     * cluster makes at 256 MB defaults with a multi-GB hot key.
     */
-  def qSkewAqeJoin(spark: SparkSession, dir: String): DataFrame = {
-    val confs = Seq(
+  def qSkewAqeJoin(spark: SparkSession, dir: String): DataFrame =
+    withConfs(spark,
       "spark.sql.autoBroadcastJoinThreshold" -> "-1",
       "spark.sql.adaptive.skewJoin.enabled" -> "true",
       "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "2.0",
       "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "65536",
-      "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "65536")
-    val prev = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+      "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "65536") {
+      skewAqeJoin(spark, dir).localCheckpoint(true)
+    }
+
+  /** Run `body` with `confs` set, then put each key back as the caller
+    * had it: its explicit value, or unset — not Spark's registered
+    * default, which `spark.conf.getOption` answers for an unset key.
+    * The engine's execution profile ([[graft.Graft.tuneExecution]],
+    * idempotent) is applied first, so a first table read inside `body`
+    * cannot skip it and the restore keeps it.
+    */
+  private[graft] def withConfs[T](spark: SparkSession,
+                                  confs: (String, String)*)(body: => T): T = {
+    graft.Graft.tuneExecution(spark)
+    val set = spark.sessionState.conf
+    val prev = confs.map { case (k, _) =>
+      k -> (if (set.contains(k)) Some(set.getConfString(k)) else None) }
     confs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try skewAqeJoin(spark, dir).localCheckpoint(true)
+    try body
     finally prev.foreach { case (k, v) =>
-      v.fold(spark.conf.unset(k))(v0 => spark.conf.set(k, v0)) }
+      v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
   }
 
   /** Runtime Bloom-filter join pruning — the row-level sibling of DPP:
@@ -824,17 +839,13 @@ object SourceSinkOps {
     * probe scan). Same execution-time-conf pattern as [[qSkewAqeJoin]]:
     * materialize under the overrides, restore after.
     */
-  def qBloomPruneJoin(spark: SparkSession, dir: String): DataFrame = {
-    val confs = Seq(
+  def qBloomPruneJoin(spark: SparkSession, dir: String): DataFrame =
+    withConfs(spark,
       "spark.sql.autoBroadcastJoinThreshold" -> "-1",
       "spark.sql.optimizer.runtime.bloomFilter.enabled" -> "true",
-      "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold" -> "1024")
-    val prev = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    confs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try bloomPruneJoin(spark, dir).localCheckpoint(true)
-    finally prev.foreach { case (k, v) =>
-      v.fold(spark.conf.unset(k))(v0 => spark.conf.set(k, v0)) }
-  }
+      "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold" -> "1024") {
+      bloomPruneJoin(spark, dir).localCheckpoint(true)
+    }
 
   /** Z-order (Morton) layout key — bucket two dimensions to 10 bits each
     * and interleave via the native [[graft.functions.MortonInterleave]]

@@ -1,7 +1,5 @@
 package org.apache.spark.sql
 
-import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.execution.LogicalRDD
 
 /** `localCheckpoint` that does NOT inherit the pre-checkpoint plan's
@@ -49,19 +47,6 @@ object GraftCheckpointBridge {
       leaf.outputOrdering, leaf.isStreaming, leaf.stream)(
       c.sparkSession, None, None)
     classic.Dataset.ofRows(c.sparkSession, clean)
-  }
-
-  /** Lazy `localCheckpoint` plus the RDD behind its leaf. The caller
-    * materializes the checkpoint with its OWN job over that RDD — the
-    * RDD is persisted, so every partition the job computes is cached,
-    * and the job's end seals the local checkpoint without a second
-    * pass — so one job both pins the rows and folds them (the keyed store's per-region
-    * stats, [[graft.ops.KeyedStore]]). The DataFrame keeps the leaf's
-    * partitioning and ordering, like an eager `localCheckpoint`.
-    */
-  def localCheckpointWithRdd(df: Dataset[Row]): (DataFrame, RDD[InternalRow]) = {
-    val c = df.localCheckpoint(false).asInstanceOf[classic.Dataset[Row]]
-    (c, leafOf(c).rdd)
   }
 
   private def leafOf(c: classic.Dataset[Row]): LogicalRDD =

@@ -40,4 +40,23 @@ class GraftSessionSpec extends AnyFunSuite {
     assert(fresh.conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes") ==
       sys.env.getOrElse("GRAFT_ADVISORY_PARTITION_BYTES", "4m"))
   }
+
+  test("qSkewAqeJoin as a session's first table read keeps the profile and the caller's settings") {
+    val advisory = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    val s = spark.newSession()
+    ops.SourceSinkOps.qSkewAqeJoin(s, Sf)
+    assert(s.conf.get(advisory) ==
+      sys.env.getOrElse("GRAFT_ADVISORY_PARTITION_BYTES", "4m"))
+    // A key the caller never set is unset again, not pinned to Spark's
+    // registered default.
+    assert(!s.sessionState.conf.contains(
+      "spark.sql.adaptive.skewJoin.skewedPartitionFactor"))
+    assert(!s.sessionState.conf.contains("spark.sql.autoBroadcastJoinThreshold"))
+    val c = spark.newSession()
+    c.conf.set(advisory, "2m")
+    c.conf.set("spark.sql.autoBroadcastJoinThreshold", "1m")
+    ops.SourceSinkOps.qSkewAqeJoin(c, Sf)
+    assert(c.conf.get(advisory) == "2m")
+    assert(c.conf.get("spark.sql.autoBroadcastJoinThreshold") == "1m")
+  }
 }

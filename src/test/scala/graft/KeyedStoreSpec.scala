@@ -1342,14 +1342,99 @@ class KeyedStoreSpec extends AnyFunSuite {
     val all = rm.regions.map(r => (r.min.asInstanceOf[Long], "U", "w")).toDF("k", "op", "v")
     val one = Seq((5L, "U", "w5")).toDF("k", "op", "v")
     // Pinned: coverage (2: exchange + collect), the exchange's map stage,
-    // the fold that materializes the regions, and the write. A sampled
-    // range exchange or a separate stats pass adds jobs and fails here.
+    // and the one job that writes the regions and folds their stats. A
+    // sampled range exchange, a separate stats pass or a separate write
+    // job adds jobs and fails here.
     assert(jobsOf(KeyedStore.upsert(spark, name, "k", all)) == AllRegionUpsertJobs)
     assert(jobsOf(KeyedStore.upsert(spark, name, "k", one)) == OneRegionUpsertJobs)
     assert(KeyedStore.get(spark, name, "k", Seq(5L, rm.regions.last.min))
       .collect().map(_.getString(1)).toSet == Set("w5", "w"))
   }
 
-  private val AllRegionUpsertJobs = 5
-  private val OneRegionUpsertJobs = 5
+  private val AllRegionUpsertJobs = 4
+  private val OneRegionUpsertJobs = 4
+
+  test("a commit failed mid-publish: repair leaves every key readable exactly once") {
+    import spark.implicits._
+    import scala.jdk.CollectionConverters._
+    val name = "graft_keyed_spec_publish_fault"
+    val root = KeyedStore.location(spark, name)
+    def names(p: java.nio.file.Path): Seq[String] =
+      if (!java.nio.file.Files.isDirectory(p)) Nil
+      else scala.util.Using.resource(java.nio.file.Files.list(p))(
+        _.iterator().asScala.map(_.getFileName.toString).toList)
+    def asides = names(root).filter(_.startsWith("_graft_aside"))
+    def staging = names(root.getParent).filter(_.startsWith(name + ".stage-"))
+    // Even keys resident; each change updates a region's min key and
+    // inserts the odd key after it, so a region is either all old or
+    // all new.
+    val evens = (0L until 192L by 2)
+    Seq("swapped", "aside", "swap-in").foreach { step =>
+      KeyedStore.create(spark, name, evens.map(k => (k, s"v$k")).toDF("k", "v"),
+        "k", targetRowsPerRegion = 16)
+      val mins = KeyedStore.readRegions(spark, name).regions
+        .map(_.min.asInstanceOf[Long])
+      assert(mins.size >= 4)
+      val changes = mins.flatMap(m => Seq((m, "U", "new"), (m + 1, "I", "ins")))
+        .toDF("k", "op", "v")
+      var fired = false
+      KeyedStore.publishFault = s =>
+        if (s == step && !fired) { fired = true; throw new RuntimeException(s"fault at $step") }
+      val e = try intercept[RuntimeException](KeyedStore.upsert(spark, name, "k", changes))
+        finally KeyedStore.publishFault = _ => ()
+      assert(e.getMessage == s"fault at $step")
+      assert(staging.isEmpty, "the failed commit left its staging")
+      // A crash between the two renames leaves the old region aside; a
+      // swap-in that throws moves it back, so reads need no repair.
+      if (step == "aside") assert(asides.nonEmpty)
+      if (step == "swap-in") {
+        assert(asides.isEmpty)
+        assert(spark.table(name).collect().map(_.getString(1)).sorted.toSeq ==
+          evens.map(k => s"v$k").sorted)
+      }
+      KeyedStore.repair(spark, name)
+      assert(asides.isEmpty && staging.isEmpty)
+      val rows = spark.table(name).collect().map(r => r.getLong(0) -> r.getString(1))
+      val ks = rows.map(_._1)
+      assert(ks.distinct.length == ks.length, "a key is readable twice")
+      assert(ks.filter(_ % 2 == 0).toSet == evens.toSet)
+      // Region by region: the update landed iff the insert did.
+      val got = rows.toMap
+      mins.foreach(m => assert((got(m) == "new") == got.contains(m + 1), m))
+      assert(mins.count(m => got(m) == "new") == (if (step == "swapped") 1 else 0))
+      // GET agrees (a swapped region's stale bloom fails open), and the
+      // store takes the same upsert cleanly afterwards.
+      assert(KeyedStore.get(spark, name, "k", mins ++ mins.map(_ + 1)).collect()
+        .map(r => r.getLong(0) -> r.getString(1)).toMap ==
+        (mins ++ mins.map(_ + 1)).flatMap(k => got.get(k).map(k -> _)).toMap)
+      KeyedStore.upsert(spark, name, "k", changes)
+      assert(KeyedStore.get(spark, name, "k", mins ++ mins.map(_ + 1)).collect()
+        .map(_.getString(1)).sorted.toSeq ==
+        (Seq.fill(mins.size)("ins") ++ Seq.fill(mins.size)("new")))
+      assert(spark.table(name).count() == evens.size + mins.size)
+    }
+  }
+
+  test("a create that fails leaves no table, and the next create starts over") {
+    import spark.implicits._
+    val name = "graft_keyed_spec_create_fault"
+    val rows = (0L until 64L).map(k => (k, s"v$k")).toDF("k", "v")
+    // Fails in publish, after the region files are written.
+    KeyedStore.publishFault = s => if (s == "swapped") throw new RuntimeException("fault")
+    try intercept[RuntimeException](
+      KeyedStore.create(spark, name, rows, "k", targetRowsPerRegion = 16))
+    finally KeyedStore.publishFault = _ => ()
+    assert(!KeyedStore.exists(spark, name))
+    assert(!java.nio.file.Files.exists(KeyedStore.location(spark, name)))
+    // Fails inside a job: the payload column throws on one row.
+    val boom = udf((v: String) => if (v == "v40") throw new IllegalStateException("row") else v)
+    intercept[Exception](KeyedStore.create(spark, name,
+      rows.withColumn("v", boom(col("v"))), "k", targetRowsPerRegion = 16))
+    assert(!KeyedStore.exists(spark, name))
+    KeyedStore.create(spark, name, rows, "k", targetRowsPerRegion = 16)
+    assert(KeyedStore.get(spark, name, "k", Seq(40L)).collect()
+      .map(_.getString(1)).toSeq == Seq("v40"))
+    assert(spark.table(name).count() == 64)
+    KeyedStore.drop(spark, name)
+  }
 }

@@ -202,41 +202,31 @@ class PlanShapeSpec extends AnyFunSuite {
   test("AQE splits the skewed join partition (declarative twin of salting)") {
     // Thresholds sized to the sf0.001 fixture (hot partition a few KB compressed);
     // the decision logic is identical to 256 MB defaults at cluster scale.
-    // Apply the engine's one-time execution profile FIRST so the
-    // fixture-sized advisory override below wins (tuneExecution is
-    // once-per-session and never fights explicit settings).
-    graft.Graft.tuneExecution(spark)
-    val confs = Seq(
+    // withConfs applies the engine's execution profile first, so the
+    // fixture-sized advisory override below wins.
+    ops.SourceSinkOps.withConfs(spark,
       "spark.sql.autoBroadcastJoinThreshold" -> "-1",
       "spark.sql.adaptive.skewJoin.enabled" -> "true",
       "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "1.2",
       "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "1024",
-      "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "1024")
-    val prev = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    confs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try {
+      "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "1024") {
       val df = ops.SourceSinkOps.skewAqeJoin(spark, Sf)
       df.collect() // finalize the adaptive plan
       val plan = df.queryExecution.executedPlan.toString
       assert(plan.contains("skewed"), plan.take(4000))
-    } finally prev.foreach { case (k, v) =>
-      v.fold(spark.conf.unset(k))(v0 => spark.conf.set(k, v0)) }
+    }
   }
 
   test("runtime bloom filter prunes the probe side of the selective join") {
-    val confs = Seq(
+    ops.SourceSinkOps.withConfs(spark,
       "spark.sql.autoBroadcastJoinThreshold" -> "-1",
       "spark.sql.optimizer.runtime.bloomFilter.enabled" -> "true",
-      "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold" -> "1024")
-    val prev = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    confs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try {
+      "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold" -> "1024") {
       val opt = ops.SourceSinkOps.bloomPruneJoin(spark, Sf)
         .queryExecution.optimizedPlan.toString
       assert(opt.contains("might_contain") && opt.contains("bloom_filter_agg"),
         opt.take(4000))
-    } finally prev.foreach { case (k, v) =>
-      v.fold(spark.conf.unset(k))(v0 => spark.conf.set(k, v0)) }
+    }
   }
 
   test("paragraph dedup windows see only digests — text never shuffles") {
