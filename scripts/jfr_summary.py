@@ -11,14 +11,20 @@ other) and per component (checkpoint / SizeEstimator, task
 deserialization, parquet read and write, Janino, optimizer, ...), plus the
 group x component table.
 
-A sample goes to the first component, in the order of COMPONENTS, that
-matches any frame of its stack, so a component counts the samples spent
-anywhere under it (Janino under the optimizer counts as Janino).
+A sample goes to the component that matches the frame nearest the leaf
+of its stack (the order of COMPONENTS breaks a tie within one frame). So
+a component counts the samples spent in its own code and in callees no
+component claims: Janino under the optimizer counts as Janino, and a
+generated operator running under a shuffle map task's writer counts as
+"generated operators", not "shuffle". The AQE threads that plan and
+submit query stages (`shuffle-exchange-*`, `ResultQueryStageExecution-*`)
+count as driver.
 
 Usage:
     jfr print --json --stack-depth 96 --events jdk.ExecutionSample rec.jfr \\
         | python3 scripts/jfr_summary.py - --from 20 --to 60
     python3 scripts/jfr_summary.py rec.json --since 2026-10-19T11:02:00 --threads 10
+    python3 scripts/jfr_summary.py --selftest
 
 `--from/--to` are seconds after the first sample; `--since/--until` are
 UTC ISO-8601 times. The output of `jfr print --json` for a long recording
@@ -32,7 +38,8 @@ import datetime
 import json
 import sys
 
-# (component, substrings of "package.Class.method"); the first match wins.
+# (component, substrings of "package.Class.method"). The match nearest the
+# leaf wins; within one frame, the first component listed.
 COMPONENTS = [
     ("checkpoint: SizeEstimator", ["org.apache.spark.util.SizeEstimator"]),
     ("checkpoint: block put", ["org.apache.spark.storage.BlockManager.doPutIterator"]),
@@ -69,7 +76,8 @@ COMPONENTS = [
 ]
 
 DRIVER_PREFIXES = ("main", "dag-scheduler", "task-result-getter", "broadcast-exchange",
-                   "subquery", "spark-listener-group", "driver-")
+                   "subquery", "spark-listener-group", "driver-", "shuffle-exchange",
+                   "ResultQueryStageExecution")
 
 
 def thread_group(name):
@@ -81,15 +89,56 @@ def thread_group(name):
 
 
 def component(frames):
-    names = []
+    """Component of a stack given leaf first, as `jfr print` lists it."""
     for f in frames:
         m = f.get("method") or {}
         cls = ((m.get("type") or {}).get("name") or "").replace("/", ".")
-        names.append(cls + "." + (m.get("name") or ""))
-    for comp, needles in COMPONENTS:
-        if any(n in s for s in names for n in needles):
-            return comp
+        name = cls + "." + (m.get("name") or "")
+        for comp, needles in COMPONENTS:
+            if any(n in name for n in needles):
+                return comp
     return "other"
+
+
+def selftest():
+    """Pin the attribution rules on synthetic stacks; exit 1 on a miss."""
+    def stack(*names):  # leaf first
+        return [{"method": {"type": {"name": n.rsplit(".", 1)[0].replace(".", "/")},
+                            "name": n.rsplit(".", 1)[1]}} for n in names]
+    map_task = ["org.apache.spark.shuffle.sort.BypassMergeSortShuffleWriter.write",
+                "org.apache.spark.shuffle.ShuffleWriteProcessor.write",
+                "org.apache.spark.scheduler.ShuffleMapTask.runTask"]
+    cases = [
+        ("generated operator in a map task", "generated operators", component(stack(
+            "java.time.Instant.atZone",
+            "org.apache.spark.sql.catalyst.expressions.GeneratedClass$GeneratedIteratorForCodegenStage1.processNext",
+            *map_task))),
+        ("parquet decode in a map task", "parquet read", component(stack(
+            "org.apache.spark.sql.execution.datasources.parquet.VectorizedParquetRecordReader.nextBatch",
+            "org.apache.spark.sql.catalyst.expressions.GeneratedClass$GeneratedIteratorForCodegenStage1.processNext",
+            *map_task))),
+        ("shuffle write leaf", "shuffle", component(stack(
+            "org.apache.spark.storage.DiskBlockObjectWriter.write", *map_task))),
+        ("shuffle read leaf", "shuffle", component(stack(
+            "org.apache.spark.storage.ShuffleBlockFetcherIterator.next",
+            "org.apache.spark.sql.catalyst.expressions.GeneratedClass$GeneratedIteratorForCodegenStage2.processNext",
+            "org.apache.spark.scheduler.ResultTask.runTask"))),
+        ("janino under the optimizer", "janino compile", component(stack(
+            "org.codehaus.janino.UnitCompiler.compile",
+            "org.apache.spark.sql.catalyst.optimizer.ConstantFolding$.apply"))),
+        ("task runner only", "scheduler", component(stack(
+            "org.apache.spark.scheduler.ResultTask.runTask", "java.lang.Thread.run"))),
+        ("no known frame", "other", component(stack("java.lang.Thread.run"))),
+        ("AQE shuffle-stage thread", "driver", thread_group("shuffle-exchange-3")),
+        ("AQE result-stage thread", "driver", thread_group("ResultQueryStageExecution-1")),
+        ("executor thread", "executor", thread_group("Executor task launch worker for task 1.0")),
+        ("unknown thread", "other", thread_group("process reaper")),
+    ]
+    bad = [(what, want, got) for what, want, got in cases if got != want]
+    for what, want, got in bad:
+        print(f"selftest FAIL: {what}: want {want}, got {got}")
+    print(f"selftest: {len(cases) - len(bad)}/{len(cases)} ok")
+    sys.exit(1 if bad else 0)
 
 
 def parse_time(s):
@@ -140,13 +189,18 @@ def events(stream, chunk=1 << 20):
 
 def main():
     ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
-    ap.add_argument("input", help="`jfr print --json` output, or - for stdin")
+    ap.add_argument("input", nargs="?", help="`jfr print --json` output, or - for stdin")
     ap.add_argument("--from", dest="t_from", type=float, help="seconds after the first sample")
     ap.add_argument("--to", dest="t_to", type=float, help="seconds after the first sample")
     ap.add_argument("--since", help="UTC ISO-8601 start time")
     ap.add_argument("--until", help="UTC ISO-8601 end time")
     ap.add_argument("--threads", type=int, default=0, help="also list the N busiest thread names")
+    ap.add_argument("--selftest", action="store_true", help="check the attribution rules and exit")
     a = ap.parse_args()
+    if a.selftest:
+        selftest()
+    if a.input is None:
+        ap.error("the input is required")
 
     samples = []  # (time, thread name, component)
     src = sys.stdin if a.input == "-" else open(a.input, encoding="utf-8")

@@ -64,7 +64,11 @@ object Tables {
     * physical type: the nanos (INT64) and instant forms, not the
     * TIMESTAMP_NTZ form (TIMESTAMP(MICROS), isAdjustedToUTC=false) the
     * sf fixtures ship, whose scans read every row group. Callers project
-    * `ts_raw`/`ts_nanos` away after filtering.
+    * `ts_raw`/`ts_nanos` away after filtering. A caller that needs only
+    * date parts of a TIMESTAMP_NTZ `ts_raw` under a fixed-offset session
+    * zone may read them from `ts_raw` cast to DATE, as FlightOps does:
+    * they equal those of `ts`, and `ts` (with its per-row zone
+    * conversion) is then pruned from the plan.
     */
   def eventsWithRawTs(s: SparkSession, d: String): DataFrame = {
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")

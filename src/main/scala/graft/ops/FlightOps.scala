@@ -2,7 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.IntegerType
+import org.apache.spark.sql.types.{DateType, IntegerType, TimestampNTZType}
 import graft.functions.JsonFunctions.flatJsonIntegral
 
 /** Reproduction layer: the reference's full operator surface re-expressed as
@@ -31,12 +31,19 @@ import graft.functions.JsonFunctions.flatJsonIntegral
   *    `HPopulate/src/main/java/org/northeastern/Main.java:54-73,97-100`
   *
   * Scale notes: each query is a pure Catalyst plan — filters and column
-  * pruning reach the parquet scan; the two-level aggregate runs as partial
+  * pruning reach the parquet scan; every aggregate runs as partial
   * (map-side) HashAggregate → single shuffle on the group keys → final
   * HashAggregate, which is strictly better than the reference's
-  * combiner-less MapReduce (full shuffle volume, SURVEY.md §4). The pivot
-  * groups by carrier only (low cardinality), so the final exchange is tiny
-  * regardless of input scale.
+  * combiner-less MapReduce (full shuffle volume, SURVEY.md §4). Secondary
+  * too combines before any exchange: its 10-way carrier partitioning
+  * applies to the aggregated rows, not to the scan.
+  *
+  * A result bounded by the carrier count (or carriers × 12) is sorted in
+  * ONE partition ([[sortedSmall]]) instead of by `orderBy`: its rows are
+  * a few hundred at any input scale, so one task holds and sorts them
+  * all, while `orderBy`'s range exchange costs a sampling job (which
+  * re-runs the whole post-shuffle stage) plus a map stage. Only the
+  * row-level [[qFilterYear]] keeps `orderBy`.
   */
 object FlightOps {
   val TargetYear = 2024 // fixture analog of TARGET_YEAR=2008 (HCompute/...Main.java:75)
@@ -45,15 +52,39 @@ object FlightOps {
     * from the JSON `props` (byte scan, `get_json_object` fallback);
     * cancelled-analog = k%7==0, diverted-analog = k%11==0 — deterministic
     * stand-ins for the "1.00"-flag columns.
+    *
+    * `year`/`month` are those of the session-zone `ts`. Where
+    * [[wallClockDates]] holds they are read from `ts_raw` as a wall-clock
+    * DATE instead, which is the same value without the per-row NTZ →
+    * session-zone cast and its zone-rule lookups; every other form keeps
+    * the cast path.
     */
-  private def flights(spark: SparkSession, dir: String): DataFrame =
-    graft.Tables.eventsWithRawTs(spark, dir).select(
+  private[graft] def flights(spark: SparkSession, dir: String): DataFrame = {
+    val events = graft.Tables.eventsWithRawTs(spark, dir)
+    val date = if (wallClockDates(spark, events)) col("ts_raw").cast(DateType) else col("ts")
+    events.select(
       col("event_type").as("carrier"),
-      year(col("ts")).as("year"),
-      month(col("ts")).as("month"),
+      year(date).as("year"),
+      month(date).as("month"),
       col("value").as("delay"),
       flatJsonIntegral(col("props"), "k", IntegerType).as("k"),
       col("ts_raw"))
+  }
+
+  private def sessionZone(spark: SparkSession): java.time.ZoneId =
+    java.time.ZoneId.of(spark.conf.get("spark.sql.session.timeZone"))
+
+  /** True when `ts_raw` is TIMESTAMP_NTZ and the session zone is a fixed
+    * offset (UTC in every graft session). The NTZ → timestamp cast then
+    * shifts each wall-clock value by one constant offset that reading it
+    * back in the same zone undoes, so the date parts of `ts` are the
+    * wall-clock date parts of `ts_raw`, and [[tsRawInYear]] is exactly
+    * `year(ts) = y`. A zone with DST rules can move a wall-clock time
+    * that falls in a gap across midnight, so it keeps the cast.
+    */
+  private def wallClockDates(spark: SparkSession, df: DataFrame): Boolean =
+    df.schema("ts_raw").dataType == TimestampNTZType &&
+      sessionZone(spark).getRules.isFixedOffset
 
   /** Pushable twin of `year = y`: `year()` over the derived timestamp
     * cannot reach the parquet scan, but a range on the PHYSICAL column
@@ -71,7 +102,7 @@ object FlightOps {
     * datetime / instant) so the predicate stays a PushedFilter.
     */
   private def tsRawInYear(spark: SparkSession, df: DataFrame, y: Int): Column = {
-    val zone = java.time.ZoneId.of(spark.conf.get("spark.sql.session.timeZone"))
+    val zone = sessionZone(spark)
     def startOf(year: Int) = java.time.LocalDate.of(year, 1, 1).atStartOfDay(zone)
     import org.apache.spark.sql.types._
     df.schema("ts_raw").dataType match {
@@ -93,17 +124,39 @@ object FlightOps {
     (0 until 77).filter(r => r % 7 == 0 || r % 11 == 0)
 
   /** Year filter plus successful-flight filter (not cancelled AND not
-    * diverted). `k` is written ONCE in the predicate: Catalyst inlines
-    * the `k` alias (the byte scan, with `get_json_object` behind it) into
-    * every reference, and the filter does no common-subexpression
-    * elimination, so the plain `k % 7 != 0 AND k % 11 != 0` would scan
-    * the JSON twice per row, and parse it twice wherever the scan falls
-    * back. One `pmod(k, 77)` set-membership test has the same answer,
-    * including null `k` (the row is dropped).
+    * diverted). The year filter is the `ts_raw` range alone where that
+    * range is exactly `year(ts) = y` (see [[inTargetYear]]), so the sf
+    * fixtures' scan evaluates no date part for it. `k` is written ONCE
+    * in the predicate: Catalyst inlines the `k` alias (the byte scan,
+    * with `get_json_object` behind it) into every reference, and the
+    * filter does no common-subexpression elimination, so the plain
+    * `k % 7 != 0 AND k % 11 != 0` would scan the JSON twice per row, and
+    * parse it twice wherever the scan falls back. One `pmod(k, 77)`
+    * set-membership test has the same answer, including null `k` (the
+    * row is dropped).
     */
   private def successful(spark: SparkSession, df: DataFrame): DataFrame =
-    df.filter(tsRawInYear(spark, df, TargetYear) && col("year") === TargetYear &&
+    df.filter(inTargetYear(spark, df) &&
       !pmod(col("k"), lit(77)).isin(CancelledOrDivertedMod77: _*))
+
+  /** `year = TargetYear` over [[flights]]: the pushable [[tsRawInYear]]
+    * range, plus the `year` test wherever the range is not exactly it
+    * (every form but the [[wallClockDates]] one).
+    */
+  private def inTargetYear(spark: SparkSession, df: DataFrame): Column = {
+    val range = tsRawInYear(spark, df, TargetYear)
+    if (wallClockDates(spark, df)) range else range && col("year") === TargetYear
+  }
+
+  /** A result of at most carriers × 12 rows, sorted in one partition:
+    * the final aggregate and the sort run in one task, with no range
+    * exchange and so no sampling job. That task reads every map task's
+    * partial rows (map tasks × groups: a few hundred on the fixtures);
+    * where that grows large, `repartition(1)` after the final aggregate
+    * keeps the aggregate parallel for the price of one more map stage.
+    */
+  private def sortedSmall(df: DataFrame, keys: Column*): DataFrame =
+    df.coalesce(1).sortWithinPartitions(keys: _*)
 
   /** A4 rounding: floor(avg)+1 (exact equivalent of the reference's
     * `Math.round(sum/count + 0.5f)` for finite averages — SURVEY.md §2.4).
@@ -128,7 +181,9 @@ object FlightOps {
   /** Report body over an already-filtered flights relation with columns
     * (carrier, month, delay) — shared by the parquet path above and the
     * wide positional CSV path ([[SourceSinkOps.qWideCsvReport]]); the two
-    * must produce identical results (WideCsvSpec golden).
+    * must produce identical results (WideCsvSpec golden). One row per
+    * carrier, so the final aggregate and its sort share one task
+    * ([[sortedSmall]]).
     */
   private[ops] def reportOf(flights: DataFrame): DataFrame = {
     val monthCols = (1 to 12).map { m =>
@@ -136,12 +191,13 @@ object FlightOps {
     }
     val monthParts = (1 to 12).map(m =>
       format_string(", (%d,%d)", lit(m), col(s"m$m")))
-    flights
-      .groupBy(col("carrier"))
-      .agg(monthCols.head, monthCols.tail: _*)
-      .withColumn("report",
-        concat(concat(lit("AIR-"), col("carrier"), lit("\t")) +: monthParts: _*))
-      .orderBy(col("carrier"))
+    sortedSmall(
+      flights
+        .groupBy(col("carrier"))
+        .agg(monthCols.head, monthCols.tail: _*)
+        .withColumn("report",
+          concat(concat(lit("AIR-"), col("carrier"), lit("\t")) +: monthParts: _*)),
+      col("carrier"))
   }
 
   /** Populate stage (S3/S4/S7): events → surrogate `uuid()` row key →
@@ -166,19 +222,26 @@ object FlightOps {
     * hash partitioning on the carrier key + within-partition key sort
     * (`Secondary/...Main.java:198` numReduceTasks(10); key sort from the
     * WritableComparable contract, `:42-47`). Long-format output.
+    *
+    * The (carrier, month) aggregate comes first, so its partial half
+    * combines map-side and only the per-task partial rows cross the
+    * first exchange; the 10-way carrier exchange then moves the
+    * ≤ carriers × 12 aggregated rows. The reference's within-partition
+    * key order follows from [[sortedSmall]]'s key sort of the single
+    * partition, so no `sortWithinPartitions` is written before it
+    * (Catalyst's EliminateSorts drops one below a coalesce anyway).
     */
   def qSecondary(spark: SparkSession, dir: String): DataFrame =
-    successful(spark, flights(spark, dir))
-      .repartition(10, col("carrier"))
-      .sortWithinPartitions(col("carrier"))
-      .groupBy(col("carrier"), col("month"))
-      .agg(roundedAvg(col("delay")).as("d"))
-      .orderBy(col("carrier"), col("month"))
+    sortedSmall(
+      successful(spark, flights(spark, dir))
+        .groupBy(col("carrier"), col("month"))
+        .agg(roundedAvg(col("delay")).as("d"))
+        .repartition(10, col("carrier")),
+      col("carrier"), col("month"))
 
   /** F1 in isolation: year-equality filter (`HCompute/...Main.java:109-111`). */
   def qFilterYear(spark: SparkSession, dir: String): DataFrame =
-    { val f = flights(spark, dir)
-      f.filter(tsRawInYear(spark, f, TargetYear) && col("year") === TargetYear) }
+    { val f = flights(spark, dir); f.filter(inTargetYear(spark, f)) }
       .select(col("carrier"), col("month"), col("delay"))
       .orderBy(col("carrier"), col("month"), col("delay"))
 
@@ -187,10 +250,11 @@ object FlightOps {
     * both != the "1" value (values like 2 pass, as in the reference).
     */
   def qFilterSuccessful(spark: SparkSession, dir: String): DataFrame =
-    successful(spark, flights(spark, dir))
-      .groupBy(col("carrier"))
-      .agg(count(lit(1)).as("n"), round(sum(col("delay")), 2).as("total_delay"))
-      .orderBy(col("carrier"))
+    sortedSmall(
+      successful(spark, flights(spark, dir))
+        .groupBy(col("carrier"))
+        .agg(count(lit(1)).as("n"), round(sum(col("delay")), 2).as("total_delay")),
+      col("carrier"))
 
   /** The 12-slot reducer as a typed Aggregator (SURVEY.md §7.2 M4): same
     * result as [[qSecondary]] but computed by
@@ -200,22 +264,24 @@ object FlightOps {
     */
   def qFlightAggregator(spark: SparkSession, dir: String): DataFrame = {
     val agg = udaf(graft.functions.FlightDelayAgg)
-    successful(spark, flights(spark, dir))
-      .groupBy(col("carrier"))
-      .agg(agg(col("month"), col("delay")).as("ds"))
-      .select(col("carrier"), posexplode(col("ds")))
-      .select(col("carrier"), (col("pos") + 1).cast("int").as("month"),
-              col("col").cast("int").as("d"))
-      .orderBy(col("carrier"), col("month"))
+    sortedSmall(
+      successful(spark, flights(spark, dir))
+        .groupBy(col("carrier"))
+        .agg(agg(col("month"), col("delay")).as("ds"))
+        .select(col("carrier"), posexplode(col("ds")))
+        .select(col("carrier"), (col("pos") + 1).cast("int").as("month"),
+                col("col").cast("int").as("d")),
+      col("carrier"), col("month"))
   }
 
   /** A2/A3 in isolation: per-(carrier,month) SUM and COUNT — the reference's
     * twin 12-slot accumulators (`HCompute/...Main.java:132-142`).
     */
   def qGroupMonthSumCount(spark: SparkSession, dir: String): DataFrame =
-    successful(spark, flights(spark, dir))
-      .groupBy(col("carrier"), col("month"))
-      .agg(round(sum(col("delay")), 2).as("sum_delay"),
-           count(lit(1)).as("n_flights"))
-      .orderBy(col("carrier"), col("month"))
+    sortedSmall(
+      successful(spark, flights(spark, dir))
+        .groupBy(col("carrier"), col("month"))
+        .agg(round(sum(col("delay")), 2).as("sum_delay"),
+             count(lit(1)).as("n_flights")),
+      col("carrier"), col("month"))
 }

@@ -57,9 +57,21 @@ class FlightSemanticsSpec extends AnyFunSuite {
   }
 
   test("X1: secondary repartitions by carrier into exactly 10 partitions") {
-    val df = graft.Tables.events(spark, Sf)
-      .select(col("event_type").as("carrier")).repartition(10, col("carrier"))
-    assert(df.rdd.getNumPartitions == 10)
+    import org.apache.spark.sql.catalyst.expressions.Attribute
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.adaptive.ShuffleQueryStageExec
+    val df = ops.FlightOps.qSecondary(spark, Sf)
+    df.collect() // materialize so AQE finalizes the plan and its stages
+    val plan = df.queryExecution.executedPlan
+    val byCarrier = planNodes(plan).collect {
+      case s: ShuffleQueryStageExec if (s.shuffle.outputPartitioning match {
+        case HashPartitioning(Seq(a: Attribute), _) => a.name == "carrier"
+        case _ => false
+      }) => s
+    }
+    assert(byCarrier.size == 1, plan.toString.take(3000))
+    assert(byCarrier.head.shuffle.numPartitions == 10, plan.toString.take(3000))
+    assert(byCarrier.head.mapStats.map(_.bytesByPartitionId.length).contains(10))
   }
 
   test("typed Aggregator (double) matches built-in floor(avg)+1 per month") {

@@ -1324,14 +1324,6 @@ class KeyedStoreSpec extends AnyFunSuite {
       Map(333L -> "m333", 790L -> "a395", 5000L -> "high"))
   }
 
-  /** Jobs `body` runs, counted under a test-owned job group. */
-  private def jobsOf(body: => Unit): Int = {
-    val group = "keyed-spec-jobs-" + java.util.UUID.randomUUID()
-    spark.sparkContext.setJobGroup(group, "job budget", interruptOnCancel = false)
-    try body finally spark.sparkContext.clearJobGroup()
-    spark.sparkContext.statusTracker.getJobIdsForGroup(group).length
-  }
-
   test("commit job budget: an all-region and a 1-region upsert") {
     import spark.implicits._
     val name = "graft_keyed_spec_jobs"

@@ -427,6 +427,68 @@ class PlanShapeSpec extends AnyFunSuite {
       p.take(3000))
   }
 
+  test("Secondary aggregates map-side below its first exchange, then " +
+       "exchanges the aggregated rows 10 ways by carrier") {
+    import org.apache.spark.sql.catalyst.expressions.Attribute
+    import org.apache.spark.sql.catalyst.expressions.aggregate.Partial
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.aggregate.HashAggregateExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    val df = ops.FlightOps.qSecondary(spark, Sf)
+    df.collect() // materialize so AQE finalizes the plan
+    val shown = df.queryExecution.executedPlan.toString.take(4000)
+    val exchanges = planNodes(df.queryExecution.executedPlan)
+      .collect { case e: ShuffleExchangeExec => e }
+    def below(e: ShuffleExchangeExec) = planNodes(e.child)
+    val first = exchanges.filter(e => !below(e).exists(_.isInstanceOf[ShuffleExchangeExec]))
+    assert(first.size == 1, shown)
+    assert(below(first.head).exists {
+      case h: HashAggregateExec => h.aggregateExpressions.exists(_.mode == Partial)
+      case _ => false
+    }, shown)
+    val tenWay = exchanges.filter(_.outputPartitioning match {
+      case HashPartitioning(Seq(a: Attribute), 10) => a.name == "carrier"
+      case _ => false
+    })
+    assert(tenWay.size == 1 && below(tenWay.head).contains(first.head), shown)
+  }
+
+  test("flight report and Secondary: no range exchange, and no per-row " +
+       "timestamp cast of ts under UTC") {
+    import org.apache.spark.sql.catalyst.expressions.Cast
+    import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
+    import org.apache.spark.sql.execution.{FilterExec, ProjectExec}
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.types.TimestampType
+    assert(spark.conf.get("spark.sql.session.timeZone") == "UTC")
+    Seq(ops.FlightOps.qFlightReport(spark, Sf), ops.FlightOps.qSecondary(spark, Sf)).foreach { df =>
+      df.collect() // materialize so AQE finalizes the plan
+      val nodes = planNodes(df.queryExecution.executedPlan)
+      val shown = df.queryExecution.executedPlan.toString.take(4000)
+      assert(!nodes.exists {
+        case e: ShuffleExchangeExec => e.outputPartitioning.isInstanceOf[RangePartitioning]
+        case _ => false
+      }, shown)
+      val exprs = nodes.flatMap {
+        case f: FilterExec => Seq(f.condition)
+        case p: ProjectExec => p.projectList
+        case _ => Nil
+      }
+      assert(exprs.nonEmpty, shown)
+      val casts = exprs.flatMap(_.collect { case c: Cast if c.dataType == TimestampType => c })
+      assert(casts.isEmpty, shown)
+    }
+  }
+
+  test("flight job budget: report <= 3 jobs, Secondary <= 5, schema inference included") {
+    // Report: schema inference, the scan + partial-aggregate map stage,
+    // and one task that runs the final aggregate and the sort. Secondary
+    // adds the 10-way carrier exchange. A sampled range exchange (two
+    // more jobs) fails here.
+    assert(jobsOf(ops.FlightOps.qFlightReport(spark, Sf).collect()) <= 3)
+    assert(jobsOf(ops.FlightOps.qSecondary(spark, Sf).collect()) <= 5)
+  }
+
   test("hot paths compile to whole-stage codegen") {
     val df = ops.FlightOps.qGroupMonthSumCount(spark, Sf)
     df.collect() // materialize so AQE finalizes the plan

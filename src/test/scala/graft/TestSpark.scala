@@ -1,6 +1,8 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 
 /** One shared local session for the whole suite (forked test JVM). */
 object TestSpark {
@@ -9,4 +11,20 @@ object TestSpark {
   lazy val spark: SparkSession = GraftSession.local(4,
     "spark.sql.warehouse.dir" ->
       java.nio.file.Files.createTempDirectory("graft_warehouse").toString)
+
+  /** Jobs `body` runs, counted under a test-owned job group. */
+  def jobsOf(body: => Unit): Int = {
+    val group = "spec-jobs-" + java.util.UUID.randomUUID()
+    spark.sparkContext.setJobGroup(group, "job budget", interruptOnCancel = false)
+    try body finally spark.sparkContext.clearJobGroup()
+    spark.sparkContext.statusTracker.getJobIdsForGroup(group).length
+  }
+
+  /** Every node of an executed plan, the plans inside AQE query stages
+    * included (a stage node and its plan are both listed). */
+  def planNodes(p: SparkPlan): Seq[SparkPlan] = p match {
+    case a: AdaptiveSparkPlanExec => planNodes(a.executedPlan)
+    case q: QueryStageExec => q +: planNodes(q.plan)
+    case o => o +: o.children.flatMap(planNodes)
+  }
 }
