@@ -148,6 +148,17 @@ object GraftCache {
     n
   }
 
+  /** Move the entries tracked for `from` into `to`'s bucket
+    * ([[GraftSession.scoped]] hands a clone's entries to its parent). */
+  private[graft] def adopt(from: SparkSession, to: SparkSession): Unit =
+    tracked.synchronized {
+      val moved = tracked.remove(from)
+      if (moved != null && moved.nonEmpty) {
+        val buf = tracked.get(to)
+        if (buf == null) tracked.put(to, moved) else buf ++= moved
+      }
+    }
+
   /** Entries currently tracked for `spark` (test/monitoring hook). */
   def trackedCount(spark: SparkSession): Int = tracked.synchronized {
     val buf = tracked.get(spark)

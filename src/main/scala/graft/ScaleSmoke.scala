@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Dev tool: weak-scaling smoke for the heavy operator families.
@@ -715,15 +715,11 @@ object ScaleSmoke {
       docs.unionByName(twin).repartition(32)
         .write.mode("overwrite").parquet(s"$hd/documents.parquet")
     }
-    def noBroadcast(body: => Unit): Unit = {
-      val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      try body
-      finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-    }
-    if (wanted("dedup_apply_highdup")) noBroadcast {
+    def noBroadcast(body: SparkSession => Unit): Unit =
+      GraftSession.scoped(spark, "spark.sql.autoBroadcastJoinThreshold" -> "-1")(body)
+    if (wanted("dedup_apply_highdup")) noBroadcast { s =>
       val t0 = System.nanoTime()
-      val docs2 = Tables.documents(spark, hd)
+      val docs2 = Tables.documents(s, hd)
       val kept = ops.DedupOps.dedupApply(docs2, ops.DedupOps.ngramJaccardPairs(docs2)).count()
       val total = nDocs * 2
       println(f"SCALE dedup_apply_highdup  ${(System.nanoTime() - t0) / 1e9}%8.2f s" +
@@ -733,9 +729,9 @@ object ScaleSmoke {
     // joins OFF: its dedup anti-join drop set is ~50% of the corpus, so
     // this is the probe that proves removing the forced
     // broadcast(dropped) (the round-4 weak label) was safe.
-    if (wanted("pipeline_e2e_highdup")) noBroadcast {
+    if (wanted("pipeline_e2e_highdup")) noBroadcast { s =>
       val t0 = System.nanoTime()
-      val n = ops.TextOps.qPipelineE2e(spark, hd).count()
+      val n = ops.TextOps.qPipelineE2e(s, hd).count()
       println(f"SCALE pipeline_e2e_highdup ${(System.nanoTime() - t0) / 1e9}%8.2f s" +
         f"   rows=$n (no broadcast)")
     }

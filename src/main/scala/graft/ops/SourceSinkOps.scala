@@ -774,42 +774,24 @@ object SourceSinkOps {
 
   /** Driver row for [[skewAqeJoin]]. AQE reads session confs at
     * EXECUTION time, so the skew thresholds must hold while the job
-    * actually runs — `localCheckpoint(eager)` executes the plan under
-    * the overrides and returns a conf-independent materialized frame
-    * (a lazily returned DataFrame would see the restored defaults).
+    * actually runs: the join runs on a scoped session
+    * ([[graft.GraftSession.scoped]]) carrying them, and
+    * `localCheckpoint(eager)` materializes it there. The caller's
+    * session is never written.
     * Broadcast is disabled so the shuffle join the skew rule targets is
     * what executes; 64 KB thresholds make the fixture's hot partition
     * (~650 KB at sf0.01) split ~10 ways, the same decision a real
     * cluster makes at 256 MB defaults with a multi-GB hot key.
     */
   def qSkewAqeJoin(spark: SparkSession, dir: String): DataFrame =
-    withConfs(spark,
+    graft.GraftSession.scoped(spark,
       "spark.sql.autoBroadcastJoinThreshold" -> "-1",
       "spark.sql.adaptive.skewJoin.enabled" -> "true",
       "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "2.0",
       "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "65536",
-      "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "65536") {
-      skewAqeJoin(spark, dir).localCheckpoint(true)
+      "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "65536") { s =>
+      skewAqeJoin(s, dir).localCheckpoint(true)
     }
-
-  /** Run `body` with `confs` set, then put each key back as the caller
-    * had it: its explicit value, or unset — not Spark's registered
-    * default, which `spark.conf.getOption` answers for an unset key.
-    * The engine's execution profile ([[graft.Graft.tuneExecution]],
-    * idempotent) is applied first, so a first table read inside `body`
-    * cannot skip it and the restore keeps it.
-    */
-  private[graft] def withConfs[T](spark: SparkSession,
-                                  confs: (String, String)*)(body: => T): T = {
-    graft.Graft.tuneExecution(spark)
-    val set = spark.sessionState.conf
-    val prev = confs.map { case (k, _) =>
-      k -> (if (set.contains(k)) Some(set.getConfString(k)) else None) }
-    confs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body
-    finally prev.foreach { case (k, v) =>
-      v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
-  }
 
   /** Runtime Bloom-filter join pruning — the row-level sibling of DPP:
     * when a shuffle join's build side is selectively filtered, Catalyst
@@ -837,14 +819,14 @@ object SourceSinkOps {
     * shuffle join the bloom rule targets is what executes, application-
     * side threshold lowered to fixture scale (the default wants a 10 GB
     * probe scan). Same execution-time-conf pattern as [[qSkewAqeJoin]]:
-    * materialize under the overrides, restore after.
+    * materialize on a scoped session carrying the overrides.
     */
   def qBloomPruneJoin(spark: SparkSession, dir: String): DataFrame =
-    withConfs(spark,
+    graft.GraftSession.scoped(spark,
       "spark.sql.autoBroadcastJoinThreshold" -> "-1",
       "spark.sql.optimizer.runtime.bloomFilter.enabled" -> "true",
-      "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold" -> "1024") {
-      bloomPruneJoin(spark, dir).localCheckpoint(true)
+      "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold" -> "1024") { s =>
+      bloomPruneJoin(s, dir).localCheckpoint(true)
     }
 
   /** Z-order (Morton) layout key — bucket two dimensions to 10 bits each

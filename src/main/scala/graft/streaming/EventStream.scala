@@ -202,22 +202,14 @@ object EventStream {
     * exactly; at sf0.1 seven label-conflicted dup pairs exist as fixture
     * noise (bench-only, values unchecked there).
     */
-  def qStreamIngest(spark: SparkSession, dir: String): DataFrame = {
-    val schema = spark.read.parquet(s"$dir/documents.parquet").schema
-    val docs = spark.readStream.schema(schema)
-      .option("pathGlobFilter", "documents.parquet").parquet(dir)
-    // State-store count is fixed by shuffle partitions at the stream's
-    // first start: size it to the stream's volume, not the batch
-    // session's width (two stateful operators × N partitions of
-    // checkpoint IO per micro-batch dominate a small drain; a real
-    // deployment sizes this to peak keys/sec). Restored right after the
-    // drain — batch queries plan lazily and never see the override.
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try runToMemory(spark, ingestStatsOf(docs), "graft_stream_ingest")
-      .orderBy(col("lang"))
-    finally spark.conf.set("spark.sql.shuffle.partitions", prev)
-  }
+  def qStreamIngest(spark: SparkSession, dir: String): DataFrame =
+    Drain.scoped(spark) { s =>
+      val schema = s.read.parquet(s"$dir/documents.parquet").schema
+      val docs = s.readStream.schema(schema)
+        .option("pathGlobFilter", "documents.parquet").parquet(dir)
+      runToMemory(s, ingestStatsOf(docs), "graft_stream_ingest")
+        .orderBy(col("lang"))
+    }
 
   /** Exact-integer tumbling-window stats — the shape shared by the stream
     * and its batch twin (= the DuckDB oracle). `value` is summed in
@@ -238,14 +230,12 @@ object EventStream {
     * Complete mode: the sink holds the final state of every window, which
     * for a bounded drain equals the batch aggregate exactly.
     */
-  def qStreamWindow(spark: SparkSession, dir: String): DataFrame = {
-    val st = eventsStream(spark, dir).withWatermark("ts", "2 hours")
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try runToMemory(spark, windowStatsOf(st), "graft_stream_window")
-      .orderBy(col("ws"), col("event_type"))
-    finally spark.conf.set("spark.sql.shuffle.partitions", prev)
-  }
+  def qStreamWindow(spark: SparkSession, dir: String): DataFrame =
+    Drain.scoped(spark) { s =>
+      val st = eventsStream(s, dir).withWatermark("ts", "2 hours")
+      runToMemory(s, windowStatsOf(st), "graft_stream_window")
+        .orderBy(col("ws"), col("event_type"))
+    }
 
   /** Third driver-checked streaming row — stream-STREAM interval join:
     * click events matched to error events of the same user within ±30
@@ -255,32 +245,30 @@ object EventStream {
     * drained append output is aggregated in batch with exact-integer
     * checksums; the oracle is the equivalent batch interval join.
     */
-  def qStreamJoin(spark: SparkSession, dir: String): DataFrame = {
-    val clicks = eventsStream(spark, dir)
-      .filter(col("event_type") === "click")
-      .withWatermark("ts", "2 hours")
-      .select(col("user_id").as("c_user"), col("ts").as("c_ts"),
-              col("event_id").as("c_id"))
-    val errors = eventsStream(spark, dir)
-      .filter(col("event_type") === "error")
-      .withWatermark("ts", "2 hours")
-      .select(col("user_id").as("e_user"), col("ts").as("e_ts"),
-              col("event_id").as("e_id"))
-    val joined = clicks.join(errors, expr(
-      "c_user = e_user AND " +
-        "e_ts >= c_ts - interval 30 minutes AND " +
-        "e_ts <= c_ts + interval 30 minutes"))
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try runToMemory(spark,
-        joined.select(col("c_user").as("user_id"), col("c_id"), col("e_id")),
-        "graft_stream_join", OutputMode.Append())
-      .groupBy(col("user_id"))
-      .agg(count(lit(1)).as("n_pairs"),
-           sum(col("c_id") + col("e_id")).as("id_sum"))
-      .orderBy(col("user_id"))
-    finally spark.conf.set("spark.sql.shuffle.partitions", prev)
-  }
+  def qStreamJoin(spark: SparkSession, dir: String): DataFrame =
+    Drain.scoped(spark) { s =>
+      val clicks = eventsStream(s, dir)
+        .filter(col("event_type") === "click")
+        .withWatermark("ts", "2 hours")
+        .select(col("user_id").as("c_user"), col("ts").as("c_ts"),
+                col("event_id").as("c_id"))
+      val errors = eventsStream(s, dir)
+        .filter(col("event_type") === "error")
+        .withWatermark("ts", "2 hours")
+        .select(col("user_id").as("e_user"), col("ts").as("e_ts"),
+                col("event_id").as("e_id"))
+      val joined = clicks.join(errors, expr(
+        "c_user = e_user AND " +
+          "e_ts >= c_ts - interval 30 minutes AND " +
+          "e_ts <= c_ts + interval 30 minutes"))
+      runToMemory(s,
+          joined.select(col("c_user").as("user_id"), col("c_id"), col("e_id")),
+          "graft_stream_join", OutputMode.Append())
+        .groupBy(col("user_id"))
+        .agg(count(lit(1)).as("n_pairs"),
+             sum(col("c_id") + col("e_id")).as("id_sum"))
+        .orderBy(col("user_id"))
+    }
 
   /** Fourth driver-checked streaming row — custom keyed state
     * (flatMapGroupsWithState sessionization, the one stateful-operator
@@ -294,14 +282,12 @@ object EventStream {
     * `sid < max(sid) per user OR end flushed by watermark`), so the
     * custom-state path is driver-correctness-checked end to end.
     */
-  def qStreamSessionize(spark: SparkSession, dir: String): DataFrame = {
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try runToMemory(spark, userSessions(spark, dir).toDF(),
-        "graft_stream_sessionize", OutputMode.Append())
-      .orderBy(col("user_id"), col("start_us"))
-    finally spark.conf.set("spark.sql.shuffle.partitions", prev)
-  }
+  def qStreamSessionize(spark: SparkSession, dir: String): DataFrame =
+    Drain.scoped(spark) { s =>
+      runToMemory(s, userSessions(s, dir).toDF(),
+          "graft_stream_sessionize", OutputMode.Append())
+        .orderBy(col("user_id"), col("start_us"))
+    }
 
   /** Fifth driver-checked streaming row — watermarked streaming
     * deduplication: two identical copies of the event stream are unioned
@@ -315,30 +301,17 @@ object EventStream {
     * one key per event_id inside the watermark horizon and is expired
     * beyond it.
     */
-  def qStreamDedup(spark: SparkSession, dir: String): DataFrame = {
-    val st = eventsStream(spark, dir).unionByName(eventsStream(spark, dir))
-      .withWatermark("ts", "2 hours")
-      .dropDuplicatesWithinWatermark("event_id")
-      .groupBy(col("event_type"))
-      .agg(count(lit(1)).as("n"),
-           sum(expr("cast(round(value * 100) as bigint)")).as("value_c"))
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try runToMemory(spark, st, "graft_stream_dedup").orderBy(col("event_type"))
-    finally spark.conf.set("spark.sql.shuffle.partitions", prev)
-  }
+  def qStreamDedup(spark: SparkSession, dir: String): DataFrame =
+    Drain.scoped(spark) { s =>
+      val st = eventsStream(s, dir).unionByName(eventsStream(s, dir))
+        .withWatermark("ts", "2 hours")
+        .dropDuplicatesWithinWatermark("event_id")
+        .groupBy(col("event_type"))
+        .agg(count(lit(1)).as("n"),
+             sum(expr("cast(round(value * 100) as bigint)")).as("value_c"))
+      runToMemory(s, st, "graft_stream_dedup").orderBy(col("event_type"))
+    }
 
-  /** Sixth driver-checked streaming row — a foreachBatch keyed-upsert sink:
-    * the stream maintains a durable "latest state per user" parquet store,
-    * merged batch-by-batch. The fixture is split into 4 files and drained
-    * with maxFilesPerTrigger=1, so the merge genuinely runs across multiple
-    * micro-batches in arbitrary file order; correctness holds because the
-    * merge (per-user max over (ts, event_id)-ordered structs, store ∪
-    * batch) is commutative and idempotent — the exactly-once recipe for an
-    * at-least-once sink. The oracle is the batch argmax over the whole
-    * table. At scale the store is a partitioned table and the merge is the
-    * same copy-on-write upsert as q_upsert, driven by the stream.
-    */
   private def latestPerUser(df: DataFrame): DataFrame = df
     .groupBy(col("user_id"))
     .agg(max(struct(col("ts_us"), col("event_id"), col("event_type"),
@@ -381,63 +354,40 @@ object EventStream {
         (base, b) => latestPerUser(base.unionByName(b)))
   }
 
-  def qStreamUpsert(spark: SparkSession, dir: String): DataFrame = {
-    val storeTable = "graft_stream_upsert_store"
-    val tmp = java.nio.file.Files.createTempDirectory("graft_stream_upsert")
-    val srcDir = tmp.resolve("src").toString
-    val ev = graft.Tables.events(spark, dir)
-      .select(col("event_id"), col("user_id"), unix_micros(col("ts")).as("ts_us"),
-              col("event_type"),
-              expr("cast(round(value * 100) as bigint)").as("value_c"))
-    ev.repartition(4).write.mode("overwrite").parquet(srcDir)
-
-    val stream = spark.readStream.schema(ev.schema)
-      .option("maxFilesPerTrigger", "1").parquet(srcDir)
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    graft.ops.KeyedStore.drop(spark, storeTable) // defensive: stale prior run
-    try {
-      val q = stream.writeStream
-        .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], id: Long) =>
-          upsertBatchIntoStore(spark, storeTable, batch.toDF(),
-            targetRowsPerRegion = 64)
-        }
-        .option("checkpointLocation", tmp.resolve("ckpt").toString)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      if (!q.awaitTermination(120000)) {
-        q.stop()
-        throw new IllegalStateException(
-          "q_stream_upsert: stream did not drain within 120 s — refusing to " +
-            "read a partially merged store")
-      }
-      // Materialize off the temp table so it can be dropped before the
-      // caller consumes the result (fixture-scale store; at real scale
-      // the store IS the durable output and outlives the job).
-      spark.table(storeTable)
-        .select(col("user_id"), col("ts_us"), col("event_id"),
-                col("event_type"), col("value_c"))
-        .orderBy(col("user_id"))
-        .localCheckpoint()
-    } finally {
-      // finally, not success-path: a drain timeout must not leak the
-      // temp store + checkpoint on disk.
-      spark.conf.set("spark.sql.shuffle.partitions", prev)
-      graft.ops.KeyedStore.drop(spark, storeTable)
-      deleteRecursively(tmp)
-    }
-  }
-
-  /** Streaming CDC into the snapshot-versioned table: each micro-batch
-    * commits its latest-per-user state through
-    * [[graft.ops.VersionedStore]]'s copy-on-write commit, resolving
-    * against the CURRENT snapshot with the same max-(ts, event_id) rule
-    * as [[qStreamUpsert]] — the merge stays commutative + idempotent, so
-    * the FINAL snapshot is independent of how the source files happen to
-    * batch, while every intermediate snapshot stays time-travel-readable
-    * (the streaming layer and the lakehouse layer compose). Result: the
-    * final snapshot read back (latest state per user).
+  /** Sixth driver-checked streaming row — a foreachBatch keyed-upsert sink:
+    * the stream maintains a durable "latest state per user" parquet store,
+    * merged batch-by-batch. The fixture is split into 4 files and drained
+    * with maxFilesPerTrigger=1, so the merge genuinely runs across multiple
+    * micro-batches in arbitrary file order; correctness holds because the
+    * merge (per-user max over (ts, event_id)-ordered structs, store ∪
+    * batch) is commutative and idempotent — the exactly-once recipe for an
+    * at-least-once sink. The oracle is the batch argmax over the whole
+    * table. At scale the store is a partitioned table and the merge is the
+    * same copy-on-write upsert as q_upsert, driven by the stream.
     */
+  def qStreamUpsert(spark: SparkSession, dir: String): DataFrame =
+    Drain.scoped(spark) { s =>
+      val storeTable = "graft_stream_upsert_store"
+      val ev = graft.Tables.events(s, dir)
+        .select(col("event_id"), col("user_id"), unix_micros(col("ts")).as("ts_us"),
+                col("event_type"),
+                expr("cast(round(value * 100) as bigint)").as("value_c"))
+      Drain.files(s, "q_stream_upsert", ev, 4,
+          () => graft.ops.KeyedStore.drop(s, storeTable)) {
+        (batch, _) => upsertBatchIntoStore(s, storeTable, batch,
+          targetRowsPerRegion = 64)
+      } {
+        // Materialize off the temp table so it can be dropped before the
+        // caller consumes the result (fixture-scale store; at real scale
+        // the store IS the durable output and outlives the job).
+        s.table(storeTable)
+          .select(col("user_id"), col("ts_us"), col("event_id"),
+                  col("event_type"), col("value_c"))
+          .orderBy(col("user_id"))
+          .localCheckpoint()
+      }
+    }
+
   /** One micro-batch of the versioned CDC sink: resolve the batch's
     * latest-per-user rows against the current snapshot by the
     * max-(ts, event_id) rule, then commit copy-on-write. Commutative +
@@ -463,50 +413,42 @@ object EventStream {
     }
   }
 
-  def qStreamVersioned(spark: SparkSession, dir: String): DataFrame = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_stream_versioned")
-    val srcDir = tmp.resolve("src").toString
-    val storeDir = tmp.resolve("store").toString
-    val ev = graft.Tables.events(spark, dir)
-      .select(col("event_id"), col("user_id"), unix_micros(col("ts")).as("ts_us"),
-              col("event_type"),
-              expr("cast(round(value * 100) as bigint)").as("value_c"))
-    // TWO micro-batches (round-13 item #7 discipline: each versioned
-    // commit costs ~1 s of fixed machinery, so batches beyond the
-    // cross-batch-merge minimum were fixture tax). Two batches still
-    // exercise resolve-against-snapshot across batch boundaries;
-    // arbitrary-order commutativity and crash replay are pinned in
-    // StreamingSpec, and q_stream_upsert still drains four.
-    ev.repartition(2).write.mode("overwrite").parquet(srcDir)
-    val stream = spark.readStream.schema(ev.schema)
-      .option("maxFilesPerTrigger", "1").parquet(srcDir)
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try {
-      val q = stream.writeStream
-        .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-          commitLatestBatch(spark, storeDir, batch.toDF())
-        }
-        .option("checkpointLocation", tmp.resolve("ckpt").toString)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      if (!q.awaitTermination(120000)) {
-        q.stop()
-        throw new IllegalStateException(
-          "q_stream_versioned: stream did not drain within 120 s — refusing " +
-            "to read a partially committed store")
+  /** Streaming CDC into the snapshot-versioned table: each micro-batch
+    * commits its latest-per-user state through
+    * [[graft.ops.VersionedStore]]'s copy-on-write commit, resolving
+    * against the CURRENT snapshot with the same max-(ts, event_id) rule
+    * as [[qStreamUpsert]] — the merge stays commutative + idempotent, so
+    * the FINAL snapshot is independent of how the source files happen to
+    * batch, while every intermediate snapshot stays time-travel-readable
+    * (the streaming layer and the lakehouse layer compose). Result: the
+    * final snapshot read back (latest state per user).
+    */
+  def qStreamVersioned(spark: SparkSession, dir: String): DataFrame =
+    Drain.scoped(spark) { s =>
+      val storeDir = java.nio.file.Files.createTempDirectory("q_stream_versioned")
+      val ev = graft.Tables.events(s, dir)
+        .select(col("event_id"), col("user_id"), unix_micros(col("ts")).as("ts_us"),
+                col("event_type"),
+                expr("cast(round(value * 100) as bigint)").as("value_c"))
+      // TWO micro-batches (round-13 item #7 discipline: each versioned
+      // commit costs ~1 s of fixed machinery, so batches beyond the
+      // cross-batch-merge minimum were fixture tax). Two batches still
+      // exercise resolve-against-snapshot across batch boundaries;
+      // arbitrary-order commutativity and crash replay are pinned in
+      // StreamingSpec, and q_stream_upsert still drains four.
+      Drain.files(s, "q_stream_versioned", ev, 2,
+          () => deleteRecursively(storeDir)) {
+        (batch, _) => commitLatestBatch(s, storeDir.toString, batch)
+      } {
+        graft.ops.VersionedStore
+          .asOf(s, storeDir.toString,
+            graft.ops.VersionedStore.currentVersion(storeDir.toString))
+          .select(col("user_id"), col("ts_us"), col("event_id"),
+                  col("event_type"), col("value_c"))
+          .orderBy(col("user_id"))
+          .localCheckpoint()
       }
-      graft.ops.VersionedStore
-        .asOf(spark, storeDir, graft.ops.VersionedStore.currentVersion(storeDir))
-        .select(col("user_id"), col("ts_us"), col("event_id"),
-                col("event_type"), col("value_c"))
-        .orderBy(col("user_id"))
-        .localCheckpoint()
-    } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", prev)
-      deleteRecursively(tmp)
     }
-  }
 
   /** One micro-batch of the ADDITIVE count sink: per-user batch counts
     * summed into the same region-partitioned catalog store as
@@ -599,47 +541,26 @@ object EventStream {
     * is the plain batch GROUP BY count top-20 — equality proves the
     * incremental sums equal the one-shot aggregate.
     */
-  def qStreamTopk(spark: SparkSession, dir: String): DataFrame = {
-    val storeTable = "graft_stream_topk_store"
-    val tmp = java.nio.file.Files.createTempDirectory("graft_stream_topk")
-    val srcDir = tmp.resolve("src").toString
-    val ev = graft.Tables.events(spark, dir).select(col("event_id"), col("user_id"))
-    // TWO micro-batches (see qStreamVersioned's note): the additive
-    // merge still genuinely combines partial aggregates ACROSS batches
-    // — replay fencing and arbitrary-order equality are pinned in
-    // StreamingSpec, and q_stream_upsert remains the 4-batch anchor.
-    ev.repartition(2).write.mode("overwrite").parquet(srcDir)
-    val stream = spark.readStream.schema(ev.schema)
-      .option("maxFilesPerTrigger", "1").parquet(srcDir)
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    graft.ops.KeyedStore.drop(spark, storeTable) // defensive: stale prior run
-    try {
-      val q = stream.writeStream
-        .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], id: Long) =>
-          addCountsIntoStore(spark, storeTable, batch.toDF(), id,
-            targetRowsPerRegion = 64)
-        }
-        .option("checkpointLocation", tmp.resolve("ckpt").toString)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      if (!q.awaitTermination(120000)) {
-        q.stop()
-        throw new IllegalStateException(
-          "q_stream_topk: stream did not drain within 120 s — refusing to " +
-            "read a partially merged store")
+  def qStreamTopk(spark: SparkSession, dir: String): DataFrame =
+    Drain.scoped(spark) { s =>
+      val storeTable = "graft_stream_topk_store"
+      val ev = graft.Tables.events(s, dir).select(col("event_id"), col("user_id"))
+      // TWO micro-batches (see qStreamVersioned's note): the additive
+      // merge still genuinely combines partial aggregates ACROSS batches
+      // — replay fencing and arbitrary-order equality are pinned in
+      // StreamingSpec, and q_stream_upsert remains the 4-batch anchor.
+      Drain.files(s, "q_stream_topk", ev, 2,
+          () => graft.ops.KeyedStore.drop(s, storeTable)) {
+        (batch, id) => addCountsIntoStore(s, storeTable, batch, id,
+          targetRowsPerRegion = 64)
+      } {
+        s.table(storeTable)
+          .select(col("user_id"), col("n"))
+          .orderBy(col("n").desc, col("user_id"))
+          .limit(20)
+          .localCheckpoint()
       }
-      spark.table(storeTable)
-        .select(col("user_id"), col("n"))
-        .orderBy(col("n").desc, col("user_id"))
-        .limit(20)
-        .localCheckpoint()
-    } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", prev)
-      graft.ops.KeyedStore.drop(spark, storeTable)
-      deleteRecursively(tmp)
     }
-  }
 
   private[graft] def deleteRecursively(p: java.nio.file.Path): Unit =
     if (java.nio.file.Files.exists(p)) {
@@ -649,8 +570,9 @@ object EventStream {
       finally s.close()
     }
 
-  /** Convenience runner for tests: drain the stream with AvailableNow into
-    * an in-memory table and return the result.
+  /** Drain the stream with AvailableNow into an in-memory table and
+    * return the result. The table is a temp view of the session the
+    * stream was built on, so `spark` must be that session.
     */
   def runToMemory(spark: SparkSession, streamDf: DataFrame, name: String,
                   outputMode: OutputMode = OutputMode.Complete()): DataFrame = {
@@ -660,11 +582,7 @@ object EventStream {
       .outputMode(outputMode)
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .start()
-    if (!q.awaitTermination(120000)) {
-      q.stop()
-      throw new IllegalStateException(
-        s"stream $name did not drain within 120 s — result would be partial")
-    }
+    Drain.await(q, s"stream $name", 120000L)
     spark.table(name)
   }
 }

@@ -1,8 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 /** Streaming vector ingestion into the store-persisted ANN index — the
   * serving-side maintenance loop: an offline build freezes the codebook
@@ -31,50 +30,24 @@ object VectorStream {
     * result is identical to the batch [[AnnIndexOps.qAnnIndexIncremental]]
     * path, so the row shares its base-codebook oracle.
     */
-  def qStreamAnnIndex(spark: SparkSession, dir: String): DataFrame = {
-    val name = "graft_stream_ann_index"
-    val tmp = java.nio.file.Files.createTempDirectory("graft_stream_annidx")
-    val srcDir = tmp.resolve("src").toString
-    val embs = graft.Tables.embeddings(spark, dir)
-    val delta = embs.filter(col("vec_id") % 10 === 0)
-    delta.repartition(2).write.mode("overwrite").parquet(srcDir)
-
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    KeyedStore.drop(spark, name) // defensive: stale prior run
-    try {
-      // The OFFLINE base build is the frozen victim, not the measured
-      // streaming capability — resolve it from the shared content-
-      // addressed cache and clone (the same base index as the batch
-      // incremental/rebalance rows; AnnIndexOps.resolveCloned's note).
-      KeyedStore.cloneStore(spark,
-        AnnIndexOps.b90Cache(spark, dir, embs), name)
-      val stream = spark.readStream.schema(delta.schema)
-        .option("maxFilesPerTrigger", "1").parquet(srcDir)
-      val q = stream.writeStream
-        .foreachBatch { (batch: Dataset[Row], _: Long) =>
-          if (!batch.isEmpty)
-            AnnIndexOps.appendBatch(spark, name, batch.toDF())
-        }
-        .option("checkpointLocation", tmp.resolve("ckpt").toString)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      if (!q.awaitTermination(120000)) {
-        q.stop()
-        throw new IllegalStateException(
-          "q_stream_ann_index: stream did not drain within 120 s — " +
-            "refusing to serve a partially appended index")
+  def qStreamAnnIndex(spark: SparkSession, dir: String): DataFrame =
+    Drain.scoped(spark) { s =>
+      val name = "graft_stream_ann_index"
+      val embs = graft.Tables.embeddings(s, dir)
+      Drain.files(s, "q_stream_ann_index", embs.filter(col("vec_id") % 10 === 0), 2,
+          () => KeyedStore.drop(s, name)) {
+        // The OFFLINE base build is the frozen victim, not the measured
+        // streaming capability — resolve it from the shared content-
+        // addressed cache and clone (the same base index as the batch
+        // incremental/rebalance rows; AnnIndexOps.resolveCloned's note).
+        KeyedStore.cloneStore(s, AnnIndexOps.b90Cache(s, dir, embs), name)
+        (batch, _) => if (!batch.isEmpty) AnnIndexOps.appendBatch(s, name, batch)
+      } {
+        // Materialize before the temp store is dropped (fixture-scale;
+        // at real scale the index table IS durable and outlives the job).
+        AnnIndexOps.serve(s, name, embs, col("vec_id") < 5).localCheckpoint()
       }
-      // Materialize before the temp store is dropped (fixture-scale;
-      // at real scale the index table IS durable and outlives the job).
-      AnnIndexOps.serve(spark, name, embs, col("vec_id") < 5)
-        .localCheckpoint()
-    } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", prev)
-      KeyedStore.drop(spark, name)
-      EventStream.deleteRecursively(tmp)
     }
-  }
 
   /** The true-PQ twin of [[qStreamAnnIndex]]: offline build freezes BOTH
     * codebooks (coarse cells + per-subspace PQ), each arriving batch is
@@ -85,52 +58,26 @@ object VectorStream {
     * no fence needed. Results equal the batch
     * [[AnnIndexOps.qAnnPqIncremental]], whose oracle the row shares.
     */
-  def qStreamPqIndex(spark: SparkSession, dir: String): DataFrame = {
-    val name = "graft_stream_pq_index"
-    val tmp = java.nio.file.Files.createTempDirectory("graft_stream_pqidx")
-    val srcDir = tmp.resolve("src").toString
-    val embs = graft.Tables.embeddings(spark, dir)
-    val delta = embs.filter(col("vec_id") % 10 === 0)
-    // ONE micro-batch (round-13 verdict item #7): each append pays
-    // ~2 s of fixed commit machinery, so the second batch was pure
-    // fixture tax. Multi-batch commutativity + crash-replay of this
-    // sink are pinned by StreamingSpec's PQ fault-injection test (two
-    // batches, injected crash, checkpoint restart), and the int8 twin
-    // q_stream_ann_index still drains two batches in the bench suite.
-    delta.repartition(1).write.mode("overwrite").parquet(srcDir)
-
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    KeyedStore.drop(spark, name) // defensive: stale prior run
-    try {
-      // Offline base build resolved from the shared PQ cache + clone
-      // (see qStreamAnnIndex's note).
-      KeyedStore.cloneStore(spark,
-        AnnIndexOps.pqB90Cache(spark, dir, embs), name)
-      val stream = spark.readStream.schema(delta.schema)
-        .option("maxFilesPerTrigger", "1").parquet(srcDir)
-      val q = stream.writeStream
-        .foreachBatch { (batch: Dataset[Row], _: Long) =>
-          if (!batch.isEmpty)
-            AnnIndexOps.appendPqBatch(spark, name, batch.toDF())
-        }
-        .option("checkpointLocation", tmp.resolve("ckpt").toString)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      if (!q.awaitTermination(120000)) {
-        q.stop()
-        throw new IllegalStateException(
-          "q_stream_pq_index: stream did not drain within 120 s — " +
-            "refusing to serve a partially appended index")
+  def qStreamPqIndex(spark: SparkSession, dir: String): DataFrame =
+    Drain.scoped(spark) { s =>
+      val name = "graft_stream_pq_index"
+      val embs = graft.Tables.embeddings(s, dir)
+      // ONE micro-batch (round-13 verdict item #7): each append pays
+      // ~2 s of fixed commit machinery, so the second batch was pure
+      // fixture tax. Multi-batch commutativity + crash-replay of this
+      // sink are pinned by StreamingSpec's PQ fault-injection test (two
+      // batches, injected crash, checkpoint restart), and the int8 twin
+      // q_stream_ann_index still drains two batches in the bench suite.
+      Drain.files(s, "q_stream_pq_index", embs.filter(col("vec_id") % 10 === 0), 1,
+          () => KeyedStore.drop(s, name)) {
+        // Offline base build resolved from the shared PQ cache + clone
+        // (see qStreamAnnIndex's note).
+        KeyedStore.cloneStore(s, AnnIndexOps.pqB90Cache(s, dir, embs), name)
+        (batch, _) => if (!batch.isEmpty) AnnIndexOps.appendPqBatch(s, name, batch)
+      } {
+        AnnIndexOps.servePq(s, name, embs, col("vec_id") < 5).localCheckpoint()
       }
-      AnnIndexOps.servePq(spark, name, embs, col("vec_id") < 5)
-        .localCheckpoint()
-    } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", prev)
-      KeyedStore.drop(spark, name)
-      EventStream.deleteRecursively(tmp)
     }
-  }
 
   /** Streaming drift monitor — [[graft.ops.SimilarityOps.embeddingDrift]]
     * run the way production runs it: the delta batch arrives as
@@ -142,56 +89,34 @@ object VectorStream {
     * base-histogram ∪ store equals the batch monitor exactly, so the
     * row shares its oracle.
     */
-  def qStreamDrift(spark: SparkSession, dir: String): DataFrame = {
-    val name = "graft_stream_drift_store"
-    val tmp = java.nio.file.Files.createTempDirectory("graft_stream_drift")
-    val srcDir = tmp.resolve("src").toString
-    val embs = graft.Tables.embeddings(spark, dir)
-    val basePred = col("vec_id") % 10 =!= 0
-    val delta = embs.filter(!basePred)
-    delta.repartition(2).write.mode("overwrite").parquet(srcDir)
-
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    KeyedStore.drop(spark, name) // defensive: stale prior run
-    try {
+  def qStreamDrift(spark: SparkSession, dir: String): DataFrame =
+    Drain.scoped(spark) { s =>
+      val name = "graft_stream_drift_store"
+      val embs = graft.Tables.embeddings(s, dir)
+      val basePred = col("vec_id") % 10 =!= 0
       // Frozen codebook, materialized once (16 rows) so per-batch
       // closures don't re-derive it from the corpus.
       val cent = SimilarityOps.driftCodebook(embs, basePred, 16)
         .localCheckpoint()
-      val stream = spark.readStream.schema(delta.schema)
-        .option("maxFilesPerTrigger", "1").parquet(srcDir)
-      val q = stream.writeStream
-        .foreachBatch { (batch: Dataset[Row], bid: Long) =>
+      Drain.files(s, "q_stream_drift", embs.filter(!basePred), 2,
+          () => KeyedStore.drop(s, name)) {
+        (batch, bid) =>
           if (!batch.isEmpty) {
-            val counts = SimilarityOps.nearestCell(batch.toDF(), cent)
+            val counts = SimilarityOps.nearestCell(batch, cent)
               .groupBy(col("c_id")).agg(count(lit(1)).as("bn"))
-            EventStream.additiveFencedMerge(spark, name, "c_id", counts,
+            EventStream.additiveFencedMerge(s, name, "c_id", counts,
               bid, targetRowsPerRegion = 8)
           }
-        }
-        .option("checkpointLocation", tmp.resolve("ckpt").toString)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      if (!q.awaitTermination(120000)) {
-        q.stop()
-        throw new IllegalStateException(
-          "q_stream_drift: stream did not drain within 120 s — refusing " +
-            "to report PSI off a partially merged histogram")
+      } {
+        val baseHist = SimilarityOps.nearestCell(embs.filter(basePred), cent)
+          .groupBy(col("c_id")).agg(count(lit(1)).as("n_base"))
+        val deltaHist = s.table(name)
+          .select(col("c_id"), col("n").as("n_delta"))
+        val hist = baseHist.join(deltaHist, Seq("c_id"), "full_outer")
+          .select(col("c_id"),
+                  coalesce(col("n_base"), lit(0L)).as("n_base"),
+                  coalesce(col("n_delta"), lit(0L)).as("n_delta"))
+        SimilarityOps.psiFromHist(hist).localCheckpoint()
       }
-      val baseHist = SimilarityOps.nearestCell(embs.filter(basePred), cent)
-        .groupBy(col("c_id")).agg(count(lit(1)).as("n_base"))
-      val deltaHist = spark.table(name)
-        .select(col("c_id"), col("n").as("n_delta"))
-      val hist = baseHist.join(deltaHist, Seq("c_id"), "full_outer")
-        .select(col("c_id"),
-                coalesce(col("n_base"), lit(0L)).as("n_base"),
-                coalesce(col("n_delta"), lit(0L)).as("n_delta"))
-      SimilarityOps.psiFromHist(hist).localCheckpoint()
-    } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", prev)
-      KeyedStore.drop(spark, name)
-      EventStream.deleteRecursively(tmp)
     }
-  }
 }

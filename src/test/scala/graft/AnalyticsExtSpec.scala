@@ -342,20 +342,18 @@ class AnalyticsExtSpec extends AnyFunSuite {
     // grank > n, phantom NTILE buckets (observed: r_score = 6 at
     // 4 shuffle partitions over 1500 customers). Low parallelism makes
     // the sampler non-exhaustive, which is the triggering regime.
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    try {
-      spark.conf.set("spark.sql.shuffle.partitions", "4")
+    GraftSession.scoped(spark, "spark.sql.shuffle.partitions" -> "4") { s =>
       (1 to 3).foreach { _ =>
-        val segs = ops.AnalyticsOps.qRfmSegments(spark, Sf).collect()
+        val segs = ops.AnalyticsOps.qRfmSegments(s, Sf).collect()
         segs.foreach { r =>
           (0 to 2).foreach(i =>
             assert(r.getInt(i) >= 1 && r.getInt(i) <= 5, r.toString))
         }
-        val nCust = graft.Tables.orders(spark, Sf)
+        val nCust = graft.Tables.orders(s, Sf)
           .select(col("o_custkey")).distinct().count()
         assert(segs.map(_.getLong(3)).sum == nCust)
       }
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
+    }
   }
 
   test("k-anonymity audit counts are consistent and suppression heals every violation") {
@@ -384,17 +382,14 @@ class AnalyticsExtSpec extends AnyFunSuite {
   }
 
   test("globalRank: parallelism follows spark.sql.shuffle.partitions when unpinned") {
-    import spark.implicits._
-    val df = spark.range(1000).toDF("id")
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    try {
-      spark.conf.set("spark.sql.shuffle.partitions", "7")
+    GraftSession.scoped(spark, "spark.sql.shuffle.partitions" -> "7") { s =>
+      val df = s.range(1000).toDF("id")
       // Values identical at any parallelism (order-deterministic ranks).
       val got = ops.AnalyticsOps.globalRank(df, Seq(col("id").asc))
         .select(col("id"), col("grank")).collect()
         .map(r => r.getLong(0) -> r.getLong(1)).toMap
       assert((0L until 1000L).forall(i => got(i) == i + 1))
       assert(ops.AnalyticsOps.rankParallelism(df) == 7)
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
+    }
   }
 }

@@ -21,11 +21,9 @@ class BucketedJoinSpec extends AnyFunSuite {
       .write.bucketBy(8, "l_orderkey").sortBy("l_orderkey")
       .mode("overwrite").saveAsTable("b_lineitem")
 
-    val prevThreshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
-      val joined = spark.table("b_orders")
-        .join(spark.table("b_lineitem"), col("o_orderkey") === col("l_orderkey"))
+    try GraftSession.scoped(spark, "spark.sql.autoBroadcastJoinThreshold" -> "-1") { s =>
+      val joined = s.table("b_orders")
+        .join(s.table("b_lineitem"), col("o_orderkey") === col("l_orderkey"))
         .groupBy(col("o_orderpriority"))
         .agg(count(lit(1)).as("n"))
       joined.collect()
@@ -40,14 +38,13 @@ class BucketedJoinSpec extends AnyFunSuite {
              !plan.contains("Exchange hashpartitioning(l_orderkey"),
         s"bucketed join still shuffles:\n${plan.take(3000)}")
       // and the result matches the unbucketed join
-      val expect = graft.Tables.orders(spark, Sf)
-        .join(graft.Tables.lineitem(spark, Sf), col("o_orderkey") === col("l_orderkey"))
+      val expect = graft.Tables.orders(s, Sf)
+        .join(graft.Tables.lineitem(s, Sf), col("o_orderkey") === col("l_orderkey"))
         .groupBy(col("o_orderpriority")).agg(count(lit(1)).as("n"))
         .collect().map(r => (r.getString(0), r.getLong(1))).toSet
       val got = joined.collect().map(r => (r.getString(0), r.getLong(1))).toSet
       assert(got == expect)
     } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThreshold)
       spark.sql("DROP TABLE IF EXISTS b_orders")
       spark.sql("DROP TABLE IF EXISTS b_lineitem")
     }

@@ -2,7 +2,7 @@ package graft
 
 import graft.functions.JsonFunctions.flatJsonIntegral
 import graft.functions.FlatJsonIntegral
-import org.apache.spark.sql.{Column, DataFrame, GraftColumnBridge}
+import org.apache.spark.sql.{Column, DataFrame, GraftColumnBridge, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, IntegerType, LongType}
 import org.scalatest.funsuite.AnyFunSuite
@@ -103,12 +103,14 @@ class FlatJsonIntegralSpec extends AnyFunSuite {
     }
   }
 
-  private lazy val strings: DataFrame = {
-    import spark.implicits._
-    // An RDD, not a local relation: the optimizer would otherwise fold the
-    // expressions over the literal rows with the interpreted path.
-    spark.sparkContext.parallelize(
-      (fixed ++ random(120000, 20261019)).map(Option(_)) :+ None, 4).toDF("s")
+  // An RDD, not a local relation: the optimizer would otherwise fold the
+  // expressions over the literal rows with the interpreted path.
+  private lazy val stringRdd = spark.sparkContext.parallelize(
+    (fixed ++ random(120000, 20261019)).map(Option(_)) :+ None, 4)
+
+  private def strings(s: SparkSession): DataFrame = {
+    import s.implicits._
+    stringRdd.toDF("s")
   }
 
   private def fast(t: DataType): Column =
@@ -116,14 +118,6 @@ class FlatJsonIntegralSpec extends AnyFunSuite {
   private def reference(t: DataType): Column = get_json_object(col("s"), "$.k").cast(t)
   private def tryReference(t: DataType): Column =
     expr(s"try_cast(get_json_object(s, '$$.k') as ${t.sql})")
-
-  private def withConf[T](pairs: (String, String)*)(body: => T): T = {
-    val conf = spark.sessionState.conf
-    val prev = pairs.map { case (k, _) => k -> (if (conf.contains(k)) Some(spark.conf.get(k)) else None) }
-    pairs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body
-    finally prev.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
-  }
 
   private val modes = Seq(
     "CODEGEN_ONLY" -> Seq("spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY"),
@@ -136,22 +130,22 @@ class FlatJsonIntegralSpec extends AnyFunSuite {
 
   for ((mode, confs) <- modes; t <- Seq(IntegerType, LongType)) {
     test(s"equals get_json_object(..).cast(${t.sql}) with ANSI off ($mode)") {
-      withConf(confs :+ ("spark.sql.ansi.enabled" -> "false"): _*) {
-        val bad = strings.filter(!(flatJsonIntegral(col("s"), "k", t) <=> reference(t)))
+      GraftSession.scoped(spark, confs :+ ("spark.sql.ansi.enabled" -> "false"): _*) { s =>
+        val bad = strings(s).filter(!(flatJsonIntegral(col("s"), "k", t) <=> reference(t)))
         assert(bad.count() == 0, examples(bad, t))
       }
     }
 
     test(s"the fast path decides only what try_cast of the reference gives, ANSI on ($mode, ${t.sql})") {
-      withConf(confs :+ ("spark.sql.ansi.enabled" -> "true"): _*) {
-        val decided = strings.filter(fast(t).isNotNull)
+      GraftSession.scoped(spark, confs :+ ("spark.sql.ansi.enabled" -> "true"): _*) { s =>
+        val decided = strings(s).filter(fast(t).isNotNull)
         val wrong = decided.filter(!(fast(t) <=> tryReference(t)))
         assert(wrong.count() == 0, examples(wrong, t))
         // The scan must carry the common case, not hand everything back.
         assert(decided.count() > 10000, decided.count())
         // Rows the reference answers without a cast error: the helper
         // gives the same answer under ANSI too.
-        val answered = strings.filter(get_json_object(col("s"), "$.k").isNull ||
+        val answered = strings(s).filter(get_json_object(col("s"), "$.k").isNull ||
           tryReference(t).isNotNull)
         val bad = answered.filter(!(flatJsonIntegral(col("s"), "k", t) <=> reference(t)))
         assert(bad.count() == 0, examples(bad, t))
@@ -159,9 +153,9 @@ class FlatJsonIntegralSpec extends AnyFunSuite {
     }
 
     test(s"a malformed k still raises CAST_INVALID_INPUT under ANSI ($mode, ${t.sql})") {
-      import spark.implicits._
-      withConf(confs :+ ("spark.sql.ansi.enabled" -> "true"): _*) {
-        val df = spark.sparkContext.parallelize(Seq("""{"k":1.5}"""), 1).toDF("s")
+      GraftSession.scoped(spark, confs :+ ("spark.sql.ansi.enabled" -> "true"): _*) { s =>
+        import s.implicits._
+        val df = s.sparkContext.parallelize(Seq("""{"k":1.5}"""), 1).toDF("s")
         val e = intercept[Exception](df.select(flatJsonIntegral(col("s"), "k", t)).collect())
         val chain = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
         assert(chain.exists(x => String.valueOf(x.getMessage).contains("CAST_INVALID_INPUT")), e)

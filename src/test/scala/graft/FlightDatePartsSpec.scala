@@ -33,14 +33,12 @@ class FlightDatePartsSpec extends AnyFunSuite {
   }
 
   test("a session zone with midnight DST gaps keeps the timestamp cast path") {
-    val saved = spark.conf.get(Zone)
     val utc = ops.FlightOps.qGroupMonthSumCount(spark, Sf).collect().toSeq
-    try {
-      spark.conf.set(Zone, "America/Sao_Paulo")
-      val flights = ops.FlightOps.flights(spark, Sf)
+    GraftSession.scoped(spark, Zone -> "America/Sao_Paulo") { s =>
+      val flights = ops.FlightOps.flights(s, Sf)
       assert(timestampCasts(flights).nonEmpty, flights.queryExecution.optimizedPlan.toString)
       // The fixture's wall-clock times sit in no gap, so both paths agree.
-      assert(ops.FlightOps.qGroupMonthSumCount(spark, Sf).collect().toSeq == utc)
-    } finally spark.conf.set(Zone, saved)
+      assert(ops.FlightOps.qGroupMonthSumCount(s, Sf).collect().toSeq == utc)
+    }
   }
 }

@@ -15,6 +15,7 @@ class GraftSessionSpec extends AnyFunSuite {
     assert(conf.get("spark.sql.legacy.parquet.nanosAsLong") == "true")
     assert(conf.get("spark.ui.enabled") == "false")
     assert(conf.get("spark.sql.adaptive.enabled") == "true")
+    assert(conf.get("spark.sql.artifact.isolation.enabled") == "false")
     // GraftExtensions is installed: its SQL function resolves
     assert(spark.sql("SELECT cosine_dot(array(1.0d, 2.0d), array(3.0d, 4.0d))")
       .head().getDouble(0) == 11.0)
@@ -41,22 +42,39 @@ class GraftSessionSpec extends AnyFunSuite {
       sys.env.getOrElse("GRAFT_ADVISORY_PARTITION_BYTES", "4m"))
   }
 
-  test("qSkewAqeJoin as a session's first table read keeps the profile and the caller's settings") {
+  test("qSkewAqeJoin as a session's first table read leaves the caller's conf untouched") {
     val advisory = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    def confOf(x: org.apache.spark.sql.SparkSession) = x.sessionState.conf.getAllConfs
     val s = spark.newSession()
+    val before = confOf(s)
     ops.SourceSinkOps.qSkewAqeJoin(s, Sf)
+    // The join's settings and the profile it applied stay in its scoped
+    // session: nothing is set, unset or pinned to a registered default.
+    assert(confOf(s) == before)
+    // The caller's own first table read still gets the profile.
+    Tables.events(s, Sf)
     assert(s.conf.get(advisory) ==
       sys.env.getOrElse("GRAFT_ADVISORY_PARTITION_BYTES", "4m"))
-    // A key the caller never set is unset again, not pinned to Spark's
-    // registered default.
-    assert(!s.sessionState.conf.contains(
-      "spark.sql.adaptive.skewJoin.skewedPartitionFactor"))
-    assert(!s.sessionState.conf.contains("spark.sql.autoBroadcastJoinThreshold"))
     val c = spark.newSession()
     c.conf.set(advisory, "2m")
     c.conf.set("spark.sql.autoBroadcastJoinThreshold", "1m")
     ops.SourceSinkOps.qSkewAqeJoin(c, Sf)
     assert(c.conf.get(advisory) == "2m")
     assert(c.conf.get("spark.sql.autoBroadcastJoinThreshold") == "1m")
+  }
+
+  test("scoped runs on a clone: the caller's conf is never written") {
+    val key = "spark.sql.shuffle.partitions"
+    val c = org.apache.spark.sql.GraftSessionBridge.cloneSession(spark)
+    c.conf.set("spark.graft.spec.marker", "kept")
+    val seen = GraftSession.scoped(c, key -> "3") { s =>
+      assert(s ne c)
+      // The clone keeps the caller's runtime conf, unlike newSession().
+      assert(s.conf.get("spark.graft.spec.marker") == "kept")
+      assert(c.conf.get(key) == "4")
+      s.conf.get(key)
+    }
+    assert(seen == "3")
+    assert(c.conf.get(key) == "4")
   }
 }

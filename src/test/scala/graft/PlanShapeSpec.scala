@@ -202,15 +202,15 @@ class PlanShapeSpec extends AnyFunSuite {
   test("AQE splits the skewed join partition (declarative twin of salting)") {
     // Thresholds sized to the sf0.001 fixture (hot partition a few KB compressed);
     // the decision logic is identical to 256 MB defaults at cluster scale.
-    // withConfs applies the engine's execution profile first, so the
+    // The execution profile skips keys the scoped session sets, so the
     // fixture-sized advisory override below wins.
-    ops.SourceSinkOps.withConfs(spark,
+    GraftSession.scoped(spark,
       "spark.sql.autoBroadcastJoinThreshold" -> "-1",
       "spark.sql.adaptive.skewJoin.enabled" -> "true",
       "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "1.2",
       "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "1024",
-      "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "1024") {
-      val df = ops.SourceSinkOps.skewAqeJoin(spark, Sf)
+      "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "1024") { s =>
+      val df = ops.SourceSinkOps.skewAqeJoin(s, Sf)
       df.collect() // finalize the adaptive plan
       val plan = df.queryExecution.executedPlan.toString
       assert(plan.contains("skewed"), plan.take(4000))
@@ -218,11 +218,11 @@ class PlanShapeSpec extends AnyFunSuite {
   }
 
   test("runtime bloom filter prunes the probe side of the selective join") {
-    ops.SourceSinkOps.withConfs(spark,
+    GraftSession.scoped(spark,
       "spark.sql.autoBroadcastJoinThreshold" -> "-1",
       "spark.sql.optimizer.runtime.bloomFilter.enabled" -> "true",
-      "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold" -> "1024") {
-      val opt = ops.SourceSinkOps.bloomPruneJoin(spark, Sf)
+      "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold" -> "1024") { s =>
+      val opt = ops.SourceSinkOps.bloomPruneJoin(s, Sf)
         .queryExecution.optimizedPlan.toString
       assert(opt.contains("might_contain") && opt.contains("bloom_filter_agg"),
         opt.take(4000))

@@ -134,25 +134,20 @@ class SimilaritySpec extends AnyFunSuite {
 
   test("PQ codebooks and codes are partitioning-independent (the exact-" +
        "integer Lloyd claim, exercised, not assumed)") {
-    val e = ops.SimilarityOps.withDoubleVecs(Tables.embeddings(spark, Sf))
-    def run(): (Seq[String], Seq[String]) = {
+    def run(s: org.apache.spark.sql.SparkSession): (Seq[String], Seq[String]) = {
+      val e = ops.SimilarityOps.withDoubleVecs(Tables.embeddings(s, Sf))
       val cb = ops.SimilarityOps.pqSubCodebooks(e)
       val codes = ops.SimilarityOps.pqEncode(e, cb)
       (cb.collect().map(_.toString).sorted.toSeq,
        codes.collect().map(_.toString).sorted.toSeq)
     }
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    val (cb4, codes4) = run()
+    val (cb4, codes4) = run(spark)
     spark.sharedState.cacheManager.clearCache() // drop the graftCached cb
-    try {
-      spark.conf.set("spark.sql.shuffle.partitions", "7")
-      val (cb7, codes7) = run()
+    try GraftSession.scoped(spark, "spark.sql.shuffle.partitions" -> "7") { s =>
+      val (cb7, codes7) = run(s)
       assert(cb4 == cb7, "codebooks differ across partitionings")
       assert(codes4 == codes7, "codes differ across partitionings")
-    } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", prev)
-      spark.sharedState.cacheManager.clearCache()
-    }
+    } finally spark.sharedState.cacheManager.clearCache()
   }
 
   test("filtered search: every neighbor shares the query's label, k fills, " +

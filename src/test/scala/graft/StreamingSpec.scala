@@ -144,22 +144,14 @@ class StreamingSpec extends AnyFunSuite {
     // state spills to local SSD + checkpoint). Same query, same results,
     // only the provider differs — proves the pipeline is portable to the
     // prod backend, not coupled to the in-memory HDFS-backed default.
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    GraftSession.scoped(spark, "spark.sql.streaming.stateStore.providerClass" ->
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") { s =>
       val rocks = EventStream.runToMemory(
-        spark, EventStream.tumblingCounts(spark, Sf), "t_rocks")
+        s, EventStream.tumblingCounts(s, Sf), "t_rocks")
         .collect().map(r => (r.getLong(0), r.getString(1)) -> r.getLong(2)).toMap
-      val batch = graft.ops.EventOps.qEventsTumbling(spark, Sf)
+      val batch = graft.ops.EventOps.qEventsTumbling(s, Sf)
         .collect().map(r => (r.getLong(0), r.getString(1)) -> r.getLong(2)).toMap
       assert(rocks == batch && rocks.nonEmpty)
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
     }
   }
 
