@@ -41,7 +41,7 @@ object Graft {
     * (production clusters commonly raise it to 256m, guide §9).
     *
     * The profile provides DEFAULTS and never overwrites a setting the
-    * caller made: each of its three confs is set only where the session
+    * caller made: each of its four confs is set only where the session
     * conf does not hold it yet (from the builder, the SparkConf, or a
     * `spark.conf.set` before the first [[Tables.table]] call). It runs
     * once per session, so an override made afterwards (PlanShapeSpec's
@@ -78,6 +78,10 @@ object Graft {
     // partitioning surviving the cache (joins re-key or broadcast), so
     // byte-sized cache partitions are purely fewer, fuller tasks.
     default("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
+    // The TIMESTAMP(NANOS) form of `events.ts` is readable only as a long
+    // ([[Tables.events]] converts it back); harmless for the other forms.
+    // A session built outside GraftSession.local may lack it.
+    default("spark.sql.legacy.parquet.nanosAsLong", "true")
   }
 
   // dedup

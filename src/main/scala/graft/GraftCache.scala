@@ -170,8 +170,8 @@ object GraftCache {
   private[graft] def trackedSessions: Int =
     tracked.synchronized(tracked.size)
 
-  /** Full storage-isolation sweep for harnesses (Bench/Verify/
-    * ScaleSmoke between queries, spec setup): release tracked caches,
+  /** Full storage-isolation sweep for harnesses (Bench/Verify between
+    * queries, spec setup): release tracked caches,
     * then unpersist EVERY remaining persistent RDD (this is what frees
     * localCheckpoint blocks — Dataset.unpersist does not) and clear the
     * SQL cache. Deliberately scorched-earth — it drops USER caches too

@@ -3,8 +3,8 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** The one place a graft SparkSession is built. Every main (Bench,
-  * Verify, ExplainDump, ScaleSmoke, Probe32) and the test suite's shared
-  * session come from [[local]], so the engine runs under one conf:
+  * Verify, Probe32) and the test suite's shared session come from
+  * [[local]], so the engine runs under one conf:
   *
   *  - `local[cpus]` with `spark.sql.shuffle.partitions = cpus` (the
   *    core-count scaling the bench record is read against);

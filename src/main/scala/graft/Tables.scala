@@ -13,9 +13,9 @@ import org.apache.spark.sql.functions._
 object Tables {
   def table(spark: SparkSession, dir: String, name: String): DataFrame = {
     // Every query path reads its fixture input through here: apply the
-    // engine's byte-based AQE coalescing profile (see Graft.tuneExecution)
-    // exactly once per session-conf view. Runtime-settable confs, same
-    // defensive pattern as the nanosAsLong set in [[events]].
+    // engine's execution profile (see Graft.tuneExecution, which also
+    // defaults the nanosAsLong flag [[events]] needs) exactly once per
+    // session-conf view, skipping any key the caller set.
     Graft.tuneExecution(spark)
     spark.read.parquet(s"$dir/$name.parquet")
   }
@@ -39,10 +39,6 @@ object Tables {
     * on every derived microsecond value.
     */
   def events(s: SparkSession, d: String): DataFrame = {
-    // Defensive: a caller-built session (e.g. the driver's smoke harness)
-    // may lack the flag; it is runtime-settable and required to read a
-    // TIMESTAMP(NANOS) column at all (harmless for micros fixtures).
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val raw = table(s, d, "events")
     raw.schema("ts").dataType match {
       case org.apache.spark.sql.types.LongType =>
@@ -71,7 +67,6 @@ object Tables {
     * conversion) is then pruned from the plan.
     */
   def eventsWithRawTs(s: SparkSession, d: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val raw = table(s, d, "events")
     raw.schema("ts").dataType match {
       case org.apache.spark.sql.types.LongType =>

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.FixtureStores
 
 /** Store-persisted ANN index: the [[SimilarityOps.annIvfPq]] pipeline
   * with its two derived relations — codebook and int8 posting lists —
@@ -363,46 +364,15 @@ object AnnIndexOps {
   }
 
   // ---- driver-contract wrappers (oracle-pinned defaults) ----
+  //
+  // The maintenance and filtered rows price their OPERATOR (an append, a
+  // delete, a rebalance, a filtered serve) against an index built once
+  // ([[FixtureStores]]), as a production system appends to an index it
+  // built once. The BUILD stays priced, cold, every run by the two
+  // anchor rows [[qAnnIndexServe]] (int8) and [[qAnnPq]] (true PQ).
 
   private def storeName(prefix: String, dir: String): String =
     prefix + dir.replaceAll("[^a-zA-Z0-9]", "_")
-
-  /** Schema-generation stamp folded into every index content address;
-    * bump on ANY change to the stored layout or the build pipeline so
-    * every persisted artifact self-invalidates once. */
-  private val AnnStoreVersion = 1L
-
-  /** Content address of an index build: the input relation's
-    * fingerprint mixed with the build-parameter string and
-    * [[AnnStoreVersion]]. Build inputs that are SLICES of `embs` encode
-    * the slice in `params` (fingerprinting the full relation once is
-    * cheaper than once per slice and addresses the same content). */
-  private def annBuildFp(embs: DataFrame, params: String): Long =
-    KeyedStore.contentFingerprint(embs) * 1000003L +
-      scala.util.hashing.MurmurHash3.stringHash(params).toLong +
-      AnnStoreVersion
-
-  /** Train-once/serve-frozen resolution for the DERIVED index rows
-    * (round-17 optimization; the suffix family's [[DedupOps
-    * .suffixStoreFresh]] discipline applied to the ANN stores): the
-    * maintenance/filtered rows price their OPERATOR — an append, a
-    * delete, a rebalance, a filtered serve — not the repeated
-    * construction of the index they run against, exactly as a
-    * production system appends to an index built once. The base build
-    * lands in a content-addressed cache (freshness = input fingerprint
-    * + params + schema stamp); MUTATING rows then clone it to their
-    * scratch name by file copy ([[KeyedStore.cloneStore]] — a clone of
-    * a built artifact costs IO proportional to its bytes, never the
-    * build), while serve-only rows resolve their own store in place.
-    * The BUILD capability itself stays priced, cold, every run by the
-    * two anchor rows [[qAnnIndexServe]] (int8 family) and [[qAnnPq]]
-    * (true-PQ family) — the q_suffix_index_build pattern. */
-  private def resolveCloned(spark: SparkSession, cache: String,
-                            name: String, fp: Long)
-                           (build: => Unit): Unit = {
-    KeyedStore.ensureCached(spark, cache, fp)(build)
-    KeyedStore.cloneStore(spark, cache, name)
-  }
 
   /** Build-then-serve over the full corpus — results identical to
     * [[SimilarityOps.annIvfPq]] (same stages, persisted in between),
@@ -424,34 +394,9 @@ object AnnIndexOps {
   def qAnnIndexIncremental(spark: SparkSession, dir: String): DataFrame = {
     val name = storeName("graft_ann_inc_", dir)
     val embs = embeddings(spark, dir)
-    KeyedStore.cloneStore(spark, b90Cache(spark, dir, embs), name)
+    FixtureStores.annBase90(spark, dir, embs, pq = false, name)
     appendBatch(spark, name, embs.filter(col("vec_id") % 10 === 0))
     serve(spark, name, embs, col("vec_id") < 5)
-  }
-
-  /** The shared base-90% int8 index cache (content-addressed): the
-    * frozen-codebook victim [[qAnnIndexIncremental]],
-    * [[qAnnIndexRebalance]], and the streaming append twin all build
-    * the SAME index from the same slice — one cache serves all three.
-    * Returns the cache name, fresh on return. */
-  private[graft] def b90Cache(spark: SparkSession, dir: String,
-                              embs: DataFrame): String = {
-    val cache = storeName("graft_ann_b90cache_", dir)
-    KeyedStore.ensureCached(spark, cache,
-      annBuildFp(embs, "idx:int8:base=mod10ne0:t512"))(
-      buildIndex(spark, cache, embs.filter(col("vec_id") % 10 =!= 0)))
-    cache
-  }
-
-  /** The true-PQ twin of [[b90Cache]] ([[qAnnPqIncremental]],
-    * [[qAnnPqRebalance]], streaming PQ append). */
-  private[graft] def pqB90Cache(spark: SparkSession, dir: String,
-                                embs: DataFrame): String = {
-    val cache = storeName("graft_ann_adcb90cache_", dir)
-    KeyedStore.ensureCached(spark, cache,
-      annBuildFp(embs, "idx:pq:base=mod10ne0:t512"))(
-      buildPqIndex(spark, cache, embs.filter(col("vec_id") % 10 =!= 0)))
-    cache
   }
 
   /** GDPR-shaped forget: build from the FULL corpus, delete the 10%
@@ -461,11 +406,8 @@ object AnnIndexOps {
     */
   def qAnnIndexDelete(spark: SparkSession, dir: String): DataFrame = {
     val name = storeName("graft_ann_del_", dir)
-    val cache = storeName("graft_ann_delcache_", dir)
     val embs = embeddings(spark, dir)
-    resolveCloned(spark, cache, name,
-      annBuildFp(embs, "idx:int8:full:t512"))(
-      buildIndex(spark, cache, embs))
+    FixtureStores.annFull(spark, embs, pq = false, name)
     deleteBatch(spark, name, embs.filter(col("vec_id") % 10 === 0))
     serve(spark, name, embs, col("vec_id") < 5)
   }
@@ -482,9 +424,7 @@ object AnnIndexOps {
     val embs = embeddings(spark, dir)
     // Serve-only row: resolve the store in place (no mutation, so no
     // clone needed — the suffix-serve discipline).
-    KeyedStore.ensureCached(spark, name,
-      annBuildFp(embs, "idx:int8:full:labels:t512"))(
-      buildIndex(spark, name, embs, withLabels = true))
+    FixtureStores.annLabeled(spark, embs, pq = false, name)
     serve(spark, name, embs, col("vec_id") < 5, sameLabelOnly = true)
   }
 
@@ -538,11 +478,8 @@ object AnnIndexOps {
     * the unchanged full-corpus codebooks. */
   def qAnnPqDelete(spark: SparkSession, dir: String): DataFrame = {
     val name = storeName("graft_ann_adcdel_", dir)
-    val cache = storeName("graft_ann_adcdelcache_", dir)
     val embs = embeddings(spark, dir)
-    resolveCloned(spark, cache, name,
-      annBuildFp(embs, "idx:pq:full:t512"))(
-      buildPqIndex(spark, cache, embs))
+    FixtureStores.annFull(spark, embs, pq = true, name)
     deletePqBatch(spark, name, embs.filter(col("vec_id") % 10 === 0))
     servePq(spark, name, embs, col("vec_id") < 5)
   }
@@ -554,7 +491,7 @@ object AnnIndexOps {
   def qAnnPqRebalance(spark: SparkSession, dir: String): DataFrame = {
     val name = storeName("graft_ann_adcreb_", dir)
     val embs = embeddings(spark, dir)
-    KeyedStore.cloneStore(spark, pqB90Cache(spark, dir, embs), name)
+    FixtureStores.annBase90(spark, dir, embs, pq = true, name)
     appendPqBatch(spark, name, embs.filter(col("vec_id") % 10 === 0))
     KeyedStore.rebalance(spark, name, "row_key", targetRowsPerRegion = 512)
     servePq(spark, name, embs, col("vec_id") < 5)
@@ -568,7 +505,7 @@ object AnnIndexOps {
   def qAnnPqIncremental(spark: SparkSession, dir: String): DataFrame = {
     val name = storeName("graft_ann_adcinc_", dir)
     val embs = embeddings(spark, dir)
-    KeyedStore.cloneStore(spark, pqB90Cache(spark, dir, embs), name)
+    FixtureStores.annBase90(spark, dir, embs, pq = true, name)
     appendPqBatch(spark, name, embs.filter(col("vec_id") % 10 === 0))
     servePq(spark, name, embs, col("vec_id") < 5)
   }
@@ -581,9 +518,7 @@ object AnnIndexOps {
     val name = storeName("graft_ann_adcfil_", dir)
     val embs = embeddings(spark, dir)
     // Serve-only row: resolve in place ([[qAnnIndexFiltered]]'s note).
-    KeyedStore.ensureCached(spark, name,
-      annBuildFp(embs, "idx:pq:full:labels:t512"))(
-      buildPqIndex(spark, name, embs, withLabels = true))
+    FixtureStores.annLabeled(spark, embs, pq = true, name)
     servePq(spark, name, embs, col("vec_id") < 5, sameLabelOnly = true)
   }
 
@@ -600,7 +535,7 @@ object AnnIndexOps {
   def qAnnIndexRebalance(spark: SparkSession, dir: String): DataFrame = {
     val name = storeName("graft_ann_reb_", dir)
     val embs = embeddings(spark, dir)
-    KeyedStore.cloneStore(spark, b90Cache(spark, dir, embs), name)
+    FixtureStores.annBase90(spark, dir, embs, pq = false, name)
     appendBatch(spark, name, embs.filter(col("vec_id") % 10 === 0))
     KeyedStore.rebalance(spark, name, "row_key", targetRowsPerRegion = 512)
     serve(spark, name, embs, col("vec_id") < 5)

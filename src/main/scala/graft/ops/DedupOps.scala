@@ -640,9 +640,10 @@ object DedupOps {
     * runtime and picks broadcast only when it actually fits
     * (spark.sql.autoBroadcastJoinThreshold); otherwise both sides
     * shuffle on doc_id, which is the correct linear-in-corpus plan for a
-    * high-duplication corpus. Validated by ScaleSmoke's "dedupApply
-    * high-dup" probe (≥50% duplicate corpus, broadcast threshold forced
-    * to -1 so the shuffled path itself is what's measured).
+    * high-duplication corpus. Validated by the `dedup_apply_highdup`
+    * weak-scaling probe (50.8 % duplicate corpus, broadcast threshold
+    * forced to -1 so the shuffled path itself is what's measured;
+    * ROUND4_NOTES, ROUND5_NOTES).
     */
   def dedupApply(docs: DataFrame, pairs: DataFrame, maxIters: Int = 20): DataFrame = {
     val dropped = dedupClusters(pairs, maxIters)
@@ -1007,8 +1008,8 @@ object DedupOps {
     * both ranks switch to [[deskewedGroupRank]] — the same bucket-start
     * arithmetic computed by distributed rank + distributed prefix sum
     * with no per-group sort anywhere (round-13 verdict item #1;
-    * SuffixDedupSpec pins path equality, ScaleSmoke probes a 30%-skew
-    * corpus).
+    * SuffixDedupSpec pins path equality; the `suffix_skew` probe on a
+    * 30%-skew corpus is in ROUND14_NOTES).
     *
     * The threshold is "rows ONE window task can sort comfortably", not
     * a skew detector: 2^22 ≈ 4M rows of (r, r2) longs sort in ~1 s in a
@@ -1193,7 +1194,8 @@ object DedupOps {
     * side when small and splits skewed shuffle partitions otherwise),
     * and nothing anywhere sorts within a group. SuffixDedupSpec pins
     * equality with the window path on constructed corpora and the
-    * fixture; the ScaleSmoke skew probe exercises it at 10×.
+    * fixture; the `suffix_skew` probe exercised it at 10×
+    * (ROUND14_NOTES).
     */
   private[graft] def deskewedGroupRank(rows: DataFrame,
                                        keyCols: Seq[String]): DataFrame = {

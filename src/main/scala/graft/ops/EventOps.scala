@@ -355,8 +355,9 @@ object EventOps {
     * funnels all of them through ONE task, and fixed-width TIME buckets
     * (the obvious alternative) degrade the same way whenever load
     * concentrates in a few hot hours — range partitioning balances by
-    * row count no matter how the time axis is distributed (ScaleSmoke's
-    * peak_conc_skew probe: 2M sessions inside one hour). Ends still sort
+    * row count no matter how the time axis is distributed (the
+    * `peak_conc_skew` probe in ROUND5_NOTES: 2M sessions, 90 % inside
+    * one hour, 3.2 s). Ends still sort
     * before starts at equal t (d = −1 < +1), so touching intervals don't
     * double-count; equal (t, d) rows split across a partition boundary
     * carry equal deltas, so every prefix value is order-independent. The

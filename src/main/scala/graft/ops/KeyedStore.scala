@@ -1948,11 +1948,10 @@ object KeyedStore {
     * directory) into the destination's warehouse location and register
     * a catalog table over it. Pure file copy, never a Spark job:
     * cloning a built artifact costs IO proportional to its bytes, not
-    * the computation that produced it — the content-addressed
-    * fixture-store pattern (build once under a fingerprint-checked
-    * name, clone per consumer; ScrubOps.qForgetCascade). Lock files
-    * and in-progress sentinels are NOT copied: a clone of a quiescent
-    * store is quiescent. The destination is dropped first and is fully
+    * the computation that produced it (build once, clone per consumer:
+    * [[graft.FixtureStores]]). [[copyTree]] leaves lock files and
+    * in-progress sentinels behind: a clone of a quiescent store is
+    * quiescent. The destination is dropped first and is fully
     * independent afterwards (copy-on-write regions never share files).
     * Source must be quiescent (no concurrent writer) — same
     * single-maintainer assumption as [[rebalance]].
@@ -1961,26 +1960,8 @@ object KeyedStore {
     withStructuralLock(spark, dst) {
       require(exists(spark, src), s"cloneStore: source $src does not exist")
       dropWithLocation(spark, dst)
-      val from = location(spark, src)
       val to = location(spark, dst)
-      def skip(n: String): Boolean =
-        n.endsWith(".graft-lock") || n == "_sfx_inprogress" ||
-          n == "_graft_cache_fp" // a clone is a WORKING copy, usually
-          // mutated next — carrying the source's content-address stamp
-          // would leave a fresh-looking fingerprint on changed content
-      def copyRec(f: Path, t: Path): Unit =
-        if (Files.isDirectory(f)) {
-          Files.createDirectories(t)
-          scala.util.Using.resource(Files.list(f)) { s =>
-            s.iterator().asScala.foreach(c =>
-              copyRec(c, t.resolve(c.getFileName.toString)))
-          }
-        } else if (!skip(f.getFileName.toString)) {
-          Files.copy(f, t,
-            java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-          ()
-        }
-      copyRec(from, to)
+      copyTree(location(spark, src), to)
       // Same physical layout as a created store, registered as a table
       // over the copied location; partition metadata recovered from the
       // kr= directories (the catalog needs it for the per-region
@@ -1992,73 +1973,27 @@ object KeyedStore {
       invalidateDirCache(spark, dst)
     }
 
+  /** Recursive copy of a quiescent store directory: lock files,
+    * in-progress sentinels and fixture freshness stamps stay behind, so
+    * a copy is never locked, never mid-build and never reads fresh (it
+    * is a working copy, usually mutated next). */
+  private[graft] def copyTree(from: Path, to: Path): Unit =
+    if (Files.isDirectory(from)) {
+      Files.createDirectories(to)
+      scala.util.Using.resource(Files.list(from)) { s =>
+        s.iterator().asScala.foreach(c =>
+          copyTree(c, to.resolve(c.getFileName.toString)))
+      }
+    } else {
+      val n = from.getFileName.toString
+      if (!n.endsWith(".graft-lock") && n != "_sfx_inprogress" && n != "_graft_cache_fp")
+        Files.copy(from, to, java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    }
+
   /** Does the catalog table exist? (foreachBatch sinks create on first
     * batch.) */
   def exists(spark: SparkSession, name: String): Boolean =
     spark.catalog.tableExists(name)
-
-  // ------- content-addressed artifact caching (train-once/serve) -------
-
-  /** Content fingerprint of a relation: xxhash64 over every column,
-    * term-reduced mod 1000003 (commutative sum — row order independent),
-    * mixed with the row count. The freshness key of the content-
-    * addressed artifact caches ([[cacheFresh]]); callers fold build
-    * parameters and a schema-generation stamp in on top. One columnar
-    * aggregate pass over the input — the probe costs O(input), the
-    * build it guards costs far more.
-    */
-  def contentFingerprint(df: DataFrame): Long =
-    df.agg((coalesce(sum(pmod(xxhash64(df.columns.map(col): _*),
-        lit(1000003L))), lit(0L)) * 31L + count(lit(1))).as("fp"))
-      .head().getLong(0)
-
-  private def cacheFpPath(spark: SparkSession, name: String): Path =
-    location(spark, name).resolve("_graft_cache_fp")
-
-  /** True iff store `name` exists and carries a fingerprint stamp equal
-    * to `fp`. The stamp is written strictly AFTER the build completes
-    * ([[stampCacheFp]]), so a torn build can never read fresh. */
-  def cacheFresh(spark: SparkSession, name: String, fp: Long): Boolean =
-    exists(spark, name) && {
-      val p = cacheFpPath(spark, name)
-      Files.exists(p) &&
-        new String(Files.readAllBytes(p), "UTF-8") == fp.toString
-    }
-
-  /** Stamp `name`'s content-address fingerprint (atomic publish). */
-  def stampCacheFp(spark: SparkSession, name: String, fp: Long): Unit =
-    atomicWriteBytes(cacheFpPath(spark, name), fp.toString.getBytes("UTF-8"))
-
-  /** Train-once resolution for a content-addressed artifact store:
-    * build (and stamp) only when `name` is absent, torn, or stamped for
-    * different content. `build` must (re)create the table `name`; the
-    * create's own drop-first wipes any stale stamp, so every crash
-    * window inside the build reads stale → rebuild.
-    */
-  def ensureCached(spark: SparkSession, name: String, fp: Long)
-                  (build: => Unit): Unit =
-    if (!cacheFresh(spark, name, fp)) {
-      build
-      stampCacheFp(spark, name, fp)
-    }
-
-  /** [[ensureCached]] specialization for a plain [[create]]: resolve
-    * `name` as a content-addressed copy of `rows` (key column and
-    * region target folded into the address), creating only on miss or
-    * stale. For FIXTURE/SERVING stores whose construction is not the
-    * capability under measurement — the row's operator (a read, a
-    * merge against a clone) stays fully priced while the victim store
-    * resolves at fingerprint-probe cost, the way a production store
-    * outlives the queries served from it.
-    */
-  def ensureCreated(spark: SparkSession, name: String, rows: DataFrame,
-                    key: String, targetRowsPerRegion: Long): Unit = {
-    val fp = contentFingerprint(rows) * 31L +
-      scala.util.hashing.MurmurHash3
-        .stringHash(s"$key:$targetRowsPerRegion").toLong
-    ensureCached(spark, name, fp)(
-      create(spark, name, rows, key, targetRowsPerRegion))
-  }
 
   /** Maintenance: re-derive balanced regions from the current table —
     * the major-compaction / region-split pass that absorbs growth after

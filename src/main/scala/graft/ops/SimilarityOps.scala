@@ -487,7 +487,8 @@ object SimilarityOps {
     * neighbor sits in one bucket; XOR is a bijection), so candidates are
     * duplicate-free without a distinct. At 100 TB, grow `planes` with
     * log₂(n) so per-bucket membership — and with it candidates per query
-    * — stays constant (the ScaleSmoke probe scales planes exactly so);
+    * — stays constant (the weak-scaling probe in ROUND5_NOTES scaled
+    * planes exactly so);
     * top-k is a per-vec_id window — high-cardinality partitions, never
     * global.
     */

@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import graft.FixtureStores
 import graft.functions.JsonFunctions.flatJsonIntegral
 
 /** Source/sink surface closing the reference's remaining I/O operators
@@ -260,7 +261,7 @@ object SourceSinkOps {
     // Read-only serving row: the store resolves content-addressed
     // (create only on miss/stale — the suffix/ANN warm-serve
     // discipline; q_populate stays the cold create anchor).
-    KeyedStore.ensureCreated(spark, name,
+    FixtureStores.keyed(spark, name,
       events(spark, dir)
         .withColumn("row_key", md5(col("event_id").cast("string")))
         .select(col("row_key"), col("event_id"), col("event_type"), col("value")),
@@ -282,7 +283,7 @@ object SourceSinkOps {
     */
   def qKeyedRange(spark: SparkSession, dir: String): DataFrame = {
     val name = "graft_keyed_range_" + dir.replaceAll("[^a-zA-Z0-9]", "_")
-    KeyedStore.ensureCreated(spark, name, // read-only row (qKeyedLookup's note)
+    FixtureStores.keyed(spark, name, // read-only row (qKeyedLookup's note)
       orders(spark, dir)
         .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice")),
       "o_orderkey", targetRowsPerRegion = 2048)
@@ -328,15 +329,13 @@ object SourceSinkOps {
     // index resolve from content-addressed caches, cloned per run
     // (qKeyedTtl's note) — the dual write + indexed serve stay fully
     // priced, the victim construction doesn't repeat.
-    KeyedStore.ensureCreated(spark, p + "cache", ev, "event_id",
+    FixtureStores.keyedClone(spark, p, ev, "event_id",
       targetRowsPerRegion = 2048)
-    KeyedStore.cloneStore(spark, p + "cache", p)
-    KeyedStore.ensureCreated(spark, i + "cache",
+    FixtureStores.keyedClone(spark, i,
       ev.select(format_string("%s#%012d", col("event_type"), col("event_id"))
           .as("ikey"),
         col("event_id").as("ref_id")),
       "ikey", targetRowsPerRegion = 2048)
-    KeyedStore.cloneStore(spark, i + "cache", i)
     val mv = ev.filter(col("event_type") =!= "purchase")
       .agg(min(col("event_id"))).collect().head.getLong(0)
     val oldType = ev.filter(col("event_id") === mv)
@@ -382,14 +381,11 @@ object SourceSinkOps {
     val ev = events(spark, dir).select(col("event_id"),
       unix_micros(col("ts")).as("ts_us"), col("event_type"),
       round(col("value") * 100).cast("long").as("value_c"))
-    // MUTATING row (the sweep deletes): victim store resolves from a
-    // content-addressed cache and is CLONED per run, so the expire
-    // runs against a full store each time at snapshot-restore cost
-    // (the forget-cascade discipline).
-    val cache = "graft_keyed_ttlcache_" + dir.replaceAll("[^a-zA-Z0-9]", "_")
-    KeyedStore.ensureCreated(spark, cache, ev, "event_id",
+    // MUTATING row (the sweep deletes): the victim store is a fresh
+    // clone of a cached build every run, so the expire runs against a
+    // full store each time at snapshot-restore cost.
+    FixtureStores.keyedClone(spark, name, ev, "event_id",
       targetRowsPerRegion = 2048)
-    KeyedStore.cloneStore(spark, cache, name)
     val mm = ev.agg(min(col("ts_us")), max(col("ts_us"))).collect().head
     val cutoff = (mm.getLong(0) + mm.getLong(1)) / 2
     val nExpired = KeyedStore.expire(spark, name, "event_id", "ts_us", cutoff)
@@ -413,7 +409,7 @@ object SourceSinkOps {
     */
   def qKeyedBloom(spark: SparkSession, dir: String): DataFrame = {
     val name = "graft_keyed_bloom_" + dir.replaceAll("[^a-zA-Z0-9]", "_")
-    KeyedStore.ensureCreated(spark, name, // read-only row (qKeyedLookup's note)
+    FixtureStores.keyed(spark, name, // read-only row (qKeyedLookup's note)
       orders(spark, dir)
         .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice")),
       "o_orderkey", targetRowsPerRegion = 2048)
@@ -441,7 +437,7 @@ object SourceSinkOps {
     // 1024-row regions keep the store multi-region even at sf0.001, so
     // the injected kr prune is visible in PLANS.md at every fixture SF
     // (with a single region the rule correctly declines to inject).
-    KeyedStore.ensureCreated(spark, name, // read-only row (qKeyedLookup's note)
+    FixtureStores.keyed(spark, name, // read-only row (qKeyedLookup's note)
       orders(spark, dir)
         .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice")),
       "o_orderkey", targetRowsPerRegion = 1024)
@@ -471,7 +467,7 @@ object SourceSinkOps {
     */
   def qSqlKeyedJoin(spark: SparkSession, dir: String): DataFrame = {
     val name = "graft_keyed_join_" + dir.replaceAll("[^a-zA-Z0-9]", "_")
-    KeyedStore.ensureCreated(spark, name, // read-only row (qKeyedLookup's note)
+    FixtureStores.keyed(spark, name, // read-only row (qKeyedLookup's note)
       orders(spark, dir)
         .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice")),
       "o_orderkey", targetRowsPerRegion = 1024)
@@ -499,7 +495,7 @@ object SourceSinkOps {
     */
   def qKeyedMultiget(spark: SparkSession, dir: String): DataFrame = {
     val name = "graft_keyed_mget_" + dir.replaceAll("[^a-zA-Z0-9]", "_")
-    KeyedStore.ensureCreated(spark, name, // read-only row (qKeyedLookup's note)
+    FixtureStores.keyed(spark, name, // read-only row (qKeyedLookup's note)
       orders(spark, dir)
         .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice")),
       "o_orderkey", targetRowsPerRegion = 2048)
@@ -1032,34 +1028,19 @@ object SourceSinkOps {
   def qBucketedJoin(spark: SparkSession, dir: String): DataFrame = {
     val tag = dir.replaceAll("[^a-zA-Z0-9]", "_")
     // "The cost moves to the one-time write, amortized over every
-    // subsequent join" — made literal (round-17): each bucketed table
-    // resolves content-addressed (fingerprint stamped AFTER the write,
-    // beside the table files) and is rewritten only when its input
-    // changed, so the row prices the exchange-free join the layout
-    // exists for, not a per-run rewrite of the layout.
-    def bucketed(table: String, path: String, rows: DataFrame,
-                 key: String): Unit = {
-      val fp = KeyedStore.contentFingerprint(rows) * 31L + key.hashCode
-      val fpPath = java.nio.file.Paths.get(path, "_graft_cache_fp")
-      val fresh = spark.catalog.tableExists(table) &&
-        java.nio.file.Files.exists(fpPath) &&
-        new String(java.nio.file.Files.readAllBytes(fpPath),
-          "UTF-8") == fp.toString
-      if (!fresh) {
-        spark.sql(s"DROP TABLE IF EXISTS $table")
-        rows.write.bucketBy(8, key).sortBy(key)
-          .option("path", path).mode("overwrite").saveAsTable(table)
-        KeyedStore.atomicWriteBytes(fpPath, fp.toString.getBytes("UTF-8"))
-      }
-    }
-    bucketed(s"gb_orders_$tag", tmp(dir, "borders"),
+    // subsequent join" made literal: each bucketed table is rewritten
+    // only when its input changed, so the row prices the exchange-free
+    // join the layout exists for, not a per-run rewrite of the layout.
+    val bOrders = FixtureStores.bucketed(spark, s"gb_orders_$tag",
+      tmp(dir, "borders"),
       orders(spark, dir).select(col("o_orderkey"), col("o_orderpriority")),
       "o_orderkey")
-    bucketed(s"gb_lineitem_$tag", tmp(dir, "blineitem"),
+    val bItems = FixtureStores.bucketed(spark, s"gb_lineitem_$tag",
+      tmp(dir, "blineitem"),
       lineitem(spark, dir).select(col("l_orderkey"), col("l_extendedprice")),
       "l_orderkey")
-    spark.table(s"gb_orders_$tag").hint("merge")
-      .join(spark.table(s"gb_lineitem_$tag"),
+    spark.table(bOrders).hint("merge")
+      .join(spark.table(bItems),
             col("o_orderkey") === col("l_orderkey"))
       .groupBy(col("o_orderpriority"))
       .agg(count(lit(1)).as("n_items"),
@@ -1105,72 +1086,16 @@ object SourceSinkOps {
                   lit("I").as("op"), lit("N").as("o_orderstatus"),
                   col("o_totalprice")))
     val name = "graft_keyed_orders_" + dir.replaceAll("[^a-zA-Z0-9]", "_")
-    // MUTATING row (the merge rewrites regions): victim store resolves
-    // from a content-addressed cache, cloned per run (qKeyedTtl's note).
-    KeyedStore.ensureCreated(spark, name + "cache", base, "o_orderkey",
+    // MUTATING row (the merge rewrites regions): a fresh clone of a
+    // cached build every run (qKeyedTtl's note).
+    FixtureStores.keyedClone(spark, name, base, "o_orderkey",
       targetRowsPerRegion = 2048)
-    KeyedStore.cloneStore(spark, name + "cache", name)
     KeyedStore.upsert(spark, name, "o_orderkey",
         changes.select(col("o_orderkey"), col("op"),
                        col("o_orderstatus"), col("o_totalprice")))
       .select(col("o_orderkey"), col("o_orderstatus"),
               round(col("o_totalprice"), 2).as("price"))
       .orderBy(col("o_orderkey"))
-  }
-
-  /** Time travel over the [[VersionedStore]]: build snapshot v1 from a
-    * deterministic orders slice, commit a U/I/D change set (copy-on-write
-    * — only touched buckets rewritten, the rest SHARED with v1), then
-    * read BOTH snapshots back and summarize. v1's summary after the
-    * commit is the snapshot-isolation proof: the old version is
-    * untouched by the new one. Everything data-sized runs as distributed
-    * scans/merges inside the store; the result materializes via
-    * localCheckpoint (the stream-upsert pattern) so the temp store can
-    * be deleted.
-    */
-  /** Build the deterministic two-snapshot VersionedStore both
-    * time-travel queries read: v1 = the orders %5 slice, v2 = v1 with
-    * keys %3=0 updated (+111), %3=1 deleted, and a k+1 insert (+7) per
-    * %3=2 key. Returns the store path (caller deletes). */
-  private def twoSnapshotStore(spark: SparkSession, dir: String): String = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_tt").toString
-    val base = orders(spark, dir)
-      .filter(col("o_orderkey") % 5 === 0)
-      .select(col("o_orderkey"),
-              round(col("o_totalprice") * 100).cast("long").as("cents"))
-    // Content-addressed fixture cache (round-17): FIVE consumer rows
-    // (time travel ×2, restore, diff, CDC view) each price their own
-    // lifecycle read/commit, not the repeated construction of this
-    // shared two-snapshot victim — build it once per corpus
-    // fingerprint (the change set is a pure function of `base`, so
-    // fp(base) addresses the whole store) and file-copy per run, the
-    // forget-cascade vstore pattern. Restore/compact consumers mutate
-    // their COPY; the cache stays at exactly two versions.
-    val cache = java.nio.file.Paths.get(
-      System.getProperty("java.io.tmpdir"),
-      "graft_tt_cache_" + dir.replaceAll("[^a-zA-Z0-9]", "_"))
-    val fp = KeyedStore.contentFingerprint(base)
-    val fpFile = cache.resolve("_graft_cache_fp")
-    val fresh = java.nio.file.Files.exists(fpFile) &&
-      new String(java.nio.file.Files.readAllBytes(fpFile),
-        "UTF-8") == fp.toString
-    if (!fresh) {
-      graft.streaming.EventStream.deleteRecursively(cache)
-      java.nio.file.Files.createDirectories(cache)
-      VersionedStore.init(spark, cache.toString, base, "o_orderkey")
-      val changes = base.filter(col("o_orderkey") % 3 === 0)
-          .select(col("o_orderkey"), lit("U").as("op"),
-                  (col("cents") + 111L).as("cents"))
-        .unionByName(base.filter(col("o_orderkey") % 3 === 1)
-          .select(col("o_orderkey"), lit("D").as("op"), col("cents")))
-        .unionByName(base.filter(col("o_orderkey") % 3 === 2)
-          .select((col("o_orderkey") + 1L).as("o_orderkey"),
-                  lit("I").as("op"), (col("cents") + 7L).as("cents")))
-      VersionedStore.commit(spark, cache.toString, changes, "o_orderkey")
-      KeyedStore.atomicWriteBytes(fpFile, fp.toString.getBytes("UTF-8"))
-    }
-    ScrubOps.copyDir(cache, java.nio.file.Paths.get(tmp))
-    tmp
   }
 
   /** Versioned point-GET with manifest FILE SKIPPING
@@ -1184,7 +1109,7 @@ object SourceSinkOps {
     * file-count contract; the oracle recomputes v2 and filters.
     */
   def qTimeTravelGet(spark: SparkSession, dir: String): DataFrame = {
-    val tmp = twoSnapshotStore(spark, dir)
+    val tmp = FixtureStores.twoSnapshotStore(spark, dir)
     try VersionedStore
       .getAsOf(spark, tmp, 2, "o_orderkey",
                Seq(5L, 6L, 10L, 15L, 10000005L))
@@ -1195,8 +1120,17 @@ object SourceSinkOps {
       java.nio.file.Paths.get(tmp))
   }
 
+  /** Time travel over the [[VersionedStore]]: snapshot v1 is a
+    * deterministic orders slice and v2 commits a U/I/D change set on it
+    * (copy-on-write — only touched buckets rewritten, the rest SHARED
+    * with v1; [[FixtureStores.twoSnapshotStore]]). Read BOTH snapshots
+    * back and summarize: v1's summary after the commit is the
+    * snapshot-isolation proof, the old version is untouched by the new
+    * one. The result materializes via localCheckpoint (the
+    * stream-upsert pattern) so the temp store can be deleted.
+    */
   def qTimeTravel(spark: SparkSession, dir: String): DataFrame = {
-    val tmp = twoSnapshotStore(spark, dir)
+    val tmp = FixtureStores.twoSnapshotStore(spark, dir)
     def summary(version: Int) = VersionedStore.asOf(spark, tmp, version)
       .agg(count(lit(1)).as("n_rows"),
            countDistinct(col("o_orderkey")).as("n_keys"),
@@ -1223,7 +1157,7 @@ object SourceSinkOps {
     * difference).
     */
   def qVstoreRestore(spark: SparkSession, dir: String): DataFrame = {
-    val tmp = twoSnapshotStore(spark, dir)
+    val tmp = FixtureStores.twoSnapshotStore(spark, dir)
     try {
       val v3 = VersionedStore.restore(tmp, toVersion = 1)
       def summary(version: Int) = VersionedStore.asOf(spark, tmp, version)
@@ -1255,7 +1189,7 @@ object SourceSinkOps {
     * store can be deleted.
     */
   def qSnapshotDiff(spark: SparkSession, dir: String): DataFrame = {
-    val tmp = twoSnapshotStore(spark, dir)
+    val tmp = FixtureStores.twoSnapshotStore(spark, dir)
     try {
       val v1 = VersionedStore.asOf(spark, tmp, 1)
         .select(col("o_orderkey"), col("cents").as("c1"))
@@ -1290,7 +1224,7 @@ object SourceSinkOps {
     * `q_snapshot_diff`'s CDC read.
     */
   def qIncrViewCdc(spark: SparkSession, dir: String): DataFrame = {
-    val tmp = twoSnapshotStore(spark, dir)
+    val tmp = FixtureStores.twoSnapshotStore(spark, dir)
     try {
       val v1 = VersionedStore.asOf(spark, tmp, 1)
       val v2 = VersionedStore.asOf(spark, tmp, 2)

@@ -685,7 +685,8 @@ object TextOps {
     // duplicates, so `dropped` is corpus-scale and a forced broadcast
     // OOMs at 100 TB. Left as a shuffled anti-join; AQE converts it to a
     // broadcast at fixture scale where it genuinely fits (the same fix
-    // as dedupApply — see ScaleSmoke's pipeline_e2e_highdup probe).
+    // as dedupApply — see the pipeline_e2e_highdup probe in
+    // ROUND5_NOTES: 13.4 s on a 50.8 %-duplicate corpus).
     val survivors = scored.join(dropped, Seq("doc_id"), "left_anti")
     val sampled = survivors
       .withColumn("rscore", pmod(TextFns.hash60(col("doc_id").cast("string")), lit(1000000L)))
@@ -1019,49 +1020,6 @@ object TextOps {
       stats += ((r, nMis, wAgg.getLong(0), wAgg.getLong(1)))
     }
     (w, dCount, bigW, stats.result())
-  }
-
-  /** The perceptron round's two relations as PLAN-DUMPABLE DataFrames
-    * (a documented mirror of [[perceptronFit]]'s loop body under the
-    * zero round-1 state — the fit itself is behavior-pinned by the
-    * TextExtSpec driver-side recompute), for PLANS.md's multi-action
-    * section. */
-  private[graft] def perceptronPhasePlans(docs: DataFrame,
-                                          dim: Int = 1024): Seq[(String, DataFrame)] = {
-    val spark = docs.sparkSession
-    val counts = bowCounts(docs, dim).graftCached
-    val dCount = docs.count()
-    val labels = counts
-      .join(broadcast(teacherWeights(spark, dim)), Seq("bucket"))
-      .groupBy(col("doc_id")).agg(sum(col("c") * col("twgt")).as("tm"))
-      .select(col("doc_id"), when(col("tm") >= 0, 1L).otherwise(-1L).as("y"))
-      .localCheckpoint()
-    val sb = spark.range(dim).select(col("id").as("bucket"))
-      .join(counts.groupBy(col("bucket")).agg(sum(col("c")).as("s")),
-        Seq("bucket"), "left")
-      .select(col("bucket"), coalesce(col("s"), lit(0L)).as("s"))
-      .localCheckpoint()
-    val w = spark.range(dim)
-      .select(col("id").as("bucket"), lit(0L).as("wgt")).localCheckpoint()
-    val mis = counts.join(broadcast(w), Seq("bucket"))
-      .groupBy(col("doc_id")).agg(sum(col("c") * col("wgt")).as("dot"))
-      .join(labels, Seq("doc_id"))
-      .filter(col("y") * (col("dot") * lit(dCount) - lit(0L)) <= 0)
-      .select(col("doc_id"), col("y"))
-    val update = w.join(
-        counts.join(mis.localCheckpoint(), Seq("doc_id"))
-          .groupBy(col("bucket")).agg(sum(col("y") * col("c")).as("gs")),
-        Seq("bucket"), "left")
-      .join(sb, Seq("bucket"))
-      .withColumn("gg",
-        coalesce(col("gs"), lit(0L)) * lit(dCount) - col("s") * lit(0L))
-      .withColumn("upd", when(col("gg") < 0, -expr("(-gg) div 1L"))
-        .otherwise(expr("gg div 1L")))
-      .select(col("bucket"), (col("wgt") + col("upd")).as("wgt"))
-    Seq(
-      "teacher labels (one pass over the cached design matrix)" -> labels,
-      "per-round margins + misclassified set (centered margin = D*(c.w) - broadcast scalar)" -> mis,
-      "per-round weight update (sparse gradient + bucket-sum scalar correction, 1/r trunc-div)" -> update)
   }
 
   /** Quality-classifier TRAINING trajectory: one row per perceptron

@@ -37,10 +37,9 @@ object VectorStream {
       Drain.files(s, "q_stream_ann_index", embs.filter(col("vec_id") % 10 === 0), 2,
           () => KeyedStore.drop(s, name)) {
         // The OFFLINE base build is the frozen victim, not the measured
-        // streaming capability — resolve it from the shared content-
-        // addressed cache and clone (the same base index as the batch
-        // incremental/rebalance rows; AnnIndexOps.resolveCloned's note).
-        KeyedStore.cloneStore(s, AnnIndexOps.b90Cache(s, dir, embs), name)
+        // streaming capability: a clone of the same base index the batch
+        // incremental/rebalance rows use.
+        graft.FixtureStores.annBase90(s, dir, embs, pq = false, name)
         (batch, _) => if (!batch.isEmpty) AnnIndexOps.appendBatch(s, name, batch)
       } {
         // Materialize before the temp store is dropped (fixture-scale;
@@ -70,9 +69,9 @@ object VectorStream {
       // q_stream_ann_index still drains two batches in the bench suite.
       Drain.files(s, "q_stream_pq_index", embs.filter(col("vec_id") % 10 === 0), 1,
           () => KeyedStore.drop(s, name)) {
-        // Offline base build resolved from the shared PQ cache + clone
-        // (see qStreamAnnIndex's note).
-        KeyedStore.cloneStore(s, AnnIndexOps.pqB90Cache(s, dir, embs), name)
+        // Offline base build: a clone of the shared PQ base index (see
+        // qStreamAnnIndex's note).
+        graft.FixtureStores.annBase90(s, dir, embs, pq = true, name)
         (batch, _) => if (!batch.isEmpty) AnnIndexOps.appendPqBatch(s, name, batch)
       } {
         AnnIndexOps.servePq(s, name, embs, col("vec_id") < 5).localCheckpoint()

@@ -6,8 +6,9 @@ import scala.jdk.CollectionConverters._
 
 /** Source guard: operators take a setting of their own on a scoped
   * session ([[GraftSession.scoped]]), never by writing the caller's
-  * session conf, and every stream drain goes through
-  * [[streaming.Drain]]. Pure file scan, no Spark.
+  * session conf; every stream drain goes through [[streaming.Drain]];
+  * the fixture caches' stamp protocol lives in [[FixtureStores]]. Pure
+  * file scan, no Spark.
   */
 class ConfScopeGuardSpec extends AnyFunSuite {
 
@@ -25,12 +26,48 @@ class ConfScopeGuardSpec extends AnyFunSuite {
       }
     }
 
-  test("no operator or stream writes session conf") {
-    val files = scalaFiles("src/main/scala/graft/ops") ++
-      scalaFiles("src/main/scala/graft/streaming")
-    assert(files.size > 10, files)
-    val found = hits(files, """conf\.(set|unset)\(""".r)
-    assert(found.isEmpty, found.mkString("\n"))
+  /** For each line of `f`, the object member (a `def` at two-space
+    * indent) it sits in. */
+  private def memberDefs(f: Path): Seq[String] = {
+    val member = """^  (?:(?:private|protected)(?:\[\w+\])?\s+|override\s+|final\s+)*def\s+(\w+)""".r
+    Files.readAllLines(f).asScala.toSeq.scanLeft("") { (cur, l) =>
+      member.findFirstMatchIn(l).map(_.group(1)).getOrElse(cur)
+    }.tail
+  }
+
+  test("session conf is written only by the execution profile and the scoped clone") {
+    val files = scalaFiles("src/main")
+    assert(files.size > 30, files)
+    val allowed = Set("Graft.scala" -> "tuneExecution",
+      "GraftSession.scala" -> "scoped")
+    val re = """conf\.(set|unset)\(""".r
+    val outside = files.flatMap { f =>
+      val defs = memberDefs(f)
+      Files.readAllLines(f).asScala.zipWithIndex.collect {
+        case (l, i) if re.findFirstIn(l).nonEmpty &&
+            !allowed(f.getFileName.toString -> defs(i)) =>
+          s"$f:${i + 1} (in ${defs(i)}): ${l.trim}"
+      }
+    }
+    assert(outside.isEmpty, outside.mkString("\n"))
+    assert(hits(files, re).nonEmpty)
+  }
+
+  test("the fixture stamp protocol and fingerprint live only in FixtureStores") {
+    val files = scalaFiles("src/main")
+    val gone = hits(files, "ensureCached|ensureCreated|cacheFresh|stampCacheFp".r)
+    assert(gone.isEmpty, gone.mkString("\n"))
+    val fixtures = Paths.get("src/main/scala/graft/FixtureStores.scala")
+    val copier = Paths.get("src/main/scala/graft/ops/KeyedStore.scala")
+    val outside = hits(files.filterNot(_ == fixtures),
+      "_graft_cache_fp|contentFingerprint".r)
+    // At most the one shared copier's skip list, inside copyTree.
+    val defs = memberDefs(copier)
+    assert(outside.size <= 1 && outside.forall { h =>
+      h.startsWith(copier.toString + ":") &&
+        defs(h.split(":")(1).toInt - 1) == "copyTree"
+    }, outside.mkString("\n"))
+    assert(hits(Seq(fixtures), "_graft_cache_fp".r).nonEmpty)
   }
 
   test("awaitTermination appears in src/main only inside the drain helper") {

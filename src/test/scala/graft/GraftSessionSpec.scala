@@ -63,6 +63,22 @@ class GraftSessionSpec extends AnyFunSuite {
     assert(c.conf.get("spark.sql.autoBroadcastJoinThreshold") == "1m")
   }
 
+  test("reading events keeps the caller's nanosAsLong setting") {
+    val key = "spark.sql.legacy.parquet.nanosAsLong"
+    // The sf0.001 fixture ships the micros form, so the read succeeds
+    // with the flag off.
+    GraftSession.scoped(spark, key -> "false") { s =>
+      assert(Tables.events(s, Sf).count() > 0)
+      Tables.eventsWithRawTs(s, Sf).count()
+      assert(s.conf.get(key) == "false")
+    }
+    // A session without the flag gets it from the execution profile.
+    val fresh = spark.newSession()
+    fresh.conf.unset(key)
+    Tables.events(fresh, Sf)
+    assert(fresh.conf.get(key) == "true")
+  }
+
   test("scoped runs on a clone: the caller's conf is never written") {
     val key = "spark.sql.shuffle.partitions"
     val c = org.apache.spark.sql.GraftSessionBridge.cloneSession(spark)

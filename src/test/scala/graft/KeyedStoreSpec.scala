@@ -1184,50 +1184,6 @@ class KeyedStoreSpec extends AnyFunSuite {
     }
   }
 
-  test("ensureCached builds once per fingerprint, rebuilds on content " +
-       "change, and clones carry no stamp") {
-    val name = "graft_keyed_spec_cache"
-    val cname = "graft_keyed_spec_cacheclone"
-    try {
-      var builds = 0
-      def build(n: Long): Unit = {
-        builds += 1
-        KeyedStore.create(spark, name, mkRows(n), "k", 8)
-      }
-      KeyedStore.drop(spark, name) // stale prior-run artifact
-      KeyedStore.ensureCached(spark, name, 42L)(build(20))
-      KeyedStore.ensureCached(spark, name, 42L)(build(20))
-      assert(builds == 1, "fresh cache must skip the build")
-      assert(KeyedStore.cacheFresh(spark, name, 42L))
-      assert(!KeyedStore.cacheFresh(spark, name, 43L))
-      KeyedStore.ensureCached(spark, name, 43L)(build(30))
-      assert(builds == 2, "stale stamp must rebuild")
-      assert(spark.table(name).count() == 30)
-      // A clone is a WORKING copy: identical rows, no freshness stamp
-      // (it will be mutated next — a carried stamp would read fresh on
-      // changed content).
-      KeyedStore.cloneStore(spark, name, cname)
-      assert(spark.table(cname).drop("kr").collect().map(_.toString).sorted
-        .toSeq == spark.table(name).drop("kr").collect().map(_.toString)
-        .sorted.toSeq)
-      assert(!KeyedStore.cacheFresh(spark, cname, 43L))
-    } finally {
-      KeyedStore.drop(spark, name)
-      KeyedStore.drop(spark, cname)
-    }
-  }
-
-  test("contentFingerprint is row-order independent and content sensitive") {
-    import spark.implicits._
-    val a = Seq((1L, "x"), (2L, "y")).toDF("k", "v")
-    val b = Seq((2L, "y"), (1L, "x")).toDF("k", "v")
-    val c = Seq((1L, "x"), (2L, "z")).toDF("k", "v")
-    assert(KeyedStore.contentFingerprint(a) ==
-      KeyedStore.contentFingerprint(b))
-    assert(KeyedStore.contentFingerprint(a) !=
-      KeyedStore.contentFingerprint(c))
-  }
-
   test("create is idempotent across JVMs (stale location, fresh metastore)") {
     val name = "graft_keyed_spec_idem"
     // Simulate the next JVM: fresh metastore (no catalog entry for the
