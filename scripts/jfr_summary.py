@@ -8,7 +8,8 @@ Reads the output of
 from a file or stdin ("-") and prints, over an optional time window, the
 share of `jdk.ExecutionSample` events per thread group (driver, executor,
 other) and per component (checkpoint / SizeEstimator, task
-deserialization, parquet read and write, Janino, optimizer, ...), plus the
+deserialization, schema inference, closure cleaning, parquet read and
+write, Janino, optimizer, ...), plus the
 group x component table.
 
 A sample goes to the component that matches the frame nearest the leaf
@@ -46,6 +47,9 @@ COMPONENTS = [
     ("hadoop conf deserialization", ["org.apache.spark.util.SerializableConfiguration.readObject"]),
     ("task deserialization", ["org.apache.spark.serializer.JavaSerializerInstance.deserialize",
                               "org.apache.spark.scheduler.TaskDescription.decode"]),
+    ("schema inference", ["org.apache.spark.sql.execution.datasources.DataSource.getOrInferFileFormatSchema",
+                          "mergeSchemasInParallel"]),
+    ("closure cleaning", ["org.apache.spark.util.ClosureCleaner"]),
     ("janino compile", ["org.codehaus.janino.", "org.codehaus.commons.compiler.",
                         "expressions.codegen.CodeGenerator$.doCompile"]),
     ("optimizer", ["org.apache.spark.sql.catalyst.optimizer.",
@@ -126,6 +130,22 @@ def selftest():
         ("janino under the optimizer", "janino compile", component(stack(
             "org.codehaus.janino.UnitCompiler.compile",
             "org.apache.spark.sql.catalyst.optimizer.ConstantFolding$.apply"))),
+        ("footer read in the inference job", "schema inference", component(stack(
+            "org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat$.mergeSchemasInParallel",
+            "org.apache.spark.sql.execution.datasources.SchemaMergeUtils$.$anonfun$mergeSchemasInParallel$2",
+            "org.apache.spark.rdd.RDD.$anonfun$mapPartitions$2",
+            "org.apache.spark.scheduler.ResultTask.runTask"))),
+        ("inference on the driver", "schema inference", component(stack(
+            "org.apache.spark.util.ThreadUtils$.awaitResult",
+            "org.apache.spark.sql.execution.datasources.DataSource.getOrInferFileFormatSchema",
+            "org.apache.spark.sql.execution.datasources.DataSource.resolveRelation",
+            "org.apache.spark.sql.catalyst.analysis.ResolveDataSource.apply"))),
+        ("closure cleaning under planning", "closure cleaning", component(stack(
+            "org.apache.xbean.asm9.ClassReader.accept",
+            "org.apache.spark.util.ClosureCleaner$.clean",
+            "org.apache.spark.SparkContext.clean",
+            "org.apache.spark.rdd.RDD.mapPartitionsWithIndex",
+            "org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec.reOptimize"))),
         ("task runner only", "scheduler", component(stack(
             "org.apache.spark.scheduler.ResultTask.runTask", "java.lang.Thread.run"))),
         ("no known frame", "other", component(stack("java.lang.Thread.run"))),

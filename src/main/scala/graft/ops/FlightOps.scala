@@ -1,8 +1,11 @@
 package graft.ops
 
+import java.time.LocalDateTime
+
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DateType, IntegerType, TimestampNTZType}
+import org.apache.spark.sql.types.{IntegerType, TimestampNTZType}
+import graft.functions.DateFunctions.wallClockDate
 import graft.functions.JsonFunctions.flatJsonIntegral
 
 /** Reproduction layer: the reference's full operator surface re-expressed as
@@ -55,13 +58,20 @@ object FlightOps {
     *
     * `year`/`month` are those of the session-zone `ts`. Where
     * [[wallClockDates]] holds they are read from `ts_raw` as a wall-clock
-    * DATE instead, which is the same value without the per-row NTZ →
+    * DATE instead ([[graft.functions.DateFunctions.wallClockDate]], one
+    * integer division), which is the same value without the per-row NTZ →
     * session-zone cast and its zone-rule lookups; every other form keeps
     * the cast path.
+    *
+    * Every query over these rows keeps only [[TargetYear]] (its
+    * [[tsRawInYear]] range), so the read takes that year's wall-clock
+    * range: where `ts` is TIMESTAMP_NTZ, the files whose footer `ts`
+    * statistics miss it are not listed at all ([[graft.Tables.footerPlan]]).
+    * The other forms prune row groups through the pushed range instead.
     */
   private[graft] def flights(spark: SparkSession, dir: String): DataFrame = {
-    val events = graft.Tables.eventsWithRawTs(spark, dir)
-    val date = if (wallClockDates(spark, events)) col("ts_raw").cast(DateType) else col("ts")
+    val events = graft.Tables.eventsWithRawTs(spark, dir, Some(wallClockYear(spark, TargetYear)))
+    val date = if (wallClockDates(spark, events)) wallClockDate(col("ts_raw")) else col("ts")
     events.select(
       col("event_type").as("carrier"),
       year(date).as("year"),
@@ -73,6 +83,14 @@ object FlightOps {
 
   private def sessionZone(spark: SparkSession): java.time.ZoneId =
     java.time.ZoneId.of(spark.conf.get("spark.sql.session.timeZone"))
+
+  private def startOf(spark: SparkSession, year: Int): java.time.ZonedDateTime =
+    java.time.LocalDate.of(year, 1, 1).atStartOfDay(sessionZone(spark))
+
+  /** Year `y` of the session zone as a wall-clock `[lo, hi)` range: the
+    * bounds [[tsRawInYear]] gives a TIMESTAMP_NTZ `ts_raw`. */
+  private def wallClockYear(spark: SparkSession, y: Int): (LocalDateTime, LocalDateTime) =
+    (startOf(spark, y).toLocalDateTime, startOf(spark, y + 1).toLocalDateTime)
 
   /** True when `ts_raw` is TIMESTAMP_NTZ and the session zone is a fixed
     * offset (UTC in every graft session). The NTZ → timestamp cast then
@@ -94,27 +112,26 @@ object FlightOps {
     * conversion handles INT64 (the nanos-as-long form) and instant
     * TIMESTAMP(MICROS), where row-group min/max statistics skip other
     * years; it has no case for TIMESTAMP(MICROS, isAdjustedToUTC=false),
-    * the form of the sf fixtures, so there the scan still reads every
-    * row group and the range only filters rows after the read. Bounds
-    * derive from the SESSION timezone
-    * (the same zone `year(ts)` evaluates in) and are emitted as literals
-    * of the matching physical type (epoch-nano long / naive local
+    * the form of the sf fixtures, so there the scan reads every row
+    * group of the files it lists and the range filters rows after the
+    * read; [[flights]] lists only the files whose footer statistics meet
+    * the same range ([[wallClockYear]]). Bounds derive from the SESSION
+    * timezone (the same zone `year(ts)` evaluates in) and are emitted as
+    * literals of the matching physical type (epoch-nano long / naive local
     * datetime / instant) so the predicate stays a PushedFilter.
     */
   private def tsRawInYear(spark: SparkSession, df: DataFrame, y: Int): Column = {
-    val zone = sessionZone(spark)
-    def startOf(year: Int) = java.time.LocalDate.of(year, 1, 1).atStartOfDay(zone)
     import org.apache.spark.sql.types._
     df.schema("ts_raw").dataType match {
       case LongType =>
-        col("ts_raw") >= startOf(y).toEpochSecond * 1000000000L &&
-          col("ts_raw") < startOf(y + 1).toEpochSecond * 1000000000L
+        col("ts_raw") >= startOf(spark, y).toEpochSecond * 1000000000L &&
+          col("ts_raw") < startOf(spark, y + 1).toEpochSecond * 1000000000L
       case TimestampNTZType =>
-        col("ts_raw") >= lit(startOf(y).toLocalDateTime) &&
-          col("ts_raw") < lit(startOf(y + 1).toLocalDateTime)
+        val (lo, hi) = wallClockYear(spark, y)
+        col("ts_raw") >= lit(lo) && col("ts_raw") < lit(hi)
       case _ =>
-        col("ts_raw") >= lit(java.sql.Timestamp.from(startOf(y).toInstant)) &&
-          col("ts_raw") < lit(java.sql.Timestamp.from(startOf(y + 1).toInstant))
+        col("ts_raw") >= lit(java.sql.Timestamp.from(startOf(spark, y).toInstant)) &&
+          col("ts_raw") < lit(java.sql.Timestamp.from(startOf(spark, y + 1).toInstant))
     }
   }
 

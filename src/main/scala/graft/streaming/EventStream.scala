@@ -19,7 +19,7 @@ object EventStream {
     * Tables.events).
     */
   def eventsStream(spark: SparkSession, dir: String): DataFrame = {
-    val batchSchema = spark.read.parquet(s"$dir/events.parquet").schema
+    val batchSchema = graft.Tables.schemaOf(spark, dir, "events")
     // File-source basePath must be a directory; the fixture table is a
     // single file, so stream the directory with a name filter.
     val raw = spark.readStream.schema(batchSchema)
@@ -152,7 +152,7 @@ object EventStream {
     * stateless, and only the digest key lives in state.
     */
   def docQualityCounts(spark: SparkSession, dir: String): DataFrame = {
-    val schema = spark.read.parquet(s"$dir/documents.parquet").schema
+    val schema = graft.Tables.schemaOf(spark, dir, "documents")
     val docs = spark.readStream.schema(schema)
       .option("pathGlobFilter", "documents.parquet").parquet(dir)
     docQualityCountsOf(docs)
@@ -204,7 +204,7 @@ object EventStream {
     */
   def qStreamIngest(spark: SparkSession, dir: String): DataFrame =
     Drain.scoped(spark) { s =>
-      val schema = s.read.parquet(s"$dir/documents.parquet").schema
+      val schema = graft.Tables.schemaOf(s, dir, "documents")
       val docs = s.readStream.schema(schema)
         .option("pathGlobFilter", "documents.parquet").parquet(dir)
       runToMemory(s, ingestStatsOf(docs), "graft_stream_ingest")

@@ -11,7 +11,7 @@ import java.nio.file.{Files, Paths}
   * `suspect: []` was vacuous and a 2.51x no-code-change mover
   * (q_shard_pack, r10) sailed through unprobed.
   */
-class BenchGuardSpec extends AnyFunSuite {
+class BenchGuardSpec extends AnyFunSuite with TempDirs {
 
   private val tailStyle =
     """{
@@ -47,7 +47,7 @@ class BenchGuardSpec extends AnyFunSuite {
   test("priorTimes MERGES the BENCH tail with bench_out.json " +
        "(full record wins per key; a partial record cannot disarm the " +
        "guard for the other queries)") {
-    val dir = Files.createTempDirectory("benchguard").toFile
+    val dir = tempDir("benchguard").toFile
     // A focused SPARK_GRAFT_ONLY run left a bench_out.json with ONE
     // query — its fresher time must win for that key, while the tail
     // still arms the guard for everything else.
@@ -62,7 +62,7 @@ class BenchGuardSpec extends AnyFunSuite {
     Files.delete(Paths.get(dir.getPath, "bench_out.json"))
     assert(Bench.priorTimes(dir)("q_shard_pack") == 0.28)
     // neither → empty map (guard disabled, not mis-armed)
-    assert(Bench.priorTimes(Files.createTempDirectory("bg2").toFile).isEmpty)
+    assert(Bench.priorTimes(tempDir("bg2").toFile).isEmpty)
   }
 
   test("a 3x mover is re-run; a survivor lands in suspect, a recovered " +

@@ -12,7 +12,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * (byte-identical siblings), and create is idempotent across "JVMs"
   * (stale warehouse location with no catalog entry).
   */
-class KeyedStoreSpec extends AnyFunSuite {
+class KeyedStoreSpec extends AnyFunSuite with TempDirs {
   import TestSpark._
   import ops.KeyedStore
 
@@ -810,7 +810,7 @@ class KeyedStoreSpec extends AnyFunSuite {
     // claimant occupies the path first, PARK the aside rather than
     // delete it (the pre-round-8 delete destroyed the successor's mutex
     // while it believed it held it).
-    val dir = java.nio.file.Files.createTempDirectory("graft_takeover")
+    val dir = tempDir("graft_takeover")
     val p = dir.resolve("t.graft-lock")
     def content(q: java.nio.file.Path) =
       new String(java.nio.file.Files.readAllBytes(q), "UTF-8")
@@ -993,8 +993,7 @@ class KeyedStoreSpec extends AnyFunSuite {
     // constant-folded and Spark's DPP requires a filter to key on), not
     // literals: the multiGet shape from raw SQL. Low key range so the
     // dynamic prune has regions to cut.
-    val probeDir =
-      java.nio.file.Files.createTempDirectory("graft_sqljoin_probe").toString
+    val probeDir = tempDir("graft_sqljoin_probe").toString
     (0L until 200L).toDF("pk").write.mode("overwrite").parquet(probeDir)
     spark.read.parquet(probeDir).createOrReplaceTempView("graft_sqljoin_probe")
     val joined = spark.sql(
@@ -1048,8 +1047,7 @@ class KeyedStoreSpec extends AnyFunSuite {
     // Store on the right of the join (probe first in the FROM list).
     val name = "graft_keyed_spec_sqljoin_right"
     KeyedStore.create(spark, name, mkRows(200), "k", targetRowsPerRegion = 16)
-    val probeDir =
-      java.nio.file.Files.createTempDirectory("graft_sqljoin_r").toString
+    val probeDir = tempDir("graft_sqljoin_r").toString
     (0L until 200L).toDF("pk").write.mode("overwrite").parquet(probeDir)
     spark.read.parquet(probeDir).createOrReplaceTempView("graft_right_probe")
     val joined = spark.sql(
@@ -1111,8 +1109,7 @@ class KeyedStoreSpec extends AnyFunSuite {
     val cov = rm.coverageIdx(boundaryKey)
     assert(rm.holdingClosures(cov).size > 1,
       s"closure of $cov must span the straddle: ${rm.holdingClosures(cov)}")
-    val probeDir =
-      java.nio.file.Files.createTempDirectory("graft_straddle_probe").toString
+    val probeDir = tempDir("graft_straddle_probe").toString
     Seq(boundaryKey, boundaryKey + 1)
       .toDF("pk").write.mode("overwrite").parquet(probeDir)
     spark.read.parquet(probeDir)

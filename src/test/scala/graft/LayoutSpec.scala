@@ -6,7 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Storage-layout behaviors: partition pruning on Hive-style layouts and
   * small-files compaction — the table-maintenance side of 100 TB scans.
   */
-class LayoutSpec extends AnyFunSuite {
+class LayoutSpec extends AnyFunSuite with TempDirs {
   import TestSpark._
 
   test("partitioned write + filtered read prunes to the selected partitions") {
@@ -68,7 +68,7 @@ class LayoutSpec extends AnyFunSuite {
   }
 
   test("compaction rewrites many small files into the target file count") {
-    val base = java.nio.file.Files.createTempDirectory("graft_compact").toString
+    val base = tempDir("graft_compact").toString
     val fragmented = s"$base/in"
     val compacted = s"$base/out"
     graft.Tables.events(spark, Sf)

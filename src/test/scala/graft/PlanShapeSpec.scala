@@ -41,7 +41,8 @@ class PlanShapeSpec extends AnyFunSuite {
     // as PushedFilters. Row groups of other years are skipped only where
     // Spark converts the filter for the physical type (INT64 nanos,
     // instant micros) — not for the TIMESTAMP_NTZ micros form the sf
-    // fixtures ship, which still reads every row group.
+    // fixtures ship, which reads every row group of the files it lists
+    // (FooterPlanSpec pins the skip of whole files).
     Seq(ops.FlightOps.qFlightReport(spark, Sf),
         ops.FlightOps.qFilterYear(spark, Sf)).foreach { df =>
       val p = physical(df)
@@ -480,13 +481,14 @@ class PlanShapeSpec extends AnyFunSuite {
     }
   }
 
-  test("flight job budget: report <= 3 jobs, Secondary <= 5, schema inference included") {
-    // Report: schema inference, the scan + partial-aggregate map stage,
-    // and one task that runs the final aggregate and the sort. Secondary
-    // adds the 10-way carrier exchange. A sampled range exchange (two
-    // more jobs) fails here.
-    assert(jobsOf(ops.FlightOps.qFlightReport(spark, Sf).collect()) <= 3)
-    assert(jobsOf(ops.FlightOps.qSecondary(spark, Sf).collect()) <= 5)
+  test("flight job budget: report <= 2 jobs, Secondary <= 3") {
+    // Report: the scan + partial-aggregate map stage, and one task that
+    // runs the final aggregate and the sort. Secondary adds the 10-way
+    // carrier exchange. The read plans from the footers, so there is no
+    // schema-inference job; one, or a sampled range exchange (two more
+    // jobs), fails here.
+    assert(jobsOf(ops.FlightOps.qFlightReport(spark, Sf).collect()) <= 2)
+    assert(jobsOf(ops.FlightOps.qSecondary(spark, Sf).collect()) <= 3)
   }
 
   test("hot paths compile to whole-stage codegen") {

@@ -7,7 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * random float averages and a parse-back round-trip of the report
   * formatter.
   */
-class PropertySpec extends AnyFunSuite {
+class PropertySpec extends AnyFunSuite with TempDirs {
   private def check(p: Prop): Unit = {
     val res = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(500), p)
     assert(res.passed, res.status.toString)
@@ -486,8 +486,7 @@ class PropertySpec extends AnyFunSuite {
     } yield (init, commits)
     val p = Prop.forAll(scenario) { case (init, commits) =>
       init.isEmpty || {
-        val dir = java.nio.file.Files
-          .createTempDirectory("graft_vstore_prop").toString
+        val dir = tempDir("graft_vstore_prop").toString
         ops.VersionedStore.init(spark, dir, init.toDF("k", "v"), "k")
         // In-memory model: each version's full key→value map.
         var model = init.toMap

@@ -8,7 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Structured Streaming twins must converge to the batch results once the
   * bounded source is drained (Trigger.AvailableNow).
   */
-class StreamingSpec extends AnyFunSuite {
+class StreamingSpec extends AnyFunSuite with TempDirs {
   import TestSpark._
 
   test("streaming tumbling windows == batch qEventsTumbling") {
@@ -99,7 +99,7 @@ class StreamingSpec extends AnyFunSuite {
 
   test("checkpoint resume: a restarted query processes only new files, state persists") {
     import org.apache.spark.sql.streaming.Trigger
-    val base = java.nio.file.Files.createTempDirectory("graft_ckpt")
+    val base = tempDir("graft_ckpt")
     val srcDir = base.resolve("src"); java.nio.file.Files.createDirectory(srcDir)
     val ckpt = base.resolve("ckpt").toString
     val fixture = java.nio.file.Paths.get(s"$Sf/events.parquet")

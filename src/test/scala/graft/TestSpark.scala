@@ -1,5 +1,7 @@
 package graft
 
+import java.nio.file.{Files, Path}
+
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
@@ -8,9 +10,12 @@ import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStag
 object TestSpark {
   val Sf = "/root/testdata/sf0.001"
 
-  lazy val spark: SparkSession = GraftSession.local(4,
-    "spark.sql.warehouse.dir" ->
-      java.nio.file.Files.createTempDirectory("graft_warehouse").toString)
+  lazy val spark: SparkSession = {
+    val warehouse = Files.createTempDirectory("graft_warehouse")
+    // Deleted at JVM exit, after the SparkContext stops.
+    org.apache.spark.sql.GraftTestBridge.deleteAtExit(warehouse)
+    GraftSession.local(4, "spark.sql.warehouse.dir" -> warehouse.toString)
+  }
 
   /** Jobs `body` runs, counted under a test-owned job group. */
   def jobsOf(body: => Unit): Int = {
@@ -27,4 +32,16 @@ object TestSpark {
     case q: QueryStageExec => q +: planNodes(q.plan)
     case o => o +: o.children.flatMap(planNodes)
   }
+}
+
+/** A suite's own directory under `java.io.tmpdir` for the files its tests
+  * write, deleted after the suite's last test. */
+trait TempDirs extends org.scalatest.BeforeAndAfterAll { this: org.scalatest.Suite =>
+  private lazy val root: Path = Files.createTempDirectory("graft_" + getClass.getSimpleName)
+
+  /** A fresh directory inside the suite's own. */
+  protected def tempDir(prefix: String): Path = Files.createTempDirectory(root, prefix)
+
+  override def afterAll(): Unit =
+    try super.afterAll() finally streaming.EventStream.deleteRecursively(root)
 }

@@ -12,12 +12,12 @@ import scala.jdk.CollectionConverters._
   * grace-window vacuum (a pinned reader survives expiry), and the
   * fully-emptied-snapshot schema sentinel.
   */
-class VersionedStoreSpec extends AnyFunSuite {
+class VersionedStoreSpec extends AnyFunSuite with TempDirs {
   import TestSpark._
   import spark.implicits._
 
   private def freshDir() =
-    Files.createTempDirectory("graft_vstore_spec").toString
+    tempDir("graft_vstore_spec").toString
 
   private def leafDirs(dir: String): Set[String] = {
     val root = Paths.get(dir, "data")
